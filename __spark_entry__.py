@@ -4771,7 +4771,7 @@ _HISTORY_CACHE: "list[tuple[int, dict]] | None" = None
 # state rather than on a reviewed edit. Bump this constant together with
 # tests/test_window_rotation.py::PINNED_TAIL at round open (a git-tracked
 # assertion in that file enforces the pairing).
-ROTATION_PIN_ROUND = 13
+ROTATION_PIN_ROUND = 14
 ROTATION_POOL = (
     "q48_bed_roundtrip",
     "q50_hmm_roundtrip",

@@ -284,70 +284,91 @@ def _row_of(rec: dict, names: list[str]) -> tuple:
     return tuple(rec.get(n) for n in names)
 
 
-def _make_vcf_udtf():
-    """``read_vcf_file_records(path)``: header-driven schema via the UDTF
-    analyze() phase — the SQL mirror of read_vcf's bind-time INFO peek
-    (the reference's one file-dependent schema, SURVEY §1.1)."""
+def _record_format(kind: str, path: str):
+    """(output schema, row iterator) of the ``vcf``/``bcf``/``bam`` record
+    table functions, bound to one file's header. The iterator takes a split
+    and a predicate ``keep(chrom, first, last)`` over each record's 1-based
+    inclusive span and yields the rows of the records it keeps."""
+    if kind == "bam":
+        from exon_duckdb_spark.sources.bam import _parse_bam_split
+        from exon_duckdb_spark.sources.schemas import SAM_SCHEMA
+
+        def bam_rows(split, keep):
+            for rec in _parse_bam_split(split):
+                if keep(rec["reference"], rec["start"], rec["end"]):
+                    yield _row_of(rec, SAM_SCHEMA.names)
+
+        return SAM_SCHEMA, bam_rows
+
+    if kind == "vcf":
+        from exon_duckdb_spark.sources.bgzf import is_bgzf, parse_bgzf_lines_split
+        from exon_duckdb_spark.sources.pyparse import parse_vcf_record_fields
+        from exon_duckdb_spark.sources.reader_core import read_split_lines
+        from exon_duckdb_spark.sources.vcf import _peek_info_fields, vcf_schema
+
+        info_fields = _peek_info_fields(path)
+        schema = vcf_schema(info_fields)
+
+        def vcf_rows(split, keep):
+            # an uncompressed-planned split of a BGZF file is a byte range of
+            # blocks (index-pruned): only the block-aware splitter reads it
+            lines = (
+                (r["value"] for r in parse_bgzf_lines_split(split))
+                if split.compression is None and is_bgzf(split.path)
+                else (
+                    ln.rstrip(b"\r\n").decode("utf-8", "replace")
+                    for ln in read_split_lines(split)
+                )
+            )
+            for line in lines:
+                if not line or line.startswith("#"):
+                    continue
+                rec = parse_vcf_record_fields(line.split("\t"), info_fields)
+                pos = rec["pos"]
+                last = None if pos is None else pos + len(rec["ref"] or "x") - 1
+                if keep(rec["chrom"], pos, last):
+                    rec["info"] = tuple(rec["info"].get(f.id) for f in info_fields)
+                    yield _row_of(rec, schema.names)
+
+        return schema, vcf_rows
+
+    from exon_duckdb_spark.sources.bcf import bcf_bind, parse_bcf_records
+
+    contigs, info_meta, info_fields, schema = bcf_bind(path)
+
+    def bcf_rows(split, keep):
+        for rec in parse_bcf_records(split, info_meta, contigs, info_fields):
+            if keep(rec["chrom"], rec["pos"], rec["pos"] + len(rec["ref"] or "x") - 1):
+                rec["info"] = tuple(rec["info"].get(f.name) for f in info_fields)
+                yield _row_of(rec, schema.names)
+
+    return schema, bcf_rows
+
+
+def _whole_file_splits(path: str):
+    from exon_duckdb_spark.sources.splits import plan_splits
+
+    return plan_splits(path, "auto_detect", splittable=False)
+
+
+def _make_records_udtf(kind: str):
+    """``read_{vcf,bcf}_file_records(path)``: header-driven schema via the
+    UDTF analyze() phase — the SQL mirror of the readers' bind-time header
+    peek (the reference's one file-dependent schema, SURVEY §1.1)."""
     from pyspark.sql.functions import udtf
     from pyspark.sql.udtf import AnalyzeResult
 
-    class _ReadVcf:
+    class _Read:
         @staticmethod
         def analyze(path) -> AnalyzeResult:
-            from exon_duckdb_spark.sources.vcf import _peek_info_fields, vcf_schema
-
-            return AnalyzeResult(schema=vcf_schema(_peek_info_fields(path.value)))
+            return AnalyzeResult(schema=_record_format(kind, path.value)[0])
 
         def eval(self, path: str):
-            from exon_duckdb_spark.sources.pyparse import parse_vcf_record_fields
-            from exon_duckdb_spark.sources.splits import plan_splits
-            from exon_duckdb_spark.sources.reader_core import read_split_lines
-            from exon_duckdb_spark.sources.vcf import _peek_info_fields, vcf_schema
+            rows = _record_format(kind, path)[1]
+            for split in _whole_file_splits(path):
+                yield from rows(split, lambda *_: True)
 
-            info_fields = _peek_info_fields(path)
-            names = [f.name for f in vcf_schema(info_fields).fields]
-            for split in plan_splits(path, "auto_detect", splittable=False):
-                for line in read_split_lines(split):
-                    line = line.rstrip(b"\r\n")
-                    if not line or line.startswith(b"#"):
-                        continue
-                    rec = parse_vcf_record_fields(
-                        line.decode("utf-8", "replace").split("\t"), info_fields
-                    )
-                    rec["info"] = tuple(
-                        rec["info"].get(f.id) for f in info_fields
-                    )
-                    yield _row_of(rec, names)
-
-    return udtf(_ReadVcf)
-
-
-def _make_bcf_udtf():
-    """``read_bcf_file_records(path)``: header-driven schema via analyze()."""
-    from pyspark.sql.functions import udtf
-    from pyspark.sql.udtf import AnalyzeResult
-
-    class _ReadBcf:
-        @staticmethod
-        def analyze(path) -> AnalyzeResult:
-            from exon_duckdb_spark.sources.bcf import bcf_bind
-
-            return AnalyzeResult(schema=bcf_bind(path.value)[3])
-
-        def eval(self, path: str):
-            from exon_duckdb_spark.sources.bcf import bcf_bind, parse_bcf_records
-            from exon_duckdb_spark.sources.splits import plan_splits
-
-            contigs, info_meta, info_fields, schema = bcf_bind(path)
-            names = [f.name for f in schema.fields]
-            for split in plan_splits(path, "none", splittable=False):
-                for rec in parse_bcf_records(split, info_meta, contigs, info_fields):
-                    rec["info"] = tuple(
-                        rec["info"].get(f.name) for f in info_fields
-                    )
-                    yield _row_of(rec, names)
-
-    return udtf(_ReadBcf)
+    return udtf(_Read)
 
 
 def _make_region_udtf(kind: str):
@@ -360,19 +381,10 @@ def _make_region_udtf(kind: str):
     class _Query:
         @staticmethod
         def analyze(path, region) -> AnalyzeResult:
-            if kind == "bam":
-                from exon_duckdb_spark.sources.schemas import SAM_SCHEMA
-
-                return AnalyzeResult(schema=SAM_SCHEMA)
-            if kind == "vcf":
-                from exon_duckdb_spark.sources.vcf import _peek_info_fields, vcf_schema
-
-                return AnalyzeResult(schema=vcf_schema(_peek_info_fields(path.value)))
-            from exon_duckdb_spark.sources.bcf import bcf_bind
-
-            return AnalyzeResult(schema=bcf_bind(path.value)[3])
+            return AnalyzeResult(schema=_record_format(kind, path.value)[0])
 
         def eval(self, path: str, region: str):
+            from exon_duckdb_spark.sources.indexes import plan_region_splits
             from exon_duckdb_spark.sources.vcf import parse_region
 
             chrom, r_start, r_end = parse_region(region)
@@ -384,78 +396,10 @@ def _make_region_udtf(kind: str):
                     return False
                 return not (r_end is not None and s > r_end)
 
-            if kind == "bam":
-                from exon_duckdb_spark.sources.bam import (
-                    _parse_bam_split,
-                    plan_bam_query_splits,
-                )
-                from exon_duckdb_spark.sources.schemas import SAM_SCHEMA
-
-                names = [f.name for f in SAM_SCHEMA.fields]
-                for split in plan_bam_query_splits(path, region):
-                    for rec in _parse_bam_split(split):
-                        if overlaps(rec["reference"], rec["start"], rec["end"]):
-                            yield _row_of(rec, names)
-            elif kind == "vcf":
-                from exon_duckdb_spark.sources.pyparse import parse_vcf_record_fields
-                from exon_duckdb_spark.sources.reader_core import read_split_lines
-                from exon_duckdb_spark.sources.splits import plan_splits
-                from exon_duckdb_spark.sources.vcf import (
-                    _peek_info_fields,
-                    plan_vcf_query_splits,
-                    vcf_schema,
-                )
-
-                info_fields = _peek_info_fields(path)
-                names = [f.name for f in vcf_schema(info_fields).fields]
-                splits = plan_vcf_query_splits(path, region)
-                if splits is None:
-                    splits = plan_splits(path, "auto_detect", splittable=False)
-                from exon_duckdb_spark.sources.bgzf import (
-                    is_bgzf,
-                    parse_bgzf_lines_split,
-                )
-
-                for split in splits:
-                    # parse_bgzf_lines_split already yields newline-stripped
-                    # str values — consume them directly (no bytes round-trip)
-                    lines = (
-                        (r["value"] for r in parse_bgzf_lines_split(split))
-                        if is_bgzf(split.path)
-                        else (
-                            ln.rstrip(b"\r\n").decode("utf-8", "replace")
-                            for ln in read_split_lines(split)
-                        )
-                    )
-                    for line in lines:
-                        if not line or line.startswith("#"):
-                            continue
-                        rec = parse_vcf_record_fields(line.split("\t"), info_fields)
-                        if rec["pos"] is None:
-                            continue
-                        end = rec["pos"] + len(rec["ref"] or "x") - 1
-                        if overlaps(rec["chrom"], rec["pos"], end):
-                            rec["info"] = tuple(
-                                rec["info"].get(f.id) for f in info_fields
-                            )
-                            yield _row_of(rec, names)
-            else:
-                from exon_duckdb_spark.sources.bcf import (
-                    bcf_bind,
-                    parse_bcf_records,
-                    plan_bcf_query_splits,
-                )
-
-                contigs, info_meta, info_fields, schema = bcf_bind(path)
-                names = [f.name for f in schema.fields]
-                for split in plan_bcf_query_splits(path, region):
-                    for rec in parse_bcf_records(split, info_meta, contigs, info_fields):
-                        end = rec["pos"] + len(rec["ref"] or "x") - 1
-                        if overlaps(rec["chrom"], rec["pos"], end):
-                            rec["info"] = tuple(
-                                rec["info"].get(f.name) for f in info_fields
-                            )
-                            yield _row_of(rec, names)
+            rows = _record_format(kind, path)[1]
+            splits = plan_region_splits(path, region)
+            for split in _whole_file_splits(path) if splits is None else splits:
+                yield from rows(split, overlaps)
 
     return udtf(_Query)
 
@@ -481,8 +425,8 @@ def register_table_functions(spark: SparkSession) -> None:
     spark.udtf.register(
         "exondb_third_party_acknowledgements", _make_acknowledgements_udtf()
     )
-    spark.udtf.register("read_vcf_file_records", _make_vcf_udtf())
-    spark.udtf.register("read_bcf_file_records", _make_bcf_udtf())
+    spark.udtf.register("read_vcf_file_records", _make_records_udtf("vcf"))
+    spark.udtf.register("read_bcf_file_records", _make_records_udtf("bcf"))
     spark.udtf.register("vcf_query", _make_region_udtf("vcf"))
     spark.udtf.register("bcf_query", _make_region_udtf("bcf"))
     spark.udtf.register("bam_query", _make_region_udtf("bam"))

@@ -930,26 +930,26 @@ def logistic_regression_train(
     # — and the weights bind as parameter markers (exact doubles, no
     # literal rendering), so the analyzed plan and every per-row IEEE op
     # are identical: the trajectory is bit-unchanged (pinned by
-    # test_logistic_regression_sql_form_parity and the q106 gate sha).
+    # TestLogisticRegression::test_sql_form_quoting_and_digits and the
+    # q106 gate sha).
     # The chain stays one corpus-scan aggregation job per iteration —
     # the 100 TB shape is untouched; only the per-iteration driver
     # constant shrank (measured 3.9 -> 1.5 s for q106's 6x500-row chain,
     # interleaved min-of-6).
-    def _qi(name: str) -> str:
-        return "`" + name.replace("`", "``") + "`"
+    from exon_duckdb_spark.operators.similarity import _bt
 
     margin = ":b"
     for j, c in enumerate(feature_cols):
-        margin = f"{margin} + :w{j} * CAST({_qi(c)} AS DOUBLE)"
+        margin = f"{margin} + :w{j} * CAST({_bt(c)} AS DOUBLE)"
     err = (
         "CAST(1.0 AS DOUBLE) / (CAST(1.0 AS DOUBLE) + EXP(-("
         + margin
-        + f"))) - CAST({_qi(label_col)} AS DOUBLE)"
+        + f"))) - CAST({_bt(label_col)} AS DOUBLE)"
     )
     inner = ", ".join(
         [f"({err}) AS _err"]
         + [
-            f"CAST({_qi(c)} AS DOUBLE) AS _f{j}"
+            f"CAST({_bt(c)} AS DOUBLE) AS _f{j}"
             for j, c in enumerate(feature_cols)
         ]
     )

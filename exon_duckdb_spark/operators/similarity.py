@@ -144,8 +144,11 @@ def _norm(a: Column) -> Column:
 
 
 def _bt(name: str) -> str:
-    """Backtick-quote a column name for interpolation into SQL text."""
-    return "`" + name.replace("`", "``") + "`"
+    """Backtick-quote a column name for interpolation into the SQL text of
+    ``spark.sql(text, args, **frames)``, whose ``{frame}`` formatter also
+    needs literal braces doubled."""
+    quoted = "`" + name.replace("`", "``") + "`"
+    return quoted.replace("{", "{{").replace("}", "}}")
 
 
 def cosine(a: Column, b: Column) -> Column:
@@ -174,7 +177,13 @@ def partition_topk(
     batch), never the whole scored partition: the huge-partition regime
     (billions of scored rows per task) is exactly what this reducer exists
     for, and materializing it in pandas first would OOM the executor."""
-    schema = scored.schema
+    # mapInPandas rejects a backtick in an output column name, so the
+    # reducer runs over positional names
+    names = scored.columns
+    pos = scored.toDF(*[f"_{i}" for i in range(len(names))])
+    group_col, order_col, tie_col = (
+        f"_{names.index(c)}" for c in (group_col, order_col, tie_col)
+    )
 
     def reduce_part(batches):
         import pandas as _pd
@@ -191,7 +200,7 @@ def partition_topk(
         if run is not None:
             yield run
 
-    return scored.mapInPandas(reduce_part, schema)
+    return pos.mapInPandas(reduce_part, pos.schema).toDF(*names)
 
 
 def random_projection(

@@ -18,7 +18,7 @@ Files that are gzip-but-not-BGZF (no BC subfield) can't split; the first
 split detects this and parses the whole stream, others yield nothing.
 
 ``bam_query`` prunes splits to the ``.bai`` index's chunk ranges when the
-index exists (I/O-level pruning, the same role it plays in the reference)
+index exists (sources/indexes.py, the same role it plays in the reference)
 and applies the exact region-overlap predicate after the scan, so results
 never depend on index precision.
 """
@@ -30,19 +30,11 @@ from collections.abc import Iterator
 
 from pyspark.sql import DataFrame, SparkSession
 
-from exon_duckdb_spark.sources.bgzf import (
-    BgzfBuf,
-    block_at,
-    find_block,
-    merge_voffset_ranges,
-    prune_splits_to_ranges,
-    read_binning_index,
-    reg2bins,
-)
+from exon_duckdb_spark.sources.bgzf import BgzfBuf, block_at, find_block
+from exon_duckdb_spark.sources.indexes import region_query
 from exon_duckdb_spark.sources.reader_core import make_reader
 from exon_duckdb_spark.sources.schemas import SAM_SCHEMA
 from exon_duckdb_spark.sources.splits import FileSplit, open_maybe_compressed
-from exon_duckdb_spark.sources.vcf import parse_region
 
 __all__ = ["read_bam", "bam_query"]
 
@@ -284,63 +276,6 @@ def _decode_record(rec: bytes, refs: list[str]) -> dict:
     }
 
 
-# ---------------------------------------------------------------------------
-# BAI index layer (region → compressed-range pruning)
-# ---------------------------------------------------------------------------
-
-
-def _read_bai(bai_path: str) -> list[dict[int, list[tuple[int, int]]]]:
-    """Parse a .bai: per reference, {bin → [(voffset_beg, voffset_end)]}."""
-    from exon_duckdb_spark.sources.splits import open_binary
-
-    with open_binary(bai_path) as f:
-        if f.read(4) != b"BAI\x01":
-            raise ValueError(f"{bai_path}: not a BAI index")
-        (n_ref,) = struct.unpack("<i", f.read(4))
-        return read_binning_index(f, n_ref)
-
-
-def _bai_compressed_ranges(
-    bai_path: str, ref_id: int, r_start: int | None, r_end: int | None
-) -> list[tuple[int, int]] | None:
-    """Merged compressed byte ranges that can hold alignments overlapping the
-    1-based inclusive region, or None if the index can't help."""
-    refs = _read_bai(bai_path)
-    if not (0 <= ref_id < len(refs)):
-        return []
-    beg0 = (r_start - 1) if r_start is not None else 0
-    end0 = r_end if r_end is not None else 2**29  # bins cover < 2^29 bp
-    chunks: list[tuple[int, int]] = []
-    bins = refs[ref_id]
-    for b in reg2bins(beg0, end0):
-        chunks.extend(bins.get(b, ()))
-    return merge_voffset_ranges(chunks)
-
-
-def _bam_refs(path: str) -> list[str]:
-    """Reference names from the BAM header (driver-side peek)."""
-    from exon_duckdb_spark.sources.splits import file_size as _fsize
-    from exon_duckdb_spark.sources.splits import open_binary
-
-    file_size = _fsize(path)
-    with open_binary(path) as f:
-        if _block_at(f, 0, file_size) is not None:
-            refs, _ = _read_header(_BgzfBuf(f, 0, file_size))
-            return refs
-    with open_maybe_compressed(path, "gzip") as f:
-        if f.read(4) != b"BAM\x01":
-            return []
-        (l_text,) = struct.unpack("<i", f.read(4))
-        f.read(l_text)
-        (n_ref,) = struct.unpack("<i", f.read(4))
-        refs = []
-        for _ in range(n_ref):
-            (l_name,) = struct.unpack("<i", f.read(4))
-            refs.append(f.read(l_name)[:-1].decode())
-            f.read(4)
-        return refs
-
-
 def read_bam(
     spark: SparkSession,
     path: str | list[str],
@@ -361,46 +296,11 @@ def read_bam(
     )
 
 
-def plan_bam_query_splits(
-    path: str, region: str, split_bytes: int = DEFAULT_BAM_SPLIT_BYTES
-):
-    """Splits a BAM region query must scan: all splits, pruned by the .bai
-    index when one sits next to the file (reference: BAI-backed I/O pruning
-    in rust/src/bam_query_reader.rs:63). Exposed for testability."""
-    from exon_duckdb_spark.sources.bgzf import is_bgzf
-    from exon_duckdb_spark.sources.splits import path_exists as _path_exists
-    from exon_duckdb_spark.sources.splits import plan_splits
-
-    splits = plan_splits(path, "none", splittable=True, split_bytes=split_bytes)
-    bai_path = path + ".bai"
-    # same guard as the VCF/BCF planners: a stale .bai next to a non-BGZF
-    # file would prune with meaningless virtual offsets — for a plain-gzip
-    # BAM only the start==0 split yields anything, so a bad prune could
-    # silently return zero rows
-    if not _path_exists(bai_path) or not is_bgzf(path):
-        return splits
-    chrom, r_start, r_end = parse_region(region)
-    refs = _bam_refs(path)
-    if chrom not in refs:
-        return []
-    ranges = _bai_compressed_ranges(bai_path, refs.index(chrom), r_start, r_end)
-    if ranges is None:
-        return splits
-    return prune_splits_to_ranges(splits, ranges)
-
-
 def bam_query(spark: SparkSession, path: str, region: str) -> DataFrame:
     """Region query over BAM — reference ``bam_query(path, region)``
     (rust/src/bam_query_reader.rs:63): alignments overlapping the 1-based
-    inclusive region. With a ``.bai`` next to the file, splits outside the
-    indexed chunks are pruned before the scan (I/O-level pruning, same role
-    as the reference's index); the exact overlap filter below keeps
-    semantics index-independent."""
-    from exon_duckdb_spark.sources.vcf import region_filter
-
-    splits = plan_bam_query_splits(path, region)
-    if not splits:
-        df = read_bam(spark, path).limit(0)
-    else:
-        df = read_bam(spark, path, _splits=splits)
-    return df.where(region_filter(df.reference, df.start, df.end, region))
+    inclusive region, read from the ``.bai``-pruned splits when the index
+    exists (see :func:`~exon_duckdb_spark.sources.indexes.region_query`)."""
+    return region_query(
+        spark, path, region, read_bam, lambda df: (df.reference, df.start, df.end)
+    )

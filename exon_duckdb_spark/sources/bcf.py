@@ -22,7 +22,9 @@ from collections.abc import Iterator
 
 from pyspark.sql import DataFrame, SparkSession
 
+from exon_duckdb_spark.sources.indexes import region_query
 from exon_duckdb_spark.sources.splits import FileSplit, open_maybe_compressed
+from exon_duckdb_spark.sources.vcf import vcf_span
 
 __all__ = ["read_bcf", "bcf_query"]
 
@@ -381,114 +383,9 @@ def read_bcf(
     )
 
 
-def _read_csi(csi_path: str) -> tuple[int, int, list[dict[int, list[tuple[int, int]]]]]:
-    """Parse a .csi index: (min_shift, depth, per-ref {bin → chunks}).
-
-    CSI generalizes BAI's binning (configurable min_shift/depth, an extra
-    loffset per bin); the container is BGZF, readable by stdlib gzip.
-    """
-    import gzip as _gz
-
-    from exon_duckdb_spark.sources.splits import open_binary as _ob
-
-    with _gz.GzipFile(fileobj=_ob(csi_path)) as f:
-        if f.read(4) != b"CSI\x01":
-            raise ValueError(f"{csi_path}: not a CSI index")
-        min_shift, depth, l_aux = struct.unpack("<3i", f.read(12))
-        f.read(l_aux)
-        (n_ref,) = struct.unpack("<i", f.read(4))
-        refs = []
-        for _ in range(n_ref):
-            (n_bin,) = struct.unpack("<i", f.read(4))
-            bins: dict[int, list[tuple[int, int]]] = {}
-            for _ in range(n_bin):
-                bin_id, _loffset, n_chunk = struct.unpack("<IQi", f.read(16))
-                bins[bin_id] = [
-                    struct.unpack("<QQ", f.read(16)) for _ in range(n_chunk)
-                ]
-            refs.append(bins)
-        return min_shift, depth, refs
-
-
-def _csi_reg2bins(beg: int, end: int, min_shift: int, depth: int) -> list[int]:
-    """CSI binning pseudo-code (hts-specs csi.tex), [beg, end) 0-based."""
-    bins = []
-    s = min_shift + depth * 3
-    t = 0
-    for level in range(depth + 1):
-        bins.extend(range(t + (beg >> s), t + ((end - 1) >> s) + 1))
-        t += 1 << (level * 3)
-        s -= 3
-    return bins
-
-
-def plan_bcf_query_splits(
-    path: str, region: str, split_bytes: int = DEFAULT_BCF_SPLIT_BYTES
-):
-    """Splits a BCF region query must scan, pruned by the .csi when present.
-    Exposed for testability."""
-    from exon_duckdb_spark.sources.splits import path_exists as _path_exists
-
-    from exon_duckdb_spark.sources.bgzf import (
-        is_bgzf,
-        merge_voffset_ranges,
-        prune_splits_to_ranges,
-    )
-    from exon_duckdb_spark.sources.splits import plan_splits
-    from exon_duckdb_spark.sources.vcf import parse_region
-
-    splits = plan_splits(path, "none", splittable=True, split_bytes=split_bytes)
-    csi_path = path + ".csi"
-    if not (_path_exists(csi_path) and is_bgzf(path)):
-        return splits
-    contigs = _bcf_contigs(path)
-    chrom, r_start, r_end = parse_region(region)
-    if chrom not in contigs:
-        return []
-    min_shift, depth, refs = _read_csi(csi_path)
-    rid = contigs.index(chrom)
-    if not (0 <= rid < len(refs)):
-        return []
-    beg0 = (r_start - 1) if r_start is not None else 0
-    end0 = r_end if r_end is not None else 1 << (min_shift + depth * 3)
-    chunks: list[tuple[int, int]] = []
-    bins = refs[rid]
-    for b in _csi_reg2bins(beg0, end0, min_shift, depth):
-        chunks.extend(bins.get(b, ()))
-    return prune_splits_to_ranges(splits, merge_voffset_ranges(chunks))
-
-
-def _bcf_contigs(path: str) -> list[str]:
-    """Contig names from the BCF header (driver-side peek). Goes through
-    the open_binary filesystem seam like every other header peek, so
-    object-store URIs work (a bare gzip.open would treat the URI as a
-    local filename)."""
-    import gzip as _gzip
-    import re as _re
-
-    from exon_duckdb_spark.sources.splits import open_binary
-
-    with open_binary(path) as raw, _gzip.open(raw, "rb") as fh:
-        if fh.read(5)[:3] != b"BCF":
-            return []
-        (l_text,) = struct.unpack("<I", fh.read(4))
-        text = fh.read(l_text).decode("utf-8", "replace")
-    return _re.findall(r"##contig=<ID=([^,>]+)", text)
-
-
 def bcf_query(spark: SparkSession, path: str, region: str) -> DataFrame:
     """CSI-region query over BCF — reference ``bcf_query(path, region)``
     (rust/src/bcf_query_reader.rs:63). Splits prune to the ``.csi`` chunk
     ranges when the index exists; the exact overlap filter keeps semantics
     index-independent."""
-    from pyspark.sql import functions as F
-
-    from exon_duckdb_spark.sources.vcf import region_filter
-
-    splits = plan_bcf_query_splits(path, region)
-    if not splits:
-        df = read_bcf(spark, path).limit(0)
-    else:
-        df = read_bcf(spark, path, _splits=splits)
-    end = df.pos + F.length(df.ref) - 1
-    return df.where(region_filter(df.chrom, df.pos, end, region))
+    return region_query(spark, path, region, read_bcf, vcf_span)

@@ -6,8 +6,8 @@ whose compressed size is recorded in a BC extra subfield — so a byte range
 of the COMPRESSED file can align itself to a block boundary and decompress
 just its part, which is what makes these formats cluster-splittable.
 
-Also here: the binning-scheme helpers shared by BAI and tabix index pruning
-(same reg2bins scheme, SAM spec §5.3).
+Also here: the virtual-offset helpers that turn index chunks into a pruned
+split list (sources/indexes.py plans region queries with them).
 """
 
 from __future__ import annotations
@@ -30,7 +30,6 @@ __all__ = [
     "is_bgzf",
     "BgzfBuf",
     "parse_bgzf_lines_split",
-    "reg2bins",
     "merge_voffset_ranges",
     "prune_splits_to_ranges",
 ]
@@ -277,18 +276,8 @@ def parse_bgzf_lines_split(split: FileSplit):
 
 
 # ---------------------------------------------------------------------------
-# Binning-index helpers (shared by BAI and tabix)
+# Virtual-offset chunks → split pruning (used by indexes.plan_region_splits)
 # ---------------------------------------------------------------------------
-
-
-def reg2bins(beg: int, end: int) -> list[int]:
-    """Bins overlapping 0-based half-open [beg, end) — binning scheme from
-    the public SAM/BAM spec (section 5.3 pseudo-code)."""
-    end -= 1
-    bins = [0]
-    for shift, base in ((26, 1), (23, 9), (20, 73), (17, 585), (14, 4681)):
-        bins.extend(range(base + (beg >> shift), base + (end >> shift) + 1))
-    return bins
 
 
 def merge_voffset_ranges(chunks: list[tuple[int, int]]) -> list[tuple[int, int]]:
@@ -308,16 +297,15 @@ def merge_voffset_ranges(chunks: list[tuple[int, int]]) -> list[tuple[int, int]]
 def prune_splits_to_ranges(splits, ranges: list[tuple[int, int]]):
     """Splits overlapping any compressed range, PLUS each kept split's
     immediate file-order predecessor. The predecessor rule is a
-    correctness requirement for record boundary ownership (round-5
-    review): a record starting exactly at byte 0 of a kept split's anchor
-    block is YIELDED by the previous split (the next-split-discards-its-
-    first-record convention), and that anchor is by definition the first
-    block at-or-after the predecessor's end — so pruning the predecessor
-    while keeping its successor would silently drop the boundary record.
-    One extra split per contiguous kept run buys the guarantee. (The
-    post-scan exact filters keep pruning correctness-neutral for every
-    record a kept split YIELDS — this rule guards which split yields it
-    at all.)"""
+    correctness requirement for record boundary ownership: a record
+    starting exactly at byte 0 of a kept split's anchor block is YIELDED
+    by the previous split (the next-split-discards-its-first-record
+    convention), and that anchor is by definition the first block
+    at-or-after the predecessor's end — so pruning the predecessor while
+    keeping its successor would silently drop the boundary record. One
+    extra split per contiguous kept run buys the guarantee. (The post-scan
+    exact filters keep pruning correctness-neutral for every record a kept
+    split YIELDS — this rule guards which split yields it at all.)"""
     ordered = sorted(splits, key=lambda s: s.start)
     keep_idx = {
         i
@@ -326,19 +314,3 @@ def prune_splits_to_ranges(splits, ranges: list[tuple[int, int]]):
     }
     keep_idx |= {i - 1 for i in keep_idx if i > 0}
     return [s for i, s in enumerate(ordered) if i in keep_idx]
-
-
-def read_binning_index(f, n_ref: int) -> list[dict[int, list[tuple[int, int]]]]:
-    """Per-reference {bin → chunks} from an open binary stream positioned at
-    the first reference entry (shared layout of BAI and tabix)."""
-    refs = []
-    for _ in range(n_ref):
-        (n_bin,) = struct.unpack("<i", f.read(4))
-        bins: dict[int, list[tuple[int, int]]] = {}
-        for _ in range(n_bin):
-            bin_id, n_chunk = struct.unpack("<Ii", f.read(8))
-            bins[bin_id] = [struct.unpack("<QQ", f.read(16)) for _ in range(n_chunk)]
-        (n_intv,) = struct.unpack("<i", f.read(4))
-        f.read(8 * n_intv)  # linear index unused — bins bound both ends
-        refs.append(bins)
-    return refs

@@ -1,55 +1,88 @@
-"""Index builders: .bai (BAM), .tbi (tabix, bgzip'd VCF), .csi (BCF).
+"""Binning indexes — ``.bai`` (BAM), ``.tbi`` (tabix, bgzip'd VCF) and
+``.csi`` (BCF): building them, reading them, and planning region queries
+from them.
 
-The reference consumes these indexes for its region-query TVFs
-(rust/src/bam_query_reader.rs:63, vcf_query_reader.rs:31-86); samtools/
-tabix normally produce them. Building one is a sequential walk of a single
-file — the same cost profile as ``samtools index`` — so these run
-driver-side (or one executor per file via a simple map over paths); the
-payoff is the split pruning in plan_{bam,vcf,bcf}_query_splits.
+All three use one binning scheme: CSI binning with a (min_shift, depth)
+pair, of which BAI and TBI are the fixed (14, 5) case (SAM spec §5.3,
+tabix.tex, csi.tex). A region query is region → overlapping bins → chunk
+virtual offsets → compressed byte ranges → the file splits that overlap
+them (:func:`plan_region_splits`); the exact overlap filter runs after the
+scan, so results never depend on the index (:func:`region_query`). The
+reference uses these indexes the same way in its region-query TVFs
+(rust/src/bam_query_reader.rs:63, vcf_query_reader.rs:31-86).
 
-Formats follow the public hts-specs (SAMv1 §5.2 BAI layout, tabix.tex,
-csi.tex). Only bins are emitted (no linear index / loffset hints): our
-readers bound both chunk ends from the bins alone, and the empty linear
-index is valid per spec.
+Building an index is a sequential walk of one file — the cost profile of
+``samtools index`` — so it runs driver-side. Only bins are emitted (no
+linear index or loffset hints): the readers bound both chunk ends from the
+bins alone, and an empty linear index is valid per spec.
 """
 
 from __future__ import annotations
 
 import gzip
+import io
 import struct
 import zlib
 from bisect import bisect_right
 
-from exon_duckdb_spark.sources.bgzf import BGZF_MAGIC, bgzf_bsize
+from pyspark.sql import DataFrame, SparkSession
 
-__all__ = ["index_bam", "index_vcf", "index_bcf", "reg2bin"]
+from exon_duckdb_spark.sources.bgzf import (
+    BGZF_MAGIC,
+    BgzfBuf,
+    bgzf_bsize,
+    is_bgzf,
+    merge_voffset_ranges,
+    prune_splits_to_ranges,
+)
+from exon_duckdb_spark.sources.splits import (
+    file_size,
+    is_single_file,
+    open_binary,
+    path_exists,
+    plan_splits,
+)
+from exon_duckdb_spark.sources.vcf import parse_region, region_filter
+
+__all__ = [
+    "index_bam",
+    "index_vcf",
+    "index_bcf",
+    "reg2bin",
+    "reg2bins",
+    "read_index",
+    "plan_region_splits",
+    "region_query",
+]
+
+# Split size of an index-pruned query: the pruning granularity.
+QUERY_SPLIT_BYTES = 64 * 1024 * 1024
+
+Bins = dict[int, list[tuple[int, int]]]
 
 
-def reg2bin(beg: int, end: int) -> int:
-    """Smallest bin containing 0-based half-open [beg, end) (SAM spec §5.3)."""
+def reg2bin(beg: int, end: int, min_shift: int = 14, depth: int = 5) -> int:
+    """Smallest bin containing 0-based half-open [beg, end) (csi.tex)."""
     end -= 1
-    if beg >> 14 == end >> 14:
-        return ((1 << 15) - 1) // 7 + (beg >> 14)
-    if beg >> 17 == end >> 17:
-        return ((1 << 12) - 1) // 7 + (beg >> 17)
-    if beg >> 20 == end >> 20:
-        return ((1 << 9) - 1) // 7 + (beg >> 20)
-    if beg >> 23 == end >> 23:
-        return ((1 << 6) - 1) // 7 + (beg >> 23)
-    if beg >> 26 == end >> 26:
-        return ((1 << 3) - 1) // 7 + (beg >> 26)
+    s, t = min_shift, ((1 << depth * 3) - 1) // 7
+    for level in range(depth - 1, -1, -1):
+        if beg >> s == end >> s:
+            return t + (beg >> s)
+        s += 3
+        t -= 1 << level * 3
     return 0
 
 
-def _csi_bin(beg: int, end: int, min_shift: int = 14, depth: int = 5) -> int:
-    """CSI bin via level walk — with (14, 5) this equals BAI's reg2bin."""
+def reg2bins(beg: int, end: int, min_shift: int = 14, depth: int = 5) -> list[int]:
+    """Every bin overlapping 0-based half-open [beg, end) (csi.tex)."""
     end -= 1
-    levels = [(min_shift + 3 * i, ((1 << 3 * (depth - i)) - 1) // 7)
-              for i in range(depth + 1)]
-    for shift, offset in levels:
-        if beg >> shift == end >> shift:
-            return offset + (beg >> shift)
-    return 0
+    bins: list[int] = []
+    s, t = min_shift + depth * 3, 0
+    for level in range(depth + 1):
+        bins.extend(range(t + (beg >> s), t + (end >> s) + 1))
+        t += 1 << level * 3
+        s -= 3
+    return bins
 
 
 class _BgzfPayload:
@@ -59,8 +92,6 @@ class _BgzfPayload:
         self.payload = bytearray()
         self.ustarts: list[int] = []
         self.coffsets: list[int] = []
-        from exon_duckdb_spark.sources.splits import open_binary
-
         with open_binary(path) as f:
             data = f.read()
         pos = 0
@@ -83,7 +114,7 @@ class _BgzfPayload:
         return (self.coffsets[i] << 16) | (upos - self.ustarts[i])
 
 
-def _pack_bins(bins: dict[int, list[tuple[int, int]]], csi: bool) -> bytes:
+def _pack_bins(bins: Bins, csi: bool) -> bytes:
     out = struct.pack("<i", len(bins))
     for bin_id in sorted(bins):
         chunks = bins[bin_id]
@@ -122,7 +153,7 @@ def index_bam(path: str, out_path: str | None = None) -> str:
     for _ in range(n_ref):
         (l_name,) = struct.unpack_from("<i", buf, pos)
         pos += 4 + l_name + 4
-    refs: list[dict[int, list[tuple[int, int]]]] = [{} for _ in range(n_ref)]
+    refs: list[Bins] = [{} for _ in range(n_ref)]
     while pos + 4 <= len(buf):
         (block_size,) = struct.unpack_from("<i", buf, pos)
         rec_end = pos + 4 + block_size
@@ -155,7 +186,7 @@ def index_vcf(path: str, out_path: str | None = None) -> str:
     buf = bytes(pay.payload)
     names: list[str] = []
     name_ids: dict[str, int] = {}
-    refs: list[dict[int, list[tuple[int, int]]]] = []
+    refs: list[Bins] = []
     pos = 0
     while pos < len(buf):
         nl = buf.find(b"\n", pos)
@@ -204,7 +235,7 @@ def index_bcf(
     (l_text,) = struct.unpack_from("<I", buf, 5)
     pos = 9 + l_text
     n_contigs = buf[9 : 9 + l_text].count(b"##contig=<ID=")
-    refs: list[dict[int, list[tuple[int, int]]]] = [{} for _ in range(n_contigs)]
+    refs: list[Bins] = [{} for _ in range(n_contigs)]
     while pos + 8 <= len(buf):
         l_shared, l_indiv = struct.unpack_from("<II", buf, pos)
         rec_end = pos + 8 + l_shared + l_indiv
@@ -212,7 +243,7 @@ def index_bcf(
         if 0 <= rid < n_contigs and p0 >= 0:
             _add_chunk(
                 refs[rid],
-                _csi_bin(p0, p0 + max(rlen, 1), min_shift, depth),
+                reg2bin(p0, p0 + max(rlen, 1), min_shift, depth),
                 pay.voffset(pos),
                 pay.voffset(rec_end),
             )
@@ -225,3 +256,108 @@ def index_bcf(
     with gzip.open(out, "wb") as f:
         f.write(body)
     return out
+
+
+def read_index(path: str) -> tuple[int, int, list[str] | None, list[Bins]]:
+    """Parse a .bai, .tbi or .csi: (min_shift, depth, sequence names, per
+    reference {bin → [(voffset_beg, voffset_end)]}).
+
+    BAI is raw bytes; TBI and CSI are BGZF, which gzip reads as one stream.
+    Only tabix names its sequences (names is None otherwise: BAI and CSI
+    count references in the data file's header order). The linear index and
+    CSI's per-bin loffset are skipped — the bins bound both chunk ends.
+    """
+    with open_binary(path) as f:
+        data = f.read()
+    if data[:2] == b"\x1f\x8b":
+        data = gzip.decompress(data)
+    f = io.BytesIO(data)
+
+    def unpack(fmt: str) -> tuple:
+        return struct.unpack(fmt, f.read(struct.calcsize(fmt)))
+
+    magic = f.read(4)
+    if magic not in (b"BAI\x01", b"TBI\x01", b"CSI\x01"):
+        raise ValueError(f"{path}: not a BAI, TBI or CSI index")
+    csi = magic == b"CSI\x01"
+    min_shift, depth, names = 14, 5, None
+    if csi:
+        min_shift, depth, l_aux = unpack("<3i")
+        f.read(l_aux)
+    (n_ref,) = unpack("<i")
+    if magic == b"TBI\x01":
+        *_, l_nm = unpack("<7i")
+        names = [n.decode() for n in f.read(l_nm).rstrip(b"\x00").split(b"\x00")]
+    refs = []
+    for _ in range(n_ref):
+        bins: Bins = {}
+        for _ in range(unpack("<i")[0]):
+            bin_id, *_loffset, n_chunk = unpack("<IQi" if csi else "<Ii")
+            bins[bin_id] = [unpack("<QQ") for _ in range(n_chunk)]
+        if not csi:
+            f.read(8 * unpack("<i")[0])  # linear index
+        refs.append(bins)
+    return min_shift, depth, names, refs
+
+
+def _sidecar(path: str) -> tuple[str, list[str] | None]:
+    """(index suffix, contig names) of a BGZF file, by its payload magic:
+    a BAM's .bai and a BCF's .csi count references in header order, so the
+    names come from that header; a VCF's .tbi names its own sequences."""
+    from exon_duckdb_spark.sources.bam import _read_header
+    from exon_duckdb_spark.sources.bcf import bcf_bind
+
+    with open_binary(path) as f:
+        buf = BgzfBuf(f, 0, file_size(path))
+        magic = buf.get(0, 4) or b""
+        if magic == b"BAM\x01":
+            return ".bai", _read_header(buf)[0]
+    if magic.startswith(b"BCF"):
+        return ".csi", bcf_bind(path)[0]
+    return ".tbi", None
+
+
+def plan_region_splits(
+    path: str, region: str, split_bytes: int = QUERY_SPLIT_BYTES
+):
+    """Splits a region query over a BAM, bgzip'd VCF or BCF must read.
+
+    - ``None``: no usable index — no sidecar next to the file, the file is
+      not BGZF (virtual offsets would be meaningless), or the path is not a
+      single file. The caller reads everything.
+    - ``[]``: the contig is absent, so nothing can overlap.
+    - otherwise the splits overlapping the region's chunks, plus each kept
+      split's predecessor (:func:`prune_splits_to_ranges`).
+    """
+    if not (is_single_file(path) and is_bgzf(path)):
+        return None
+    suffix, names = _sidecar(path)
+    if not path_exists(path + suffix):
+        return None
+    min_shift, depth, index_names, refs = read_index(path + suffix)
+    names = index_names if index_names is not None else names
+    chrom, r_start, r_end = parse_region(region)
+    if chrom not in names or names.index(chrom) >= len(refs):
+        return []
+    bins = refs[names.index(chrom)]
+    beg0 = r_start - 1 if r_start is not None else 0
+    end0 = r_end if r_end is not None else 1 << (min_shift + depth * 3)
+    chunks = [
+        c for b in reg2bins(beg0, end0, min_shift, depth) for c in bins.get(b, ())
+    ]
+    splits = plan_splits(path, "none", splittable=True, split_bytes=split_bytes)
+    return prune_splits_to_ranges(splits, merge_voffset_ranges(chunks))
+
+
+def region_query(spark: SparkSession, path: str, region: str, read, span) -> DataFrame:
+    """The body of ``bam_query``/``vcf_query``/``bcf_query``: read the
+    index-pruned splits with ``read(spark, path, _splits=...)``, then keep
+    records whose ``span(df)`` = (chrom, first, last) columns overlap the
+    1-based inclusive region. The exact filter keeps results independent of
+    the index."""
+    splits = plan_region_splits(path, region)
+    if splits == []:
+        df = read(spark, path).limit(0)
+    else:
+        df = read(spark, path, _splits=splits)
+    return df.where(region_filter(*span(df), region))

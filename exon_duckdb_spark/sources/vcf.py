@@ -10,7 +10,7 @@ Catalyst prunes and pushes down as usual).
 ``vcf_query(path, region)`` reproduces the tabix-region TVF semantics
 (rust/src/vcf_query_reader.rs:31-86): region 'chr' or 'chr:start-end',
 1-based inclusive. With a ``.tbi`` next to a bgzip'd file, splits prune to
-the indexed chunk ranges (plan_vcf_query_splits); the exact overlap filter
+the indexed chunk ranges (sources/indexes.py); the exact overlap filter
 runs after the scan, so semantics never depend on the index. bgzip'd files
 are block-splittable via sources/bgzf.py.
 """
@@ -200,63 +200,6 @@ def region_filter(chrom_col: Column, start_col: Column, end_col: Column, region:
     return cond
 
 
-def _read_tbi(tbi_path: str) -> tuple[list[str], list[dict[int, list[tuple[int, int]]]]]:
-    """Parse a tabix index (.tbi): (sequence names, per-ref {bin → chunks}).
-
-    Same binning layout as BAI (SAM spec §5.3 / tabix paper); the .tbi
-    container is itself BGZF, which stdlib gzip reads transparently.
-    """
-    import gzip as _gz
-    import struct as _struct
-
-    from exon_duckdb_spark.sources.bgzf import read_binning_index
-
-    from exon_duckdb_spark.sources.splits import open_binary as _ob
-
-    with _gz.GzipFile(fileobj=_ob(tbi_path)) as f:
-        if f.read(4) != b"TBI\x01":
-            raise ValueError(f"{tbi_path}: not a tabix index")
-        n_ref, _fmt, _seq, _beg, _end, _meta, _skip, l_nm = _struct.unpack(
-            "<8i", f.read(32)
-        )
-        names = f.read(l_nm).rstrip(b"\x00").split(b"\x00")
-        return [n.decode() for n in names], read_binning_index(f, n_ref)
-
-
-def plan_vcf_query_splits(path: str, region: str, split_bytes: int | None = None):
-    """Splits a VCF region query must scan: pruned to the .tbi chunk ranges
-    when an index sits next to a bgzip'd file, else all splits (or None to
-    signal 'use the default text scan'). Exposed for testability."""
-    import os
-
-    from exon_duckdb_spark.sources.bgzf import (
-        is_bgzf,
-        merge_voffset_ranges,
-        prune_splits_to_ranges,
-        reg2bins,
-    )
-    from exon_duckdb_spark.sources.splits import plan_splits
-
-    from exon_duckdb_spark.sources.splits import is_single_file, path_exists
-
-    tbi_path = path + ".tbi"
-    if not (is_single_file(path) and path_exists(tbi_path) and is_bgzf(path)):
-        return None
-    kwargs = {} if split_bytes is None else {"split_bytes": split_bytes}
-    splits = plan_splits(path, "none", splittable=True, **kwargs)
-    names, refs = _read_tbi(tbi_path)
-    chrom, r_start, r_end = parse_region(region)
-    if chrom not in names:
-        return []
-    bins = refs[names.index(chrom)]
-    beg0 = (r_start - 1) if r_start is not None else 0
-    end0 = r_end if r_end is not None else 2**29
-    chunks: list[tuple[int, int]] = []
-    for b in reg2bins(beg0, end0):
-        chunks.extend(bins.get(b, ()))
-    return prune_splits_to_ranges(splits, merge_voffset_ranges(chunks))
-
-
 def vcf_query(spark: SparkSession, path: str, region: str) -> DataFrame:
     """Region query over VCF — reference ``vcf_query(path, region)``
     (rust/src/vcf_query_reader.rs:31-86).
@@ -266,10 +209,11 @@ def vcf_query(spark: SparkSession, path: str, region: str) -> DataFrame:
     outside the indexed chunks are pruned before the scan; the exact overlap
     filter keeps semantics index-independent.
     """
-    splits = plan_vcf_query_splits(path, region)
-    if splits == []:
-        df = read_vcf(spark, path).limit(0)
-    else:
-        df = read_vcf(spark, path, _splits=splits)
-    end = df.pos + F.length(df.ref) - 1
-    return df.where(region_filter(df.chrom, df.pos, end, region))
+    from exon_duckdb_spark.sources.indexes import region_query
+
+    return region_query(spark, path, region, read_vcf, vcf_span)
+
+
+def vcf_span(df: DataFrame) -> tuple[Column, Column, Column]:
+    """(chrom, first, last) position columns of VCF-shaped records."""
+    return df.chrom, df.pos, df.pos + F.length(df.ref) - 1

@@ -8,7 +8,8 @@ import struct
 import pytest
 
 from exon_duckdb_spark.sources.splits import FileSplit, plan_splits
-from exon_duckdb_spark.sources.vcf import plan_vcf_query_splits, read_vcf, vcf_query
+from exon_duckdb_spark.sources.indexes import plan_region_splits
+from exon_duckdb_spark.sources.vcf import read_vcf, vcf_query
 from tests.test_binary_sources import _bgzf_block, _reg2bin
 
 
@@ -120,7 +121,7 @@ class TestBgzfVcf:
 
     def test_tbi_prunes_splits(self, bgzf_vcf):
         total = plan_splits(bgzf_vcf, "none", splittable=True, split_bytes=150)
-        pruned = plan_vcf_query_splits(bgzf_vcf, "1:10000-30001", split_bytes=150)
+        pruned = plan_region_splits(bgzf_vcf, "1:10000-30001", split_bytes=150)
         assert len(total) > 4
         assert 0 < len(pruned) < len(total) / 2
 

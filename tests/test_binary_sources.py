@@ -196,11 +196,11 @@ class TestBamBaiPruning:
         return str(p)
 
     def test_pruning_reduces_splits(self, indexed_bam):
-        from exon_duckdb_spark.sources.bam import plan_bam_query_splits
+        from exon_duckdb_spark.sources.indexes import plan_region_splits
         from exon_duckdb_spark.sources.splits import plan_splits
 
         total = plan_splits(indexed_bam, "none", splittable=True, split_bytes=150)
-        pruned = plan_bam_query_splits(indexed_bam, "chr1:100000-120000", split_bytes=150)
+        pruned = plan_region_splits(indexed_bam, "chr1:100000-120000", split_bytes=150)
         assert len(total) > 4
         assert 0 < len(pruned) < len(total) / 2
 
@@ -451,11 +451,11 @@ class TestBcfBgzfSplits:
         )
 
     def test_csi_prunes_splits(self, bgzf_bcf):
-        from exon_duckdb_spark.sources.bcf import plan_bcf_query_splits
+        from exon_duckdb_spark.sources.indexes import plan_region_splits
         from exon_duckdb_spark.sources.splits import plan_splits
 
         total = plan_splits(bgzf_bcf, "none", splittable=True, split_bytes=120)
-        pruned = plan_bcf_query_splits(bgzf_bcf, "1:10001-50001", split_bytes=120)
+        pruned = plan_region_splits(bgzf_bcf, "1:10001-50001", split_bytes=120)
         assert len(total) > 4
         assert 0 < len(pruned) < len(total) / 2
 

@@ -221,9 +221,10 @@ def test_mock_fs_listing_size_and_split_reads(tmp_path, mock_fs):
     from exon_duckdb_spark.sources.bam import _parse_bam_split
     from exon_duckdb_spark.sources.splits import plan_splits
 
-    from tests.test_indexes import _bam_fixture
+    from tests.test_indexes import _write_bam
 
-    local = _bam_fixture(tmp_path)  # writes x.bam under tmp_path
+    local = str(tmp_path / "x.bam")
+    _write_bam(local)
     name = local.rsplit("/", 1)[1]
 
     listed = expand_paths("mock://")
@@ -247,22 +248,23 @@ def test_mock_fs_region_query_pruning_and_write(tmp_path, mock_fs):
     """Indexed region query through the double: the .bai is discovered and
     read remotely, split pruning fires, results match the local path; plus
     one writer pass through open_output."""
-    from exon_duckdb_spark.sources.bam import _parse_bam_split, plan_bam_query_splits
-    from exon_duckdb_spark.sources.indexes import index_bam
+    from exon_duckdb_spark.sources.bam import _parse_bam_split
+    from exon_duckdb_spark.sources.indexes import index_bam, plan_region_splits
     from exon_duckdb_spark.sources.splits import open_output, plan_splits
 
-    from tests.test_indexes import REGION, _bam_fixture
+    from tests.test_indexes import REGION, _write_bam
 
-    local = _bam_fixture(tmp_path)
+    local = str(tmp_path / "x.bam")
+    _write_bam(local)
     index_bam(local)
     name = local.rsplit("/", 1)[1]
 
     total = plan_splits(f"mock://{name}", "none", splittable=True, split_bytes=400)
-    pruned = plan_bam_query_splits(f"mock://{name}", REGION, split_bytes=400)
+    pruned = plan_region_splits(f"mock://{name}", REGION, split_bytes=400)
     assert 0 < len(pruned) < len(total)  # .bai found + used through the seam
     got = sorted(r["name"] for s in pruned for r in _parse_bam_split(s))
     want = sorted(
-        r["name"] for s in plan_bam_query_splits(local, REGION, split_bytes=400)
+        r["name"] for s in plan_region_splits(local, REGION, split_bytes=400)
         for r in _parse_bam_split(s)
     )
     assert got == want

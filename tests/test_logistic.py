@@ -76,6 +76,17 @@ class TestLogisticRegression:
         ref = _ref_train(rows, iters=3, digits=4)
         assert traj == ref
 
+    def test_sql_form_brace_and_backtick_identifiers(self, spark):
+        """Column names holding ``{``, ``}`` and a backtick survive both
+        the identifier quoting and the ``{frame}`` formatter of the
+        one-SQL-call training loop."""
+        rows = _toy_rows()[:60]
+        df = spark.createDataFrame(
+            [(x[0], x[1], y) for x, y in rows], ["a{b}`c", "f}1", "{y"]
+        )
+        traj = ops.logistic_regression_train(df, ["a{b}`c", "f}1"], "{y", iters=3)
+        assert traj == _ref_train(rows, iters=3)
+
     def test_learns_the_band(self, spark):
         rows = _toy_rows()
         df = spark.createDataFrame(

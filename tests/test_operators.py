@@ -1179,6 +1179,25 @@ class TestRetrievalAndParagraphs:
         assert 3 not in {r["doc_id"] for r in q1}
         assert all(r["rank"] == i + 1 for i, r in enumerate(q1))
 
+    def test_bm25_multi_brace_and_backtick_identifiers(self, spark):
+        """Id and text column names holding ``{``, ``}`` and a backtick
+        survive the identifier quoting and the ``{frame}`` formatter of
+        the SQL form: same scores as the plainly named columns."""
+        docs = [(1, "spark spark runs"), (2, "spark here"), (3, "other words")]
+        qdf = spark.createDataFrame(
+            [(0, ["spark"]), (1, ["runs", "here"])],
+            "query_id bigint, terms array<string>",
+        )
+        plain = ops.bm25_topk_multi(
+            spark.createDataFrame(docs, ["doc_id", "text"]), qdf, k=10
+        ).collect()
+        odd = ops.bm25_topk_multi(
+            spark.createDataFrame(docs, ["a{b}`c", "t{x}"]), qdf, k=10,
+            text_col="t{x}", id_col="a{b}`c",
+        )
+        assert odd.columns == ["query_id", "a{b}`c", "bm25", "rank"]
+        assert sorted(map(tuple, odd.collect())) == sorted(map(tuple, plain))
+
     def test_hybrid_topk_rrf_fusion(self, spark):
         """RRF = Σ 1/(60+rank) over lex ∪ dense candidates: a doc hit by
         BOTH branches must outrank equal-rank single-branch docs, docs in

@@ -88,15 +88,13 @@ def test_s3_indexed_region_query(s3env, tmp_path):
     against s3:// — the .bai discovery, chunk-range pruning, and ranged
     BGZF reads all ride the AWS client."""
     _, _, store, _ = s3env
-    from exon_duckdb_spark.sources.bam import (
-        _parse_bam_split,
-        plan_bam_query_splits,
-    )
-    from exon_duckdb_spark.sources.indexes import index_bam
+    from exon_duckdb_spark.sources.bam import _parse_bam_split
+    from exon_duckdb_spark.sources.indexes import index_bam, plan_region_splits
 
-    from tests.test_indexes import _bam_fixture
+    from tests.test_indexes import _write_bam
 
-    local = _bam_fixture(tmp_path)
+    local = str(tmp_path / "x.bam")
+    _write_bam(local)
     bai = index_bam(local)
     store.buckets.add("bkt")
     with open(local, "rb") as f:
@@ -104,8 +102,8 @@ def test_s3_indexed_region_query(s3env, tmp_path):
     with open(bai, "rb") as f:
         store.objects[("bkt", "bam/x.bam.bai")] = f.read()
 
-    remote_splits = plan_bam_query_splits("s3://bkt/bam/x.bam", "chr1:1-100000")
-    local_splits = plan_bam_query_splits(local, "chr1:1-100000")
+    remote_splits = plan_region_splits("s3://bkt/bam/x.bam", "chr1:1-100000")
+    local_splits = plan_region_splits(local, "chr1:1-100000")
     assert len(remote_splits) == len(local_splits) > 0
     got = sorted(
         r["name"] for s in remote_splits for r in _parse_bam_split(s)

@@ -110,7 +110,8 @@ class TestStreaming:
     def test_state_partitions_do_not_change_drain_rows(self, spark):
         """Pins the r14 invariant scaled_state_partitions relies on: the
         emitted row multiset is identical at any state partition count
-        (here 2 vs the session default 4) for a stateful drain."""
+        (here 2 vs the session default) for a stateful drain."""
+        default_parts = spark.conf.get("spark.sql.shuffle.partitions")
         stream = read_events_stream(spark, SF_DIR)
         a = sorted(
             map(tuple, run_to_memory_sink(
@@ -126,7 +127,7 @@ class TestStreaming:
         )
         assert a == b
         # the scoped conf was restored
-        assert spark.conf.get("spark.sql.shuffle.partitions") == "4"
+        assert spark.conf.get("spark.sql.shuffle.partitions") == default_parts
 
     def test_stream_dedup(self, spark):
         stream = read_events_stream(spark, SF_DIR)

@@ -25,15 +25,15 @@ import pytest
 
 import __spark_entry__ as entrymod
 
-# the four entries expected OUTSIDE the window this round (round 14:
-# q48/q50/q51/q52 were driver-greened in round 13, so they sit out while
-# q103–q106 — last witnessed r12 — rotate back in for their next driver
-# witnessing)
+# the four entries expected OUTSIDE the window this round (pin 14:
+# q103–q106 were driver-greened in CORRECTNESS_r14, so they sit out while
+# q48/q50/q51/q52 — last witnessed r13 — rotate back in for their next
+# driver witnessing)
 PINNED_TAIL = (
-    "q48_bed_roundtrip",
-    "q50_hmm_roundtrip",
-    "q51_genbank_roundtrip",
-    "q52_mzml_roundtrip",
+    "q103_bloom_crawl",
+    "q104_media_dedup",
+    "q105_bpe_pipeline",
+    "q106_quality_classifier",
 )
 # the full declared registry — membership pin, order-independent
 PINNED_ALL = frozenset({
