@@ -18,6 +18,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from exon_duckdb_spark.operators.text import tokens
+from exon_duckdb_spark.session import scoped_conf
 
 __all__ = [
     "word_ngrams",
@@ -974,10 +975,7 @@ def logistic_regression_train(
     # latency × iters. Interleaved A/B (7 alternations, sf0.1 6-iter
     # chain): 2.41 s AQE-on vs 2.21 s AQE-off, every pair in favor;
     # trajectory bit-identical (AQE never changes values).
-    aqe_key = "spark.sql.adaptive.enabled"
-    aqe_old = spark.conf.get(aqe_key)
-    spark.conf.set(aqe_key, "false")
-    try:
+    with scoped_conf(spark, **{"spark.sql.adaptive.enabled": "false"}):
         for _ in range(iters):
             args = {"b": b}
             for j, wj in enumerate(w):
@@ -989,8 +987,6 @@ def logistic_regression_train(
             ]
             b = _round_py(b - lr * float(row["gb"]), digits)
             traj.append((list(w), b))
-    finally:
-        spark.conf.set(aqe_key, aqe_old)
     return traj
 
 

@@ -17,6 +17,8 @@ weakening the engine-wide error contract.
 from __future__ import annotations
 
 import os
+from collections.abc import Iterator
+from contextlib import contextmanager
 
 from pyspark.sql import SparkSession
 
@@ -134,6 +136,26 @@ def cluster_conf(
         # operators (alignment slabs, media decode): 10k rows/batch in
         # get_session already caps decode batches; keep it.
     }
+
+
+@contextmanager
+def scoped_conf(spark: SparkSession, **kv: str) -> Iterator[None]:
+    """Set session confs for the ``with`` body, then restore what was there
+    before — also when the body raises; a key that was unset is unset again.
+    Keys with dots pass as ``**{"spark.sql.x": "v"}``. Session confs are
+    session-global: a query another thread starts inside the body sees
+    these values too."""
+    old = {k: spark.conf.get(k, None) for k in kv}
+    try:
+        for k, v in kv.items():
+            spark.conf.set(k, v)
+        yield
+    finally:
+        for k, v in old.items():
+            if v is None:
+                spark.conf.unset(k)
+            else:
+                spark.conf.set(k, v)
 
 
 def load_tables(spark: SparkSession, sf_dir: str) -> dict[str, "object"]:

@@ -7,12 +7,14 @@ Implementation: BGZF → BCF2 header text (reuses the VCF INFO header
 machinery) → binary records decoded with the spec's typed-value encoding.
 The INFO struct is header-driven exactly like VCF.
 
-**Byte-splittable** like BAM (sources/bgzf.py): splits align to
-chain-verified BGZF blocks and resync on a validated chain of BCF records
-(l_shared/l_indiv bounds, contig id in range, sane pos/rlen/counts). A
-split owns records whose containing block starts in [start, end).
-``bcf_query`` prunes splits to the ``.csi`` index's chunk ranges when the
-index exists, with the exact region filter applied after.
+**Byte-splittable.** Splits run the BGZF record walker
+(:func:`~exon_duckdb_spark.sources.bgzf.walk_records`); this module gives
+it the BCF header-prefix parser, the 8-byte ``l_shared``/``l_indiv``
+record prefix (the genotype block is skipped, not read) and the
+field-sanity check that resync chains records on (l_shared/l_indiv
+bounds, contig id in range, sane pos/rlen/counts). ``bcf_query`` prunes
+splits to the ``.csi`` index's chunk ranges when the index exists, with
+the exact region filter applied after.
 """
 
 from __future__ import annotations
@@ -22,13 +24,12 @@ from collections.abc import Iterator
 
 from pyspark.sql import DataFrame, SparkSession
 
+from exon_duckdb_spark.sources.bgzf import BGZF_SPLIT_BYTES, BgzfBuf, open_stream, walk_records
 from exon_duckdb_spark.sources.indexes import region_query
-from exon_duckdb_spark.sources.splits import FileSplit, open_maybe_compressed
-from exon_duckdb_spark.sources.vcf import vcf_span
+from exon_duckdb_spark.sources.splits import FileSplit, expand_paths
+from exon_duckdb_spark.sources.vcf import _INFO_RE, vcf_span
 
 __all__ = ["read_bcf", "bcf_query"]
-
-DEFAULT_BCF_SPLIT_BYTES = 64 * 1024 * 1024
 
 
 def _decode_typed(buf: bytes, off: int):
@@ -71,123 +72,65 @@ def _decode_typed(buf: bytes, off: int):
     return list(vals), off
 
 
-def _parse_bcf_stream(split: FileSplit, info_meta, contigs) -> Iterator[dict]:
-    """Sequential whole-stream parse (plain-gzip BCF)."""
-    with open_maybe_compressed(split.path, "gzip") as f:
-        magic = f.read(5)
-        if magic != b"BCF\x02\x02" and not magic.startswith(b"BCF"):
-            raise ValueError(f"{split.path}: not a BCF file")
-        (l_text,) = struct.unpack("<I", f.read(4))
-        f.read(l_text)  # header text already parsed driver-side
-        while True:
-            head = f.read(8)
-            if len(head) < 8:
-                return
-            l_shared, l_indiv = struct.unpack("<II", head)
-            shared = f.read(l_shared)
-            f.read(l_indiv)  # FORMAT/genotype block — exposed as raw count only
-            yield _decode_site(shared, info_meta, contigs)
+def _read_header(buf: BgzfBuf) -> tuple[bytes, int]:
+    """Parse the BCF magic and ``l_text`` prefix at decompressed position 0;
+    returns (header text, absolute position of the first record)."""
+    head = buf.get(0, 9)
+    if head is None or not head.startswith(b"BCF"):
+        raise ValueError("not a BCF file")
+    (l_text,) = struct.unpack_from("<I", head, 5)
+    text = buf.get(9, l_text)
+    if text is None:
+        raise ValueError("truncated BCF header")
+    return text, 9 + l_text
 
 
-def _plausible_bcf_record(buf, pos: int, n_contigs: int) -> int | None:
-    """Total length of a plausible BCF record at decompressed pos, or None.
-    Field-sanity checks per the BCF2 spec."""
-    head = buf.get(pos, 32)
-    if head is None:
-        return None
-    l_shared, l_indiv = struct.unpack_from("<II", head, 0)
-    if not (24 <= l_shared <= 1 << 22) or l_indiv > 1 << 22:
-        return None
-    rid, p0, rlen = struct.unpack_from("<iii", head, 8)
-    if not (0 <= rid < n_contigs):
-        return None
-    if not (-1 <= p0 < 2**31 - 2) or not (0 <= rlen < 2**29):
-        return None
-    n_allele_info = struct.unpack_from("<I", head, 24)[0]
-    n_allele, n_info = n_allele_info >> 16, n_allele_info & 0xFFFF
-    if n_allele > 1000 or n_info > 5000:
-        return None
-    n_fmt_sample = struct.unpack_from("<I", head, 28)[0]
-    if (n_fmt_sample >> 24) > 100:  # n_fmt
-        return None
-    return 8 + l_shared + l_indiv
+class _BcfRecords:
+    """BCF framing for :func:`~exon_duckdb_spark.sources.bgzf.walk_records`:
+    an 8-byte ``l_shared``/``l_indiv`` prefix, the shared part (the
+    payload), then the per-sample genotype block, which is skipped."""
 
+    prefix = 8
 
-def _resync_bcf(buf, start_abs: int, end_coffset: float, n_contigs: int) -> int | None:
-    """First position at-or-after start_abs beginning a chain of two
-    plausible records (or one ending at EOF), owned by this split."""
-    pos = start_abs
-    while True:
-        if buf.get(pos, 32) is None:
+    def __init__(self, n_contigs: int):
+        self.n_contigs = n_contigs
+
+    @staticmethod
+    def header(buf: BgzfBuf) -> int:
+        return _read_header(buf)[1]
+
+    @staticmethod
+    def frame(head: bytes) -> tuple[int, int]:
+        return struct.unpack("<II", head)
+
+    def plausible(self, buf: BgzfBuf, pos: int) -> int | None:
+        """Total length of a plausible BCF record at decompressed pos, or
+        None. Field-sanity checks per the BCF2 spec."""
+        head = buf.get(pos, 32)
+        if head is None:
             return None
-        if buf.block_coffset_of(pos) >= end_coffset:
+        l_shared, l_indiv = struct.unpack_from("<II", head, 0)
+        if not (24 <= l_shared <= 1 << 22) or l_indiv > 1 << 22:
             return None
-        ln = _plausible_bcf_record(buf, pos, n_contigs)
-        if ln is not None:
-            if _plausible_bcf_record(buf, pos + ln, n_contigs) is not None:
-                return pos
-            # chain broken: only accept if the candidate ends EXACTLY at
-            # EOF — a garbage length that merely overshoots the file must
-            # not win (it would swallow the real records behind it)
-            if buf.get(pos + ln, 1) is None and pos + ln == buf.end_abs():
-                return pos
-        pos += 1
+        rid, p0, rlen = struct.unpack_from("<iii", head, 8)
+        if not (0 <= rid < self.n_contigs):
+            return None
+        if not (-1 <= p0 < 2**31 - 2) or not (0 <= rlen < 2**29):
+            return None
+        n_allele_info = struct.unpack_from("<I", head, 24)[0]
+        n_allele, n_info = n_allele_info >> 16, n_allele_info & 0xFFFF
+        if n_allele > 1000 or n_info > 5000:
+            return None
+        n_fmt_sample = struct.unpack_from("<I", head, 28)[0]
+        if (n_fmt_sample >> 24) > 100:  # n_fmt
+            return None
+        return 8 + l_shared + l_indiv
 
 
 def _parse_bcf_split(split: FileSplit, info_meta: dict[int, tuple[str, str, str]],
                      contigs: list[str]) -> Iterator[dict]:
-    from exon_duckdb_spark.sources.bgzf import BgzfBuf, block_at, find_block
-    from exon_duckdb_spark.sources.splits import file_size as _fsize
-    from exon_duckdb_spark.sources.splits import open_binary
-
-    file_size = _fsize(split.path)
-    end = split.start + split.length
-    with open_binary(split.path) as f:
-        if block_at(f, 0, file_size) is None:
-            if split.start == 0:
-                yield from _parse_bcf_stream(split, info_meta, contigs)
-            return
-
-        header_buf = BgzfBuf(f, 0, file_size)
-        magic = header_buf.get(0, 5)
-        if magic is None or not magic.startswith(b"BCF"):
-            raise ValueError(f"{split.path}: not a BCF file")
-        (l_text,) = struct.unpack("<I", header_buf.get(5, 4))
-        first_rec_abs = 9 + l_text
-
-        if split.start == 0:
-            buf, rec_abs = header_buf, first_rec_abs
-        else:
-            anchor = find_block(f, split.start, file_size)
-            if anchor is None or anchor >= end:
-                return
-            # same header-block handling as BAM: if the anchor block still
-            # holds header text, seed the scan right after the header
-            start_scan = 0
-            header_end_coffset = (
-                header_buf.block_coffset_of(first_rec_abs - 1) if first_rec_abs > 0 else -1
-            )
-            if anchor <= header_end_coffset and anchor in header_buf.mark_coffsets:
-                idx = header_buf.mark_coffsets.index(anchor)
-                start_scan = max(first_rec_abs - header_buf.marks[idx], 0)
-            buf = BgzfBuf(f, anchor, file_size)
-            rec_abs = _resync_bcf(buf, start_scan, end, len(contigs))
-            if rec_abs is None:
-                return
-
-        while True:
-            head = buf.get(rec_abs, 8)
-            if head is None:
-                return
-            if buf.block_coffset_of(rec_abs) >= end:
-                return  # next split owns this record
-            l_shared, l_indiv = struct.unpack("<II", head)
-            shared = buf.get(rec_abs + 8, l_shared)
-            if shared is None:
-                return
-            yield _decode_site(shared, info_meta, contigs)
-            rec_abs += 8 + l_shared + l_indiv
-            buf.drop_before(rec_abs)
+    for shared, _, _ in walk_records(split, _BcfRecords(len(contigs))):
+        yield _decode_site(shared, info_meta, contigs)
 
 
 def _decode_site(buf: bytes, info_meta, contigs) -> dict:
@@ -277,22 +220,14 @@ def bcf_bind(path: str):
     """Bind-time BCF header read: (contigs, IDX→(name, number, type) info
     dictionary, info StructFields, full scan schema). Shared by read_bcf
     and the SQL UDTF surface."""
-    import gzip as _gzip
     import re as _re
 
     from pyspark.sql import types as T
 
     from exon_duckdb_spark.sources.schemas import VCF_FIXED_FIELDS
-    from exon_duckdb_spark.sources.splits import expand_paths
-    from exon_duckdb_spark.sources.splits import open_binary as _ob
-    from exon_duckdb_spark.sources.vcf import _INFO_RE
 
-    f0 = expand_paths(path)[0]
-    with _gzip.GzipFile(fileobj=_ob(f0)) as fh:
-        if fh.read(5)[:3] != b"BCF":
-            raise ValueError(f"{f0}: not a BCF file")
-        (l_text,) = struct.unpack("<I", fh.read(4))
-        text = fh.read(l_text).decode("utf-8", "replace")
+    with open_stream(expand_paths(path)[0]) as buf:
+        text = _read_header(buf)[0].decode("utf-8", "replace")
 
     contigs: list[str] = []
     info_meta: dict[int, tuple[str, str, str]] = {}
@@ -364,7 +299,7 @@ def bcf_bind(path: str):
 def read_bcf(
     spark: SparkSession,
     path: str,
-    split_bytes: int = DEFAULT_BCF_SPLIT_BYTES,
+    split_bytes: int = BGZF_SPLIT_BYTES,
     _splits=None,
 ) -> DataFrame:
     """BCF records with header-driven INFO struct (same shape as read_vcf,

@@ -1,10 +1,19 @@
-"""BGZF block layer shared by the BAM reader and BGZF text formats
-(.vcf.gz written by bgzip).
+"""BGZF block layer shared by the BAM and BCF readers, the index builders
+and BGZF text formats (.vcf.gz written by bgzip).
 
 BGZF (SAM spec §4.1) is a series of independently-deflated gzip members
 whose compressed size is recorded in a BC extra subfield — so a byte range
 of the COMPRESSED file can align itself to a block boundary and decompress
 just its part, which is what makes these formats cluster-splittable.
+
+BAM and BCF share one framing — a binary header, then length-prefixed
+records — and one record walker, :func:`walk_records`: a split anchors on
+the first chain-verified block at or after its start, resyncs on a chain
+of two plausible records, and owns the records that start in blocks whose
+compressed offset lies in [start, end). The index builders walk the same
+records from offset 0 (:func:`owned_records`) and take virtual offsets from
+:meth:`BgzfBuf.voffset`. Files that are not BGZF are read sequentially by
+the first split.
 
 Also here: the virtual-offset helpers that turn index chunks into a pruned
 split list (sources/indexes.py plans region queries with them).
@@ -12,16 +21,25 @@ split list (sources/indexes.py plans region queries with them).
 
 from __future__ import annotations
 
+import math
 import struct
 import zlib
-from bisect import bisect_right
+from bisect import bisect_left, bisect_right
+from collections.abc import Iterator
+from contextlib import contextmanager
 
-from exon_duckdb_spark.sources.splits import FileSplit
+from exon_duckdb_spark.sources.splits import (
+    FileSplit,
+    file_size,
+    open_binary,
+    open_maybe_compressed,
+)
 
 BGZF_MAGIC = b"\x1f\x8b\x08\x04"
 
 __all__ = [
     "BGZF_MAGIC",
+    "BGZF_SPLIT_BYTES",
     "bgzf_bsize",
     "bgzf_block",
     "bgzf_compress",
@@ -29,10 +47,17 @@ __all__ = [
     "find_block",
     "is_bgzf",
     "BgzfBuf",
+    "open_stream",
+    "owned_records",
+    "walk_records",
     "parse_bgzf_lines_split",
     "merge_voffset_ranges",
     "prune_splits_to_ranges",
 ]
+
+# Split size of BAM/BCF scans and of index-pruned region queries, so also
+# the granularity at which an index can prune.
+BGZF_SPLIT_BYTES = 64 * 1024 * 1024
 
 DEFAULT_BGZF_BLOCK_BYTES = 60_000  # < 64 KiB decompressed, the spec ceiling
 
@@ -114,8 +139,6 @@ def find_block(f, start: int, file_size: int) -> int | None:
 
 
 def is_bgzf(path: str) -> bool:
-    from exon_duckdb_spark.sources.splits import file_size, open_binary
-
     size = file_size(path)
     with open_binary(path) as f:
         return block_at(f, 0, size) is not None
@@ -133,12 +156,10 @@ class BgzfBuf:
         self.base = 0  # absolute decompressed index of buf[0]
         self.marks: list[int] = []  # abs decompressed start per block
         self.mark_coffsets: list[int] = []
-        self.eof = False
 
     def _load_block(self) -> bool:
         while True:
             if self.next_coffset >= self.file_size:
-                self.eof = True
                 return False
             bsize = block_at(self.f, self.next_coffset, self.file_size)
             if bsize is None:
@@ -184,10 +205,18 @@ class BgzfBuf:
         i = bisect_right(self.marks, abs_pos) - 1
         return 0 <= i < len(self.marks) and self.marks[i] == abs_pos
 
+    def voffset(self, abs_pos: int) -> int:
+        """Virtual offset (block coffset << 16 | offset in the block) of a
+        decompressed position. A position at a block boundary belongs to
+        the next block at offset 0, so that block is loaded first; the end
+        of the payload belongs to the last block."""
+        while abs_pos >= self.base + len(self.buf) and self._load_block():
+            pass
+        i = bisect_right(self.marks, abs_pos) - 1
+        return (self.mark_coffsets[i] << 16) | (abs_pos - self.marks[i])
+
     def first_block_coffset_at_or_after(self, coffset: int) -> int | None:
         """First (non-empty) loaded block with compressed offset >= coffset."""
-        from bisect import bisect_left
-
         i = bisect_left(self.mark_coffsets, coffset)
         return self.mark_coffsets[i] if i < len(self.mark_coffsets) else None
 
@@ -210,6 +239,121 @@ class BgzfBuf:
             self.base = abs_pos
 
 
+class _StreamBuf(BgzfBuf):
+    """A BgzfBuf over a sequential decompressed stream (plain gzip, or no
+    compression). There are no blocks to seek to, so every position
+    reports compressed offset 0."""
+
+    def _load_block(self) -> bool:
+        data = self.f.read(1 << 16)
+        if not data:
+            return False
+        self.marks.append(self.base + len(self.buf))
+        self.mark_coffsets.append(0)
+        self.buf.extend(data)
+        return True
+
+
+@contextmanager
+def open_stream(path: str, compression: str | None = None) -> Iterator[BgzfBuf]:
+    """Sequential decompressed view of a whole file from its first byte.
+    ``compression`` None sniffs the gzip magic, so gzip (BGZF included) and
+    uncompressed files both read."""
+    if compression is None:
+        with open_binary(path) as probe:
+            compression = "gzip" if probe.read(2) == b"\x1f\x8b" else None
+    with open_maybe_compressed(path, compression) as f:
+        yield _StreamBuf(f, 0, 0)
+
+
+def owned_records(buf: BgzfBuf, pos: int, end: float, fmt) -> Iterator[tuple[bytes, int, int]]:
+    """(payload, start, next) of each record from ``pos`` on that starts in
+    a block with compressed offset < ``end``; ``next`` is where the
+    following record starts. The last owned record reads past ``end`` until
+    it closes. Stops at EOF or at a truncated record."""
+    prefix, frame = fmt.prefix, fmt.frame
+    get, coffset_of, drop_before = buf.get, buf.block_coffset_of, buf.drop_before
+    while True:
+        head = get(pos, prefix)
+        if head is None:
+            return
+        if coffset_of(pos) >= end:
+            return  # the next split owns this record
+        n, skip = frame(head)
+        payload = get(pos + prefix, n)
+        if payload is None:
+            return
+        nxt = pos + prefix + n + skip
+        yield payload, pos, nxt
+        pos = nxt
+        drop_before(pos)
+
+
+def _resync_pos(buf: BgzfBuf, pos: int, end: int, fmt) -> int | None:
+    """First position at-or-after pos that begins a chain of two plausible
+    records (or one ending at EOF), in a block this split owns."""
+    while buf.get(pos, fmt.prefix) is not None:
+        if buf.block_coffset_of(pos) >= end:
+            return None  # past our range — the next split owns it
+        ln = fmt.plausible(buf, pos)
+        if ln is not None:
+            if fmt.plausible(buf, pos + ln) is not None:
+                return pos
+            # chain broken: accept only a candidate ending EXACTLY at EOF —
+            # a garbage length merely overshooting the file must not win
+            # (it would swallow the real records behind it)
+            if buf.get(pos + ln, 1) is None and pos + ln == buf.end_abs():
+                return pos
+        pos += 1
+    return None
+
+
+def walk_records(split: FileSplit, fmt) -> Iterator[tuple[bytes, int, int]]:
+    """(payload, start, next) of each length-prefixed record this split
+    owns (:func:`owned_records`), for a binary header followed by records.
+
+    ``fmt`` describes the format:
+
+    - ``header(buf)`` parses the header at position 0 and returns the first
+      record's position;
+    - ``prefix`` is the length prefix's width, and ``frame(prefix_bytes)``
+      returns (payload length, bytes skipped after the payload);
+    - ``plausible(buf, pos)`` returns the total length of a plausible
+      record at ``pos``, or None.
+
+    A file that is not BGZF cannot split: the first split reads the whole
+    stream and the others yield nothing.
+    """
+    size = file_size(split.path)
+    end = split.start + split.length
+    with open_binary(split.path) as f:
+        if block_at(f, 0, size) is None:
+            if split.start == 0:
+                with open_stream(split.path, split.compression) as buf:
+                    yield from owned_records(buf, fmt.header(buf), math.inf, fmt)
+            return
+        header_buf = BgzfBuf(f, 0, size)
+        first = fmt.header(header_buf)
+        if split.start == 0:
+            yield from owned_records(header_buf, first, end, fmt)
+            return
+        anchor = find_block(f, split.start, size)
+        if anchor is None or anchor >= end:
+            return
+        # If the anchor block still holds header bytes, the header parse
+        # knows where the first record starts — resync from there instead
+        # of at the block start, so header bytes can't masquerade as a
+        # record and the first record in a shared header/record block
+        # isn't orphaned.
+        if anchor <= header_buf.block_coffset_of(first - 1):
+            buf, pos = header_buf, first
+        else:
+            buf, pos = BgzfBuf(f, anchor, size), 0
+        pos = _resync_pos(buf, pos, end, fmt)
+        if pos is not None:
+            yield from owned_records(buf, pos, end, fmt)
+
+
 def parse_bgzf_lines_split(split: FileSplit):
     """Lines of a BGZF text file owned by this compressed byte range —
     the TextInputFormat convention lifted to blocks:
@@ -223,19 +367,16 @@ def parse_bgzf_lines_split(split: FileSplit):
 
     Yields {"value": line} with the newline stripped, file order preserved.
     """
-    from exon_duckdb_spark.sources.splits import file_size as _fsize
-    from exon_duckdb_spark.sources.splits import open_binary
-
-    file_size = _fsize(split.path)
+    size = file_size(split.path)
     end = split.start + split.length
     with open_binary(split.path) as f:
         if split.start == 0:
             anchor = 0
         else:
-            anchor = find_block(f, split.start, file_size)
+            anchor = find_block(f, split.start, size)
             if anchor is None or anchor >= end:
                 return
-        buf = BgzfBuf(f, anchor, file_size)
+        buf = BgzfBuf(f, anchor, size)
         if split.start == 0:
             pos = 0
             if buf.get(0, 1) is None:

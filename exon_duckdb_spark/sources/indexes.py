@@ -12,27 +12,29 @@ reference uses these indexes the same way in its region-query TVFs
 (rust/src/bam_query_reader.rs:63, vcf_query_reader.rs:31-86).
 
 Building an index is a sequential walk of one file — the cost profile of
-``samtools index`` — so it runs driver-side. Only bins are emitted (no
-linear index or loffset hints): the readers bound both chunk ends from the
-bins alone, and an empty linear index is valid per spec.
+``samtools index`` — so it runs driver-side, streaming the BGZF blocks: BAM
+and BCF records through the same walker the scans use
+(:func:`~exon_duckdb_spark.sources.bgzf.owned_records`), VCF lines through
+the same block buffer. Only bins are emitted (no linear index or loffset
+hints): the readers bound both chunk ends from the bins alone, and an
+empty linear index is valid per spec.
 """
 
 from __future__ import annotations
 
 import gzip
 import io
+import math
 import struct
-import zlib
-from bisect import bisect_right
 
 from pyspark.sql import DataFrame, SparkSession
 
 from exon_duckdb_spark.sources.bgzf import (
-    BGZF_MAGIC,
+    BGZF_SPLIT_BYTES,
     BgzfBuf,
-    bgzf_bsize,
     is_bgzf,
     merge_voffset_ranges,
+    owned_records,
     prune_splits_to_ranges,
 )
 from exon_duckdb_spark.sources.splits import (
@@ -54,9 +56,6 @@ __all__ = [
     "plan_region_splits",
     "region_query",
 ]
-
-# Split size of an index-pruned query: the pruning granularity.
-QUERY_SPLIT_BYTES = 64 * 1024 * 1024
 
 Bins = dict[int, list[tuple[int, int]]]
 
@@ -85,35 +84,6 @@ def reg2bins(beg: int, end: int, min_shift: int = 14, depth: int = 5) -> list[in
     return bins
 
 
-class _BgzfPayload:
-    """Sequential whole-file BGZF decompress with voffset lookup."""
-
-    def __init__(self, path: str):
-        self.payload = bytearray()
-        self.ustarts: list[int] = []
-        self.coffsets: list[int] = []
-        with open_binary(path) as f:
-            data = f.read()
-        pos = 0
-        while pos < len(data):
-            if data[pos : pos + 4] != BGZF_MAGIC:
-                raise ValueError(f"{path}: not BGZF at offset {pos}")
-            bsize = bgzf_bsize(data[pos : pos + 64])
-            if bsize is None:
-                raise ValueError(f"{path}: corrupt BGZF header at {pos}")
-            chunk = zlib.decompress(data[pos : pos + bsize], wbits=31)
-            if chunk:
-                self.ustarts.append(len(self.payload))
-                self.coffsets.append(pos)
-                self.payload.extend(chunk)
-            pos += bsize
-
-    def voffset(self, upos: int) -> int:
-        i = bisect_right(self.ustarts, upos) - 1
-        i = max(i, 0)
-        return (self.coffsets[i] << 16) | (upos - self.ustarts[i])
-
-
 def _pack_bins(bins: Bins, csi: bool) -> bytes:
     out = struct.pack("<i", len(bins))
     for bin_id in sorted(bins):
@@ -136,44 +106,28 @@ def _add_chunk(bins: dict, bin_id: int, vbeg: int, vend: int) -> None:
         chunks.append((vbeg, vend))
 
 
-_REF_CONSUMING = {0, 2, 3, 7, 8}  # M, D, N, =, X
-
-
 def index_bam(path: str, out_path: str | None = None) -> str:
     """Build a .bai for a BGZF BAM file (mapped records only, bins without
     linear index). Returns the index path."""
-    pay = _BgzfPayload(path)
-    buf = bytes(pay.payload)
-    if buf[:4] != b"BAM\x01":
-        raise ValueError(f"{path}: not a BAM file")
-    (l_text,) = struct.unpack_from("<i", buf, 4)
-    pos = 8 + l_text
-    (n_ref,) = struct.unpack_from("<i", buf, pos)
-    pos += 4
-    for _ in range(n_ref):
-        (l_name,) = struct.unpack_from("<i", buf, pos)
-        pos += 4 + l_name + 4
-    refs: list[Bins] = [{} for _ in range(n_ref)]
-    while pos + 4 <= len(buf):
-        (block_size,) = struct.unpack_from("<i", buf, pos)
-        rec_end = pos + 4 + block_size
-        ref_id, p0, l_read_name, _mq, _bin, n_cigar = struct.unpack_from(
-            "<iiBBHH", buf, pos + 4
-        )
-        if ref_id >= 0 and p0 >= 0:
-            cig_off = pos + 4 + 32 + l_read_name
-            reflen = 0
-            for c in struct.unpack_from(f"<{n_cigar}I", buf, cig_off):
-                if (c & 0xF) in _REF_CONSUMING:
-                    reflen += c >> 4
-            end0 = p0 + max(reflen, 1)
-            _add_chunk(
-                refs[ref_id], reg2bin(p0, end0), pay.voffset(pos), pay.voffset(rec_end)
-            )
-        pos = rec_end
+    from exon_duckdb_spark.sources.bam import _REF_CONSUMING, _BamRecords
+
+    fmt = _BamRecords()
+    with open_binary(path) as f:
+        buf = BgzfBuf(f, 0, file_size(path))
+        first = fmt.header(buf)
+        refs: list[Bins] = [{} for _ in fmt.refs]
+        for rec, beg, nxt in owned_records(buf, first, math.inf, fmt):
+            ref_id, p0, l_read_name, _mq, _bin, n_cigar = struct.unpack_from("<iiBBHH", rec, 0)
+            if ref_id >= 0 and p0 >= 0:
+                reflen = 0
+                for c in struct.unpack_from(f"<{n_cigar}I", rec, 32 + l_read_name):
+                    if (c & 0xF) in _REF_CONSUMING:
+                        reflen += c >> 4
+                end0 = p0 + max(reflen, 1)
+                _add_chunk(refs[ref_id], reg2bin(p0, end0), buf.voffset(beg), buf.voffset(nxt))
     out = out_path or path + ".bai"
     with open(out, "wb") as f:
-        f.write(b"BAI\x01" + struct.pack("<i", n_ref))
+        f.write(b"BAI\x01" + struct.pack("<i", len(refs)))
         for bins in refs:
             f.write(_pack_bins(bins, csi=False))
             f.write(struct.pack("<i", 0))  # empty linear index
@@ -182,35 +136,36 @@ def index_bam(path: str, out_path: str | None = None) -> str:
 
 def index_vcf(path: str, out_path: str | None = None) -> str:
     """Build a tabix .tbi for a bgzip'd VCF. Returns the index path."""
-    pay = _BgzfPayload(path)
-    buf = bytes(pay.payload)
     names: list[str] = []
     name_ids: dict[str, int] = {}
     refs: list[Bins] = []
-    pos = 0
-    while pos < len(buf):
-        nl = buf.find(b"\n", pos)
-        line_end = len(buf) if nl < 0 else nl + 1
-        line = buf[pos : line_end if nl < 0 else nl]
-        if line and not line.startswith(b"#"):
-            fields = line.split(b"\t")
-            chrom = fields[0].decode()
-            p1 = int(fields[1])
-            ref = fields[3] if len(fields) > 3 else b"N"
-            rid = name_ids.get(chrom)
-            if rid is None:
-                rid = len(names)
-                name_ids[chrom] = rid
-                names.append(chrom)
-                refs.append({})
-            beg0 = p1 - 1
-            _add_chunk(
-                refs[rid],
-                reg2bin(beg0, beg0 + max(len(ref), 1)),
-                pay.voffset(pos),
-                pay.voffset(line_end),
-            )
-        pos = line_end
+    with open_binary(path) as f:
+        buf = BgzfBuf(f, 0, file_size(path))
+        pos = 0
+        while buf.get(pos, 1) is not None:
+            nl = buf.find(b"\n", pos)
+            line_end = buf.end_abs() if nl < 0 else nl + 1
+            line = buf.get(pos, line_end - pos).rstrip(b"\n")
+            if line and not line.startswith(b"#"):
+                fields = line.split(b"\t")
+                chrom = fields[0].decode()
+                p1 = int(fields[1])
+                ref = fields[3] if len(fields) > 3 else b"N"
+                rid = name_ids.get(chrom)
+                if rid is None:
+                    rid = len(names)
+                    name_ids[chrom] = rid
+                    names.append(chrom)
+                    refs.append({})
+                beg0 = p1 - 1
+                _add_chunk(
+                    refs[rid],
+                    reg2bin(beg0, beg0 + max(len(ref), 1)),
+                    buf.voffset(pos),
+                    buf.voffset(line_end),
+                )
+            pos = line_end
+            buf.drop_before(pos)
     nm = b"".join(n.encode() + b"\x00" for n in names)
     out = out_path or path + ".tbi"
     body = b"TBI\x01" + struct.pack(
@@ -228,26 +183,22 @@ def index_bcf(
     path: str, out_path: str | None = None, min_shift: int = 14, depth: int = 5
 ) -> str:
     """Build a .csi for a BGZF BCF file. Returns the index path."""
-    pay = _BgzfPayload(path)
-    buf = bytes(pay.payload)
-    if buf[:3] != b"BCF":
-        raise ValueError(f"{path}: not a BCF file")
-    (l_text,) = struct.unpack_from("<I", buf, 5)
-    pos = 9 + l_text
-    n_contigs = buf[9 : 9 + l_text].count(b"##contig=<ID=")
-    refs: list[Bins] = [{} for _ in range(n_contigs)]
-    while pos + 8 <= len(buf):
-        l_shared, l_indiv = struct.unpack_from("<II", buf, pos)
-        rec_end = pos + 8 + l_shared + l_indiv
-        rid, p0, rlen = struct.unpack_from("<iii", buf, pos + 8)
-        if 0 <= rid < n_contigs and p0 >= 0:
-            _add_chunk(
-                refs[rid],
-                reg2bin(p0, p0 + max(rlen, 1), min_shift, depth),
-                pay.voffset(pos),
-                pay.voffset(rec_end),
-            )
-        pos = rec_end
+    from exon_duckdb_spark.sources.bcf import _BcfRecords, _read_header
+
+    with open_binary(path) as f:
+        buf = BgzfBuf(f, 0, file_size(path))
+        text, first = _read_header(buf)
+        n_contigs = text.count(b"##contig=<ID=")
+        refs: list[Bins] = [{} for _ in range(n_contigs)]
+        for rec, beg, nxt in owned_records(buf, first, math.inf, _BcfRecords(n_contigs)):
+            rid, p0, rlen = struct.unpack_from("<iii", rec, 0)
+            if 0 <= rid < n_contigs and p0 >= 0:
+                _add_chunk(
+                    refs[rid],
+                    reg2bin(p0, p0 + max(rlen, 1), min_shift, depth),
+                    buf.voffset(beg),
+                    buf.voffset(nxt),
+                )
     out = out_path or path + ".csi"
     body = b"CSI\x01" + struct.pack("<3i", min_shift, depth, 0)
     body += struct.pack("<i", n_contigs)
@@ -304,21 +255,23 @@ def _sidecar(path: str) -> tuple[str, list[str] | None]:
     """(index suffix, contig names) of a BGZF file, by its payload magic:
     a BAM's .bai and a BCF's .csi count references in header order, so the
     names come from that header; a VCF's .tbi names its own sequences."""
-    from exon_duckdb_spark.sources.bam import _read_header
+    from exon_duckdb_spark.sources.bam import _BamRecords
     from exon_duckdb_spark.sources.bcf import bcf_bind
 
     with open_binary(path) as f:
         buf = BgzfBuf(f, 0, file_size(path))
         magic = buf.get(0, 4) or b""
         if magic == b"BAM\x01":
-            return ".bai", _read_header(buf)[0]
+            bam = _BamRecords()
+            bam.header(buf)
+            return ".bai", bam.refs
     if magic.startswith(b"BCF"):
         return ".csi", bcf_bind(path)[0]
     return ".tbi", None
 
 
 def plan_region_splits(
-    path: str, region: str, split_bytes: int = QUERY_SPLIT_BYTES
+    path: str, region: str, split_bytes: int = BGZF_SPLIT_BYTES
 ):
     """Splits a region query over a BAM, bgzip'd VCF or BCF must read.
 

@@ -21,6 +21,8 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
+from exon_duckdb_spark.session import scoped_conf
+
 __all__ = [
     "read_events_stream",
     "read_documents_stream",
@@ -508,7 +510,10 @@ def scaled_state_partitions(
     single = os.path.join(src_dir, pattern.replace("*", ""))
     if not total and os.path.isfile(single):
         total = os.path.getsize(single)
-    cap = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    try:
+        cap = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    except ValueError:  # a non-numeric platform value such as "auto"
+        cap = spark.sparkContext.defaultParallelism
     return max(1, min(cap, max(floor, -(-total // bytes_per_partition))))
 
 
@@ -550,11 +555,10 @@ def run_to_memory_sink(
                     spark.catalog.dropTempView(t.name)
                 except Exception:
                     pass  # concurrent drop / not a temp view: harmless
-    key = "spark.sql.shuffle.partitions"
-    old = spark.conf.get(key)
+    conf = {}
     if state_partitions is not None:
-        spark.conf.set(key, str(int(state_partitions)))
-    try:
+        conf["spark.sql.shuffle.partitions"] = str(int(state_partitions))
+    with scoped_conf(spark, **conf):
         q = (
             stream_df.writeStream.format("memory")
             .queryName(name)
@@ -563,9 +567,6 @@ def run_to_memory_sink(
             .start()
         )
         q.awaitTermination()
-    finally:
-        if state_partitions is not None:
-            spark.conf.set(key, old)
     return spark.sql(f"SELECT * FROM {name}")
 
 

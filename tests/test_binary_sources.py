@@ -41,10 +41,8 @@ def _bam_record(name: str, flag: int, ref_id: int, pos0: int, mapq: int,
     return struct.pack("<i", len(body)) + body
 
 
-@pytest.fixture(scope="module")
-def bam_file(tmp_path_factory):
-    d = tmp_path_factory.mktemp("bam")
-    p = d / "example.bam"
+def _example_bam() -> bytes:
+    """Uncompressed payload of the two-record golden BAM."""
     header = b"BAM\x01" + struct.pack("<i", 0)
     header += struct.pack("<i", 2)  # two references
     for rname, rlen in ((b"ref1", 1000), (b"chr1", 2_000_000)):
@@ -53,8 +51,14 @@ def bam_file(tmp_path_factory):
     recs = _bam_record("ref1_grp1_p001", 99, 0, 0, 0, [(10, 0)], "CGAGCTCGGT", [0] * 10)
     recs += _bam_record("chr1_read", 0, 1, 999, 60, [(55, 0), (13394, 3), (21, 0)],
                         "ACGT", [30] * 4)
+    return header + recs
+
+
+@pytest.fixture(scope="module")
+def bam_file(tmp_path_factory):
+    p = tmp_path_factory.mktemp("bam") / "example.bam"
     with gzip.open(p, "wb") as f:
-        f.write(header + recs)
+        f.write(_example_bam())
     return str(p)
 
 
@@ -231,6 +235,14 @@ class TestBam:
         assert r0["reference"] == "chr1"
         assert r0["cigar"] == "55M13394N21M"
         assert r0["start"] == 1000 and r0["end"] == 1000 + 55 + 13394 + 21 - 1
+
+    def test_golden_uncompressed(self, spark, bam_file, tmp_path):
+        """Raw ``BAM\\x01`` bytes with no gzip layer read like the gzip file."""
+        p = tmp_path / "raw.bam"
+        p.write_bytes(_example_bam())
+        got = read_bam(spark, str(p)).orderBy("name").collect()
+        assert got == read_bam(spark, bam_file).orderBy("name").collect()
+        assert len(got) == 2
 
     def test_bam_query_region(self, spark, bam_file):
         assert bam_query(spark, bam_file, "chr1").count() == 1

@@ -107,6 +107,20 @@ class TestStreaming:
         # missing source: never returns < 1
         assert scaled_state_partitions(spark, "/nonexistent_dir_xyz") >= 1
 
+    def test_scaled_state_partitions_non_numeric_conf(self):
+        """A non-numeric shuffle-partitions value (``auto`` on some
+        platforms) caps at the default parallelism instead of raising."""
+        from types import SimpleNamespace
+
+        from exon_duckdb_spark.streaming.events import scaled_state_partitions
+
+        fake = SimpleNamespace(
+            conf=SimpleNamespace(get=lambda key: "auto"),
+            sparkContext=SimpleNamespace(defaultParallelism=3),
+        )
+        assert scaled_state_partitions(fake, SF_DIR) == 3
+        assert scaled_state_partitions(fake, SF_DIR, floor=1) == 1
+
     def test_state_partitions_do_not_change_drain_rows(self, spark):
         """Pins the r14 invariant scaled_state_partitions relies on: the
         emitted row multiset is identical at any state partition count
