@@ -1,7 +1,12 @@
 """Scalar function surface — parity with SURVEY.md §2.3.
 
-Every function returns a native ``pyspark.sql.Column`` (whole-stage codegen
-path) except the alignment family, which is a vectorized pandas_udf.
+Every function returns a ``pyspark.sql.Column`` that calls its one SQL body
+in ``register._scalar_defs`` (inlined into whole-stage codegen) except the
+alignment family, which is a vectorized pandas_udf, and the scan-column
+helpers ``gff_attributes_to_map``/``gtf_attributes_to_map``. The first call
+in a session registers the bodies in ``SparkSession.active()``; to use the
+Column API on another session's DataFrame, call
+``register.register_sql_functions(that_session)``.
 """
 
 from exon_duckdb_spark.functions.alignment import (  # noqa: F401

@@ -3,7 +3,8 @@
 from __future__ import annotations
 
 from pyspark.sql import Column
-from pyspark.sql import functions as F
+
+from exon_duckdb_spark.functions.register import call_scalar
 
 __all__ = ["exondb_version", "THIRD_PARTY_ACKNOWLEDGEMENTS"]
 
@@ -11,7 +12,7 @@ __all__ = ["exondb_version", "THIRD_PARTY_ACKNOWLEDGEMENTS"]
 def exondb_version() -> Column:
     """Constant version string — reference returns '0.3.9'
     (core/module.cpp:25-39)."""
-    return F.lit("0.3.9")
+    return call_scalar("exondb_version")
 
 
 # The reference ships exondb_third_party_acknowledgements() naming ITS

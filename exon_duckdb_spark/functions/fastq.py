@@ -7,29 +7,17 @@ Parity surface of the reference's fastq_functions
 from __future__ import annotations
 
 from pyspark.sql import Column
-from pyspark.sql import functions as F
+
+from exon_duckdb_spark.functions.register import call_scalar
 
 __all__ = ["quality_score_string_to_list"]
-
-
-def _as_col(c: Column | str) -> Column:
-    return F.col(c) if isinstance(c, str) else c
 
 
 def quality_score_string_to_list(quality: Column | str) -> Column:
     """Phred+33 decode: each char c → ord(c) - 33, as ARRAY<INT>.
 
     Reference: fastq_functions/module.cpp:28-54 ('!#' → [0, 2]).
-    Native: iterate positions with sequence() + ascii(substring()) — stays in
-    codegen, no UDF.
+    Native: one pass over split(q, '') with ascii() — stays in codegen, no
+    UDF. The empty string is its own branch: split('', '') is [''].
     """
-    q = _as_col(quality)
-    # Guard the empty string: sequence(1, 0) is DESCENDING [1, 0] in Spark,
-    # which would decode '' as [-33, -33].
-    decoded = F.transform(
-        F.sequence(F.lit(1), F.length(q)),
-        lambda i: F.ascii(F.substring(q, i, 1)) - 33,
-    )
-    return F.when(q.isNull(), F.lit(None)).otherwise(
-        F.when(F.length(q) == 0, F.array().cast("array<int>")).otherwise(decoded)
-    )
+    return call_scalar("quality_score_string_to_list", quality)

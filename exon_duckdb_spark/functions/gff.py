@@ -9,6 +9,8 @@ from __future__ import annotations
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
+from exon_duckdb_spark.functions.register import call_scalar
+
 __all__ = ["gff_parse_attributes", "gff_attributes_to_map", "gtf_attributes_to_map"]
 
 
@@ -24,27 +26,7 @@ def gff_parse_attributes(attrs: Column | str) -> Column:
     test_gff_scan.test:79-98: 'ID=x;locus_tag=y;' → {ID→x, locus_tag→y},
     'ID' → error).
     """
-    a = _as_col(attrs)
-    cleaned = F.regexp_replace(F.trim(a), ";$", "")
-    # NB: the lambda wrapper is load-bearing — a bare F.trim accepts a
-    # second (trimString) argument, so transform would call it as
-    # trim(element, index) and strip the part's index digit off its ends.
-    parts = F.transform(F.split(cleaned, ";"), lambda p: F.trim(p))
-    all_kv = F.forall(parts, lambda p: p.rlike("^[^=]+=[^=]*$"))
-    parsed = F.map_from_entries(
-        F.transform(
-            parts,
-            lambda p: F.struct(
-                F.regexp_extract(p, "^([^=]+)=", 1).alias("key"),
-                F.regexp_extract(p, "^[^=]+=(.*)$", 1).alias("value"),
-            ),
-        )
-    )
-    return F.when(a.isNull(), F.lit(None)).otherwise(
-        F.when(all_kv, parsed).otherwise(
-            F.raise_error(F.concat(F.lit("gff_parse_attributes: invalid attribute string: "), a))
-        )
-    )
+    return call_scalar("gff_parse_attributes", attrs)
 
 
 def gff_attributes_to_map(attrs: Column | str) -> Column:
@@ -56,6 +38,9 @@ def gff_attributes_to_map(attrs: Column | str) -> Column:
     """
     a = _as_col(attrs)
     cleaned = F.regexp_replace(F.trim(a), ";$", "")
+    # NB: the lambda wrapper is load-bearing — a bare F.trim accepts a
+    # second (trimString) argument, so transform would call it as
+    # trim(element, index) and strip the part's index digit off its ends.
     parts = F.filter(
         F.transform(F.split(cleaned, ";"), lambda p: F.trim(p)), lambda p: p != ""
     )

@@ -2,11 +2,15 @@
 functions + table functions); this module makes the same statements run on a
 SparkSession.
 
-- Scalar functions become **SQL UDFs** (``CREATE TEMPORARY FUNCTION ...
-  RETURN <expr>``) whose bodies are the same native expressions as the
-  Column API in this package — they stay JVM-side, inside codegen, zero
-  Python. ``tests/test_sql_registration.py`` cross-checks every SQL function
-  against its Column twin.
+- Scalar functions are **SQL UDFs** (``CREATE TEMPORARY FUNCTION ...
+  RETURN <expr>``). ``_scalar_defs`` holds the one definition of each; the
+  Column API (``functions.sequence``, ``fastq``, ``sam``, ``gff``, ``core``)
+  calls the same registered body through :func:`call_scalar`. Catalyst
+  inlines the body, so it stays JVM-side, inside codegen, zero Python.
+  A Column function registers the bodies in ``SparkSession.active()`` on
+  its first call in that session; using it on another session's DataFrame
+  fails with an unresolved-routine error until
+  ``register_sql_functions(that_session)`` is called.
 - ``alignment_string`` / ``alignment_score`` register as Arrow-batched
   Python UDFs (dynamic programming is not SQL-expressible).
 - Split-parser table functions become **Python UDTFs**, so the reference's
@@ -25,31 +29,69 @@ Usage::
 
 from __future__ import annotations
 
-from pyspark.sql import SparkSession
+import weakref
 
-from exon_duckdb_spark.functions.sam import SAM_FLAGS
-from exon_duckdb_spark.functions.sequence import CODON_TABLE
+from pyspark.sql import Column, SparkSession
+from pyspark.sql import functions as F
 
 __all__ = ["register_all", "register_sql_functions", "register_table_functions"]
+
+# Bit masks in the reference's registration order
+# (rust/src/sam_functions.rs:20-90; sam_functions/module.cpp:133-182).
+SAM_FLAGS: dict[str, int] = {
+    "is_segmented": 0x1,
+    "is_unmapped": 0x4,
+    "is_properly_aligned": 0x2,
+    "is_mate_unmapped": 0x8,
+    "is_reverse_complemented": 0x10,
+    "is_mate_reverse_complemented": 0x20,
+    "is_first_segment": 0x40,
+    "is_last_segment": 0x80,
+    "is_secondary": 0x100,
+    "is_quality_control_failed": 0x200,
+    "is_duplicate": 0x400,
+    "is_supplementary": 0x800,
+}
+
+# Standard genetic code (public knowledge; matches the reference's 64-entry
+# table at sequence_functions/module.cpp:266-330 — golden sweep in
+# test_scalar_functions.test:71-74 enumerates codons in A,T,C,G order).
+CODON_TABLE: dict[str, str] = {
+    "AAA": "K", "AAT": "N", "AAC": "N", "AAG": "K",
+    "ATA": "I", "ATT": "I", "ATC": "I", "ATG": "M",
+    "ACA": "T", "ACT": "T", "ACC": "T", "ACG": "T",
+    "AGA": "R", "AGT": "S", "AGC": "S", "AGG": "R",
+    "TAA": "*", "TAT": "Y", "TAC": "Y", "TAG": "*",
+    "TTA": "L", "TTT": "F", "TTC": "F", "TTG": "L",
+    "TCA": "S", "TCT": "S", "TCC": "S", "TCG": "S",
+    "TGA": "*", "TGT": "C", "TGC": "C", "TGG": "W",
+    "CAA": "Q", "CAT": "H", "CAC": "H", "CAG": "Q",
+    "CTA": "L", "CTT": "L", "CTC": "L", "CTG": "L",
+    "CCA": "P", "CCT": "P", "CCC": "P", "CCG": "P",
+    "CGA": "R", "CGT": "R", "CGC": "R", "CGG": "R",
+    "GAA": "E", "GAT": "D", "GAC": "D", "GAG": "E",
+    "GTA": "V", "GTT": "V", "GTC": "V", "GTG": "V",
+    "GCA": "A", "GCT": "A", "GCC": "A", "GCG": "A",
+    "GGA": "G", "GGT": "G", "GGC": "G", "GGG": "G",
+}
 
 _VALID_CIGAR = "^([0-9]+[MIDNSHP=X])+$"
 _CIGAR_OP = "([0-9]+)([MIDNSHP=X])"
 
 
 def _validated(arg: str, allowed_re: str, fname: str, result: str) -> str:
+    """``result`` where ``arg`` matches ``allowed_re``, else raise — the
+    reference's per-value error on invalid characters
+    (sequence_functions/module.cpp:81-129 raises on non-ATCG input)."""
     return f"""CASE WHEN {arg} IS NULL THEN CAST(NULL AS STRING)
         WHEN {arg} RLIKE '{allowed_re}' THEN {result}
         ELSE raise_error(concat('{fname}: invalid character in sequence: ', {arg})) END"""
 
 
-def _codon_map_sql() -> str:
-    pairs = ", ".join(f"'{c}', '{a}'" for c, a in CODON_TABLE.items())
-    return f"map({pairs})"
-
-
 def _scalar_defs() -> dict[str, tuple[str, str, str]]:
     """name → (args DDL, return DDL, body SQL)."""
-    aa_lookup = f"transform(regexp_extract_all(s, '(...)', 1), c -> element_at({_codon_map_sql()}, c))"
+    codon_map = "map(" + ", ".join(f"'{c}', '{a}'" for c, a in CODON_TABLE.items()) + ")"
+    aa_lookup = f"transform(regexp_extract_all(s, '(...)', 1), c -> element_at({codon_map}, c))"
     ec_start = (
         f"CASE WHEN regexp_extract(cigar, '^{_CIGAR_OP}', 2) = 'I' "
         f"THEN CAST(regexp_extract(cigar, '^{_CIGAR_OP}', 1) AS INT) ELSE 0 END"
@@ -61,14 +103,17 @@ def _scalar_defs() -> dict[str, tuple[str, str, str]]:
     )
     defs: dict[str, tuple[str, str, str]] = {
         "exondb_version": ("", "STRING", "'0.3.9'"),
-        "gc_content": (
+        # gc_content(s, as_double=True); must precede gc_content, whose
+        # body calls it
+        "exon_gc_fraction": (
             "s STRING",
-            "FLOAT",
-            """CAST(CASE WHEN s IS NULL THEN NULL
+            "DOUBLE",
+            """CASE WHEN s IS NULL THEN NULL
                     WHEN length(s) = 0 THEN 0.0
                     ELSE (length(s) - length(translate(s, 'GC', ''))) / length(s)
-               END AS FLOAT)""",
+               END""",
         ),
+        "gc_content": ("s STRING", "FLOAT", "CAST(exon_gc_fraction(s) AS FLOAT)"),
         "complement": (
             "s STRING", "STRING",
             _validated("s", "^[ATCG]*$", "complement", "translate(s, 'ATCG', 'TAGC')"),
@@ -108,7 +153,7 @@ def _scalar_defs() -> dict[str, tuple[str, str, str]]:
             "ARRAY<INT>",
             """CASE WHEN q IS NULL THEN NULL
                WHEN length(q) = 0 THEN CAST(array() AS ARRAY<INT>)
-               ELSE transform(sequence(1, length(q)), i -> ascii(substring(q, i, 1)) - 33)
+               ELSE transform(split(q, ''), c -> ascii(c) - 33)
                END""",
         ),
         "gff_parse_attributes": (
@@ -161,11 +206,31 @@ def _scalar_defs() -> dict[str, tuple[str, str, str]]:
     return defs
 
 
+# Sessions whose catalog holds the _scalar_defs bodies; weak, so a stopped
+# session drops out and its successor registers again. Two threads racing on
+# a new session both register, which CREATE OR REPLACE makes harmless.
+_registered: weakref.WeakSet[SparkSession] = weakref.WeakSet()
+
+
+def _register_scalars(spark: SparkSession) -> None:
+    for name, (args, ret, body) in _scalar_defs().items():
+        spark.sql(f"CREATE OR REPLACE TEMPORARY FUNCTION {name}({args}) RETURNS {ret} RETURN {body}")
+    _registered.add(spark)
+
+
+def call_scalar(name: str, *cols: Column | str) -> Column:
+    """Column form of a ``_scalar_defs`` function: a call of its SQL body,
+    registered in ``SparkSession.active()`` on the first call there."""
+    spark = SparkSession.active()
+    if spark not in _registered:
+        _register_scalars(spark)
+    return F.call_function(name, *cols)
+
+
 def register_sql_functions(spark: SparkSession) -> None:
     """Create the scalar surface as temporary SQL UDFs + the alignment
     Python UDFs on this session."""
-    for name, (args, ret, body) in _scalar_defs().items():
-        spark.sql(f"CREATE OR REPLACE TEMPORARY FUNCTION {name}({args}) RETURNS {ret} RETURN {body}")
+    _register_scalars(spark)
 
     from exon_duckdb_spark.functions import alignment as _al
 

@@ -2,14 +2,16 @@
 
 Parity surface of the reference's sam_functions
 (exon/src/exon/sam_functions/module.cpp + rust/src/sam_functions.rs).
-All native Column expressions — flag predicates are single bitwise ops,
-CIGAR functions are regexp + higher-order array functions.
+Each function calls its one SQL body in ``register._scalar_defs`` — flag
+predicates are single bitwise ops, CIGAR functions are regexp + higher-order
+array functions.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import Column
-from pyspark.sql import functions as F
+
+from exon_duckdb_spark.functions.register import SAM_FLAGS, call_scalar
 
 __all__ = [
     "SAM_FLAGS",
@@ -30,51 +32,26 @@ __all__ = [
     "is_supplementary",
 ]
 
-# Bit masks in the reference's registration order
-# (rust/src/sam_functions.rs:20-90; sam_functions/module.cpp:133-182).
-SAM_FLAGS: dict[str, int] = {
-    "is_segmented": 0x1,
-    "is_unmapped": 0x4,
-    "is_properly_aligned": 0x2,
-    "is_mate_unmapped": 0x8,
-    "is_reverse_complemented": 0x10,
-    "is_mate_reverse_complemented": 0x20,
-    "is_first_segment": 0x40,
-    "is_last_segment": 0x80,
-    "is_secondary": 0x100,
-    "is_quality_control_failed": 0x200,
-    "is_duplicate": 0x400,
-    "is_supplementary": 0x800,
-}
 
-
-def _as_col(c: Column | str) -> Column:
-    return F.col(c) if isinstance(c, str) else c
-
-
-def _flag_predicate(mask: int):
+def _flag_predicate(name: str):
     def pred(flag: Column | str) -> Column:
-        f = _as_col(flag)
-        return f.bitwiseAND(F.lit(mask)) != 0
+        return call_scalar(name, flag)
 
     return pred
 
 
-is_segmented = _flag_predicate(SAM_FLAGS["is_segmented"])
-is_unmapped = _flag_predicate(SAM_FLAGS["is_unmapped"])
-is_properly_aligned = _flag_predicate(SAM_FLAGS["is_properly_aligned"])
-is_mate_unmapped = _flag_predicate(SAM_FLAGS["is_mate_unmapped"])
-is_reverse_complemented = _flag_predicate(SAM_FLAGS["is_reverse_complemented"])
-is_mate_reverse_complemented = _flag_predicate(SAM_FLAGS["is_mate_reverse_complemented"])
-is_first_segment = _flag_predicate(SAM_FLAGS["is_first_segment"])
-is_last_segment = _flag_predicate(SAM_FLAGS["is_last_segment"])
-is_secondary = _flag_predicate(SAM_FLAGS["is_secondary"])
-is_quality_control_failed = _flag_predicate(SAM_FLAGS["is_quality_control_failed"])
-is_duplicate = _flag_predicate(SAM_FLAGS["is_duplicate"])
-is_supplementary = _flag_predicate(SAM_FLAGS["is_supplementary"])
-
-_CIGAR_VALID_RE = "^([0-9]+[MIDNSHP=X])+$"
-_CIGAR_OP_RE = "([0-9]+)([MIDNSHP=X])"
+is_segmented = _flag_predicate("is_segmented")
+is_unmapped = _flag_predicate("is_unmapped")
+is_properly_aligned = _flag_predicate("is_properly_aligned")
+is_mate_unmapped = _flag_predicate("is_mate_unmapped")
+is_reverse_complemented = _flag_predicate("is_reverse_complemented")
+is_mate_reverse_complemented = _flag_predicate("is_mate_reverse_complemented")
+is_first_segment = _flag_predicate("is_first_segment")
+is_last_segment = _flag_predicate("is_last_segment")
+is_secondary = _flag_predicate("is_secondary")
+is_quality_control_failed = _flag_predicate("is_quality_control_failed")
+is_duplicate = _flag_predicate("is_duplicate")
+is_supplementary = _flag_predicate("is_supplementary")
 
 
 def parse_cigar(cigar: Column | str) -> Column:
@@ -83,19 +60,7 @@ def parse_cigar(cigar: Column | str) -> Column:
     Reference: sam_functions/module.cpp:32-75,117-131 (noodles parse; 'MMM'
     raises, test_scalar_functions.test:98-101).
     """
-    c = _as_col(cigar)
-    ops = F.transform(
-        F.regexp_extract_all(c, F.lit(_CIGAR_OP_RE), 0),
-        lambda x: F.struct(
-            F.regexp_extract(x, "([MIDNSHP=X])", 1).alias("op"),
-            F.regexp_extract(x, "([0-9]+)", 1).cast("int").alias("len"),
-        ),
-    )
-    return F.when(c.isNull(), F.lit(None)).otherwise(
-        F.when(c.rlike(_CIGAR_VALID_RE), ops).otherwise(
-            F.raise_error(F.concat(F.lit("parse_cigar: invalid CIGAR string: "), c))
-        )
-    )
+    return call_scalar("parse_cigar", cigar)
 
 
 def extract_from_cigar(seq: Column | str, cigar: Column | str) -> Column:
@@ -109,24 +74,7 @@ def extract_from_cigar(seq: Column | str, cigar: Column | str) -> Column:
     Reference: rust/src/sam_functions.rs:162-200; goldens
     test_scalar_functions.test:107-119 — ('AACCAA','2I2M2I') → {2,4,'CC'}.
     """
-    s = _as_col(seq)
-    c = _as_col(cigar)
-    first_len = F.regexp_extract(c, "^([0-9]+)([MIDNSHP=X])", 1).cast("int")
-    first_op = F.regexp_extract(c, "^([0-9]+)([MIDNSHP=X])", 2)
-    last_len = F.regexp_extract(c, "([0-9]+)([MIDNSHP=X])$", 1).cast("int")
-    last_op = F.regexp_extract(c, "([0-9]+)([MIDNSHP=X])$", 2)
-    start = F.when(first_op == "I", first_len).otherwise(F.lit(0))
-    end = F.when(last_op == "I", F.length(s) - last_len).otherwise(F.length(s))
-    body = F.struct(
-        start.alias("sequence_start"),
-        end.alias("sequence_end"),
-        F.substring(s, start + 1, end - start).alias("sequence"),
-    )
-    return F.when(s.isNull() | c.isNull(), F.lit(None)).otherwise(
-        F.when(c.rlike(_CIGAR_VALID_RE), body).otherwise(
-            F.raise_error(F.concat(F.lit("extract_from_cigar: invalid CIGAR string: "), c))
-        )
-    )
+    return call_scalar("extract_from_cigar", seq, cigar)
 
 
 def cigar_reference_length(cigar: Column | str) -> Column:
@@ -135,13 +83,4 @@ def cigar_reference_length(cigar: Column | str) -> Column:
     Used to compute the SAM/BAM ``end`` column: end = start + ref_len - 1
     (the reference derives ``end`` the same way via noodles alignment spans).
     """
-    c = _as_col(cigar)
-    ref_ops = F.filter(
-        F.regexp_extract_all(c, F.lit(_CIGAR_OP_RE), 0),
-        lambda x: F.regexp_extract(x, "([MIDNSHP=X])", 1).isin("M", "D", "N", "=", "X"),
-    )
-    return F.aggregate(
-        ref_ops,
-        F.lit(0).cast("long"),
-        lambda acc, x: acc + F.regexp_extract(x, "([0-9]+)", 1).cast("long"),
-    )
+    return call_scalar("cigar_reference_length", cigar)

@@ -5,16 +5,18 @@ Parity surface of the reference's sequence_functions
 reverse_complement (with its enshrined quirk), transcribe,
 reverse_transcribe, translate_dna_to_aa.
 
-All of these are native Column expressions (JVM-side, whole-stage codegen) —
-no Python UDFs in the hot path. Invalid-input semantics match the reference's
-"throw on bad character" contract via ``raise_error`` on the else branch, so a
-full-column scan of clean data never pays the error path.
+Each function calls its one SQL body in ``register._scalar_defs`` (inlined
+by Catalyst: JVM-side, whole-stage codegen, no Python UDFs in the hot path).
+Invalid-input semantics match the reference's "throw on bad character"
+contract via ``raise_error`` on the else branch, so a full-column scan of
+clean data never pays the error path.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import Column
-from pyspark.sql import functions as F
+
+from exon_duckdb_spark.functions.register import CODON_TABLE, call_scalar
 
 __all__ = [
     "gc_content",
@@ -28,23 +30,6 @@ __all__ = [
 ]
 
 
-def _as_col(c: Column | str) -> Column:
-    return F.col(c) if isinstance(c, str) else c
-
-
-def _validated(seq: Column, allowed_re: str, fname: str, result: Column) -> Column:
-    """Return ``result`` where ``seq`` matches ``allowed_re``; raise otherwise.
-
-    Mirrors the reference's per-value error on invalid characters
-    (sequence_functions/module.cpp:81-129 raises on non-ATCG input).
-    """
-    return F.when(seq.isNull(), F.lit(None).cast("string")).otherwise(
-        F.when(seq.rlike(allowed_re), result).otherwise(
-            F.raise_error(F.concat(F.lit(f"{fname}: invalid character in sequence: "), seq))
-        )
-    )
-
-
 def gc_content(seq: Column | str, as_double: bool = False) -> Column:
     """(#G + #C) / length(seq) as FLOAT; '' → 0.0; NULL → NULL.
 
@@ -55,14 +40,7 @@ def gc_content(seq: Column | str, as_double: bool = False) -> Column:
     ``as_double=True`` keeps full double precision (for oracle comparison
     against engines whose division is double; the reference type is FLOAT).
     """
-    s = _as_col(seq)
-    frac = (F.length(s) - F.length(F.translate(s, "GC", ""))) / F.length(s)
-    out = (
-        F.when(s.isNull(), F.lit(None))
-        .when(F.length(s) == 0, F.lit(0.0))
-        .otherwise(frac)
-    )
-    return out.cast("double") if as_double else out.cast("float")
+    return call_scalar("exon_gc_fraction" if as_double else "gc_content", seq)
 
 
 def complement(seq: Column | str) -> Column:
@@ -70,8 +48,7 @@ def complement(seq: Column | str) -> Column:
 
     Reference: sequence_functions/module.cpp:81-129.
     """
-    s = _as_col(seq)
-    return _validated(s, "^[ATCG]*$", "complement", F.translate(s, "ATCG", "TAGC"))
+    return call_scalar("complement", seq)
 
 
 def reverse_complement(seq: Column | str) -> Column:
@@ -85,16 +62,12 @@ def reverse_complement(seq: Column | str) -> Column:
     We replicate the quirk for parity; use ``reverse_complement_strict`` for
     the biologically correct operation.
     """
-    s = _as_col(seq)
-    return _validated(s, "^[ATCG]*$", "reverse_complement", F.translate(s, "ATCG", "CGAT"))
+    return call_scalar("reverse_complement", seq)
 
 
 def reverse_complement_strict(seq: Column | str) -> Column:
     """Biologically correct reverse complement: reverse(complement(s))."""
-    s = _as_col(seq)
-    return _validated(
-        s, "^[ATCG]*$", "reverse_complement_strict", F.reverse(F.translate(s, "ATCG", "TAGC"))
-    )
+    return call_scalar("reverse_complement_strict", seq)
 
 
 def transcribe(seq: Column | str) -> Column:
@@ -102,8 +75,7 @@ def transcribe(seq: Column | str) -> Column:
 
     Reference: sequence_functions/module.cpp:215-261.
     """
-    s = _as_col(seq)
-    return _validated(s, "^[ATCG]*$", "transcribe", F.translate(s, "T", "U"))
+    return call_scalar("transcribe", seq)
 
 
 def reverse_transcribe(seq: Column | str) -> Column:
@@ -111,39 +83,7 @@ def reverse_transcribe(seq: Column | str) -> Column:
 
     Reference: sequence_functions/module.cpp:168-213.
     """
-    s = _as_col(seq)
-    return _validated(s, "^[AUCG]*$", "reverse_transcribe", F.translate(s, "U", "T"))
-
-
-# Standard genetic code (public knowledge; matches the reference's 64-entry
-# table at sequence_functions/module.cpp:266-330 — golden sweep in
-# test_scalar_functions.test:71-74 enumerates codons in A,T,C,G order).
-CODON_TABLE: dict[str, str] = {
-    "AAA": "K", "AAT": "N", "AAC": "N", "AAG": "K",
-    "ATA": "I", "ATT": "I", "ATC": "I", "ATG": "M",
-    "ACA": "T", "ACT": "T", "ACC": "T", "ACG": "T",
-    "AGA": "R", "AGT": "S", "AGC": "S", "AGG": "R",
-    "TAA": "*", "TAT": "Y", "TAC": "Y", "TAG": "*",
-    "TTA": "L", "TTT": "F", "TTC": "F", "TTG": "L",
-    "TCA": "S", "TCT": "S", "TCC": "S", "TCG": "S",
-    "TGA": "*", "TGT": "C", "TGC": "C", "TGG": "W",
-    "CAA": "Q", "CAT": "H", "CAC": "H", "CAG": "Q",
-    "CTA": "L", "CTT": "L", "CTC": "L", "CTG": "L",
-    "CCA": "P", "CCT": "P", "CCC": "P", "CCG": "P",
-    "CGA": "R", "CGT": "R", "CGC": "R", "CGG": "R",
-    "GAA": "E", "GAT": "D", "GAC": "D", "GAG": "E",
-    "GTA": "V", "GTT": "V", "GTC": "V", "GTG": "V",
-    "GCA": "A", "GCT": "A", "GCC": "A", "GCG": "A",
-    "GGA": "G", "GGT": "G", "GGC": "G", "GGG": "G",
-}
-
-
-def _codon_map() -> Column:
-    pairs: list[Column] = []
-    for codon, aa in CODON_TABLE.items():
-        pairs.append(F.lit(codon))
-        pairs.append(F.lit(aa))
-    return F.create_map(*pairs)
+    return call_scalar("reverse_transcribe", seq)
 
 
 def translate_dna_to_aa(seq: Column | str) -> Column:
@@ -153,13 +93,4 @@ def translate_dna_to_aa(seq: Column | str) -> Column:
     (sequence_functions/module.cpp:263-370). Fully native: split into
     3-grams with a regexp, look each up in a 64-entry literal map, join.
     """
-    s = _as_col(seq)
-    codons = F.regexp_extract_all(s, F.lit("(...)"), 1)
-    aas = F.transform(codons, lambda c: F.element_at(_codon_map(), c))
-    ok_len = F.length(s) % 3 == 0
-    no_unknown = ~F.array_contains(F.transform(aas, lambda a: a.isNull()), F.lit(True))
-    return F.when(s.isNull(), F.lit(None).cast("string")).otherwise(
-        F.when(~ok_len, F.raise_error(F.concat(F.lit("translate_dna_to_aa: length not divisible by 3: "), s)))
-        .when(~no_unknown, F.raise_error(F.concat(F.lit("translate_dna_to_aa: unknown codon in: "), s)))
-        .otherwise(F.array_join(aas, ""))
-    )
+    return call_scalar("translate_dna_to_aa", seq)

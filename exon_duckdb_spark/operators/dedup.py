@@ -861,7 +861,9 @@ def dedup_clusters(pairs: DataFrame, max_iter: int = 20) -> DataFrame:
     small-star simplification of Kiveris et al., "Connected Components in
     MapReduce"). Each round is one shuffle; rounds needed = graph diameter
     (near-dup clusters are shallow — a handful). Converges when no label
-    changes; ``max_iter`` bounds pathological chains.
+    changes; ``max_iter`` bounds pathological chains, and a chain that still
+    changes labels in its last allowed round raises instead of returning
+    partial cluster ids.
 
     Input: (id_a, id_b) pairs (any extra columns ignored). Output covers
     only ids that appear in some pair — singletons are their own cluster
@@ -908,6 +910,11 @@ def dedup_clusters(pairs: DataFrame, max_iter: int = 20) -> DataFrame:
         labels = new_labels
         if changed == 0:
             break
+    else:
+        raise RuntimeError(
+            f"dedup_clusters: labels still changed in the last of max_iter={max_iter} "
+            "rounds; the clusters have not converged"
+        )
     return labels.select(F.col("id").alias("doc_id"), F.col("label").alias("cluster_id"))
 
 

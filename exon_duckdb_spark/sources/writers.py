@@ -282,16 +282,15 @@ def to_genbank(df: DataFrame, path: str, compression: str | None = None) -> None
     """(name, accession, definition, topology, molecule_type, sequence) →
     GenBank flat-file records (LOCUS..//) through the text sink — each row
     renders as one multi-line record string."""
+    # one regex pass cuts the 60-base lines; an empty sequence keeps its
+    # single "        1 " line
+    chunks = F.when(F.col("sequence") == "", F.array(F.lit(""))).otherwise(
+        F.regexp_extract_all(F.col("sequence"), F.lit("(?s).{1,60}"), 0)
+    )
     seq_lines = F.array_join(
         F.transform(
-            F.sequence(
-                F.lit(0), F.greatest((F.length("sequence") - 1) / 60, F.lit(0)).cast("int")
-            ),
-            lambda i: F.concat(
-                F.lpad((i * 60 + 1).cast("string"), 9, " "),
-                F.lit(" "),
-                F.substring(F.col("sequence"), i * 60 + 1, 60),
-            ),
+            chunks,
+            lambda c, i: F.concat(F.lpad((i * 60 + 1).cast("string"), 9, " "), F.lit(" "), c),
         ),
         "\n",
     )

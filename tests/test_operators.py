@@ -713,6 +713,17 @@ def test_dedup_clusters(spark):
     assert out == {1: 1, 2: 1, 3: 1, 4: 1, 10: 10, 11: 10}
 
 
+def test_dedup_clusters_path_converges_or_raises(spark):
+    """A 6-node path needs 5 label-changing rounds: two allowed rounds
+    raise instead of returning partial cluster ids; the default collapses
+    it to one cluster."""
+    pairs = spark.createDataFrame([(i, i + 1) for i in range(1, 6)], ["id_a", "id_b"])
+    with pytest.raises(RuntimeError, match="not converged"):
+        ops.dedup_clusters(pairs, max_iter=2)
+    out = {r["doc_id"]: r["cluster_id"] for r in ops.dedup_clusters(pairs).collect()}
+    assert out == {i: 1 for i in range(1, 7)}
+
+
 def test_near_dedup_keep_list(spark):
     df = spark.createDataFrame([(i, f"t{i}") for i in range(6)], ["doc_id", "text"])
     pairs = spark.createDataFrame([(0, 3), (3, 5)], ["id_a", "id_b"])

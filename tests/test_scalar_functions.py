@@ -73,6 +73,24 @@ class TestFastqGff:
     def test_quality_score_string_to_list(self, spark):
         assert seq_vals(spark, fx.quality_score_string_to_list, ["!#"]) == [[0, 2]]
 
+    def test_quality_decode_column_sql_python_agree(self, spark):
+        """Phred+33 decode at lengths 0, 1, 60, 61 and 10 000, plus NULL:
+        the Column and SQL forms both equal ``[ord(c) - 33 for c in q]``."""
+        from exon_duckdb_spark.functions.register import register_sql_functions
+
+        register_sql_functions(spark)
+        alphabet = "".join(chr(c) for c in range(33, 127))
+        quals = [(alphabet * 107)[:n] for n in (0, 1, 60, 61, 10_000)] + [None]
+        df = spark.createDataFrame([(i, q) for i, q in enumerate(quals)], "i int, q string")
+        rows = df.select(
+            "i",
+            fx.quality_score_string_to_list("q").alias("col"),
+            F.expr("quality_score_string_to_list(q)").alias("sql"),
+        ).orderBy("i").collect()
+        for r, q in zip(rows, quals):
+            want = None if q is None else [ord(c) - 33 for c in q]
+            assert r["col"] == want and r["sql"] == want
+
     def test_gff_parse_attributes(self, spark):
         vals = seq_vals(spark, fx.gff_parse_attributes, ["ID=x;locus_tag=y;"])
         assert vals == [{"ID": "x", "locus_tag": "y"}]

@@ -1,7 +1,14 @@
-"""SQL-surface registration tests: every SQL UDF must agree with its Column
-twin, and the reference's SQL statements must run verbatim."""
+"""SQL-surface registration tests. Each scalar function has one SQL body
+(``register._scalar_defs``); the Column API calls it, so the SQL-vs-Column
+checks here confirm both entry points reach the same registered body. The
+registration itself is lazy (first Column call in a session) and is tested
+in a fresh subprocess. The reference's SQL statements must run verbatim."""
 
 from __future__ import annotations
+
+import os
+import subprocess
+import sys
 
 import pytest
 from pyspark.sql import functions as F
@@ -38,6 +45,48 @@ def _pairs(sql_spark, inputs, sql_expr, col):
 def test_sequence_sql_matches_column(sql_spark, sql_expr, col_fn):
     got_sql, got_col = _pairs(sql_spark, SEQS, sql_expr, col_fn())
     assert got_sql == got_col
+
+
+def test_gc_content_double_and_float(sql_spark):
+    df = sql_spark.createDataFrame([("GCA",)], "s string")
+    out = df.select(fx.gc_content("s", as_double=True).alias("d"), fx.gc_content("s").alias("f"))
+    assert dict(out.dtypes) == {"d": "double", "f": "float"}
+    row = out.first()
+    assert row["d"] == 2 / 3
+    assert row["f"] == pytest.approx(2 / 3, abs=1e-6)
+
+
+_FRESH_SESSION_SCRIPT = """
+import exon_duckdb_spark.functions as fx
+from exon_duckdb_spark.session import get_session
+
+for _ in range(2):
+    spark = get_session(master="local[1]", shuffle_partitions=1,
+                        extra_conf={"spark.driver.memory": "1g"})
+    before = spark.catalog.functionExists("gc_content")
+    df = spark.createDataFrame([("GCA", "!#", 4, "1M2D")], "s string, q string, f int, c string")
+    row = df.select(fx.gc_content("s", as_double=True), fx.quality_score_string_to_list("q"),
+                    fx.is_unmapped("f"), fx.cigar_reference_length("c"),
+                    fx.exondb_version()).first()
+    print("ROW", before, spark.catalog.functionExists("gc_content"), tuple(row))
+    spark.stop()
+"""
+
+
+def test_column_functions_register_lazily_per_session():
+    """Column functions resolve in a fresh session that never called
+    register_all (get_session registers nothing), and again after
+    ``spark.stop()`` and a new session."""
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    env = {**os.environ, "PYTHONPATH": root}
+    out = subprocess.run(
+        [sys.executable, "-c", _FRESH_SESSION_SCRIPT],
+        cwd=root, env=env, capture_output=True, text=True, timeout=600,
+    )
+    assert out.returncode == 0, out.stderr[-3000:]
+    rows = [ln for ln in out.stdout.splitlines() if ln.startswith("ROW ")]
+    want = f"ROW False True {(2 / 3, [0, 2], True, 3, '0.3.9')}"
+    assert rows == [want, want]
 
 
 def test_translate_dna_to_aa_sql(sql_spark):

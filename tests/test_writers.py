@@ -114,3 +114,42 @@ def test_bcf_writer_roundtrip(spark, tmp_path):
     assert rows[3]["pos"] == 301 and rows[3]["ref"] == "ACGT"
     assert rows[3]["alt"] == ["A"] and rows[3]["info"]["DP"] == 3
     assert rows[3]["qual"] is None and rows[4]["qual"] == 4.5
+
+
+def test_genbank_sequence_lines_pinned(spark, tmp_path):
+    """GenBank ORIGIN lines: 60 bases per line behind a 9-wide 1-based
+    offset; an empty sequence still gets one ``"        1 "`` line."""
+    import glob
+    import random
+
+    from exon_duckdb_spark.sources.writers import to_genbank
+
+    rng = random.Random(7)
+    lengths = (0, 1, 60, 61, 10_000)
+    rows = [
+        (f"s{n}", f"A{n}", f"len {n}", "linear", "DNA",
+         "".join(rng.choice("ACGT") for _ in range(n)))
+        for n in lengths
+    ]
+    df = spark.createDataFrame(
+        rows, "name string, accession string, definition string, "
+        "topology string, molecule_type string, sequence string",
+    )
+    out = str(tmp_path / "gb_out")
+    to_genbank(df, out)
+    text = "".join(
+        open(p).read() for p in sorted(glob.glob(f"{out}/part-*"))
+    )
+
+    def render(name, acc, definition, topo, mol, seq):
+        lines = [
+            f"{i + 1:>9} {seq[i:i + 60]}" for i in range(0, max(len(seq), 1), 60)
+        ]
+        return (
+            f"LOCUS       {name:<20}{len(seq):>8} bp    {mol:<8}{topo:<9}"
+            f"UNA 01-JAN-2000\nDEFINITION  {definition}\nACCESSION   {acc}\n"
+            "ORIGIN\n" + "\n".join(lines) + "\n//\n"
+        )
+
+    got = sorted(r + "//\n" for r in text.split("//\n") if r)
+    assert got == sorted(render(*r) for r in rows)
