@@ -1307,7 +1307,7 @@ def q42_near_dedup_keep(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q43_gff_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """GFF writer → reader round trip (distributed text sink, native csv
+    """GFF writer → reader round trip (distributed text sink, native text
     scan, attribute-map re-serialization), hash-checked from documents."""
 
     from exon_duckdb_spark.sources.tsv import read_gff

@@ -7,7 +7,7 @@ scalar functions, (3) scan pushdown plumbing. This package re-expresses all
 three Spark-first:
 
 - ``exon_duckdb_spark.sources``   — file-format readers returning DataFrames
-  (native ``spark.read.csv``/``text`` where the format is line-oriented,
+  (native ``spark.read.text`` where the format is line-oriented,
   ``mapInArrow`` split-parsers for record/binary formats).
 - ``exon_duckdb_spark.functions`` — scalar surface as native Column
   expressions (JVM/codegen path) with ``pandas_udf`` only where unavoidable.

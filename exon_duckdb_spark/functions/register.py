@@ -13,9 +13,14 @@ SparkSession.
   ``register_sql_functions(that_session)`` is called.
 - ``alignment_string`` / ``alignment_score`` register as Arrow-batched
   Python UDFs (dynamic programming is not SQL-expressible).
-- Split-parser table functions become **Python UDTFs**, so the reference's
+- Every reference scan name is a table function, so the reference's
   ``SELECT * FROM read_fasta('path')`` runs verbatim
-  (exon/src/exon_extension.cpp:47-58). A UDTF invocation parses on a single
+  (exon/src/exon_extension.cpp:47-58). The six line formats (GFF, raw GFF,
+  GTF, BED, SAM, HMMER) are **SQL table functions** whose body is the
+  DataFrame reader's own query (``sources/tsv.py::LINE_FORMATS``) over the
+  ``exon_read_lines`` line UDTF; the split-parser formats
+  (``sources/datasource.py::SPLIT_PARSERS``) and the VCF/BCF record and
+  region scans are **Python UDTFs**. A UDTF invocation parses on a single
   task — the convenience path for ad-hoc SQL; large scans should use
   ``spark.read.format("fasta")`` / ``read_fasta()`` which fan out one task
   per file split.
@@ -170,6 +175,40 @@ def _scalar_defs() -> dict[str, tuple[str, str, str]]:
                ELSE raise_error(concat('gff_parse_attributes: invalid attribute string: ', a))
                END""",
         ),
+        # (key, values) entries → map; a repeated key (GENCODE's many
+        # ``tag "..."``) gets all its values, in file order. Must precede
+        # the two attribute maps, whose bodies call it.
+        "exon_attribute_map": (
+            "es ARRAY<STRUCT<key: STRING, value: ARRAY<STRING>>>",
+            "MAP<STRING, ARRAY<STRING>>",
+            """map_from_arrays(
+                 array_distinct(transform(es, e -> e.key)),
+                 transform(array_distinct(transform(es, e -> e.key)),
+                           k -> flatten(transform(filter(es, e -> e.key = k), e -> e.value))))""",
+        ),
+        # the GFF3/GTF scans' 'attributes' column (see functions/gff.py)
+        "gff_attributes_to_map": (
+            "a STRING",
+            "MAP<STRING, ARRAY<STRING>>",
+            """CASE WHEN a IS NULL OR trim(a) = '.' THEN NULL
+               ELSE exon_attribute_map(transform(
+                      filter(transform(split(regexp_replace(trim(a), ';$', ''), ';'),
+                                       p -> trim(p)),
+                             p -> p != ''),
+                      p -> named_struct('key', regexp_extract(p, '^([^=]+)=', 1),
+                                        'value', split(regexp_extract(p, '^[^=]+=(.*)$', 1), ','))))
+               END""",
+        ),
+        "gtf_attributes_to_map": (
+            "a STRING",
+            "MAP<STRING, ARRAY<STRING>>",
+            r"""CASE WHEN a IS NULL OR trim(a) = '.' THEN NULL
+               ELSE exon_attribute_map(transform(
+                      regexp_extract_all(a, '([A-Za-z0-9_]+)\\s+"([^"]*)"', 0),
+                      p -> named_struct('key', regexp_extract(p, '([A-Za-z0-9_]+)\\s+"', 1),
+                                        'value', array(regexp_extract(p, '"([^"]*)"', 1)))))
+               END""",
+        ),
         "parse_cigar": (
             "c STRING",
             "ARRAY<STRUCT<op: STRING, len: INT>>",
@@ -218,12 +257,16 @@ def _register_scalars(spark: SparkSession) -> None:
     _registered.add(spark)
 
 
+def ensure_scalars(spark: SparkSession) -> None:
+    """Register the ``_scalar_defs`` bodies in ``spark`` unless done."""
+    if spark not in _registered:
+        _register_scalars(spark)
+
+
 def call_scalar(name: str, *cols: Column | str) -> Column:
     """Column form of a ``_scalar_defs`` function: a call of its SQL body,
     registered in ``SparkSession.active()`` on the first call there."""
-    spark = SparkSession.active()
-    if spark not in _registered:
-        _register_scalars(spark)
+    ensure_scalars(SparkSession.active())
     return F.call_function(name, *cols)
 
 
@@ -251,21 +294,13 @@ def register_sql_functions(spark: SparkSession) -> None:
     )
 
 
-def _make_read_udtf(parse_import: str, schema_import: str, splittable: bool):
-    """UDTF class reading every record of path (single-task convenience).
-
-    ``splittable`` must be True ONLY for parsers that honor the FileSplit
-    byte range (fasta/fastq/bam scan-ahead from split.start). Whole-file
-    parsers (the pyparse line parsers, genbank, mzml) ignore the range, so
-    planning them splittable would emit every record once per 128MB split
-    on large files — they get one whole-file split instead.
-    """
+def _make_read_udtf(schema, parse_import: str, splittable: bool):
+    """UDTF class reading every record of path (single-task convenience);
+    ``splittable`` as in :data:`~exon_duckdb_spark.sources.datasource.SPLIT_PARSERS`."""
     import importlib
 
     from pyspark.sql.functions import udtf
 
-    smod, sname = schema_import.split(":")
-    schema = getattr(importlib.import_module(smod), sname)
     ddl = ", ".join(f"{f.name} {f.dataType.simpleString()}" for f in schema.fields)
     names = [f.name for f in schema.fields]
 
@@ -282,67 +317,22 @@ def _make_read_udtf(parse_import: str, schema_import: str, splittable: bool):
     return udtf(_ReadUDTF, returnType=ddl)
 
 
-# name → (parser, schema, splittable). splittable only where the parser
-# honors FileSplit byte ranges (see _make_read_udtf).
-_TABLE_FUNCS = {
-    "read_fasta": (
-        "exon_duckdb_spark.sources.fasta:_parse_fasta_split",
-        "exon_duckdb_spark.sources.schemas:FASTA_SCHEMA",
-        True,
-    ),
-    "read_fastq": (
-        "exon_duckdb_spark.sources.fastq:_parse_fastq_split",
-        "exon_duckdb_spark.sources.schemas:FASTQ_SCHEMA",
-        True,
-    ),
-    "read_genbank": (
-        "exon_duckdb_spark.sources.genbank:_parse_genbank_split",
-        "exon_duckdb_spark.sources.schemas:GENBANK_SCHEMA",
-        False,
-    ),
-    "read_mzml": (
-        "exon_duckdb_spark.sources.mzml:_parse_mzml_split",
-        "exon_duckdb_spark.sources.schemas:MZML_SCHEMA",
-        False,
-    ),
-    "read_bam_file_records": (
-        "exon_duckdb_spark.sources.bam:_parse_bam_split",
-        "exon_duckdb_spark.sources.schemas:SAM_SCHEMA",
-        True,
-    ),
-    # python mirrors of the native-csv scans (tsv.py) so every reference
-    # SQL name runs verbatim; the line parsers read whole files
-    "read_gff": (
-        "exon_duckdb_spark.sources.pyparse:parse_gff_split",
-        "exon_duckdb_spark.sources.schemas:GFF_SCHEMA",
-        False,
-    ),
-    "read_gff_raw": (
-        "exon_duckdb_spark.sources.pyparse:parse_gff_raw_split",
-        "exon_duckdb_spark.sources.schemas:GFF_RAW_SCHEMA",
-        False,
-    ),
-    "read_gtf": (
-        "exon_duckdb_spark.sources.pyparse:parse_gtf_split",
-        "exon_duckdb_spark.sources.schemas:GTF_SCHEMA",
-        False,
-    ),
-    "read_bed_file": (
-        "exon_duckdb_spark.sources.pyparse:parse_bed_split",
-        "exon_duckdb_spark.sources.schemas:BED_SCHEMA",
-        False,
-    ),
-    "read_sam_file_records": (
-        "exon_duckdb_spark.sources.pyparse:parse_sam_split",
-        "exon_duckdb_spark.sources.schemas:SAM_SCHEMA",
-        False,
-    ),
-    "read_hmm_dom_tbl_out": (
-        "exon_duckdb_spark.sources.pyparse:parse_hmm_split",
-        "exon_duckdb_spark.sources.schemas:HMM_DOMTAB_SCHEMA",
-        False,
-    ),
-}
+def _make_lines_udtf():
+    """``exon_read_lines(path, compression)``: every line of the file(s) as
+    ``value STRING`` — the line relation the text-format table functions
+    query. Line reads ignore byte ranges, so each file is one split."""
+    from pyspark.sql.functions import udtf
+
+    class _Lines:
+        def eval(self, path: str, compression: str):
+            from exon_duckdb_spark.sources.reader_core import read_split_lines
+            from exon_duckdb_spark.sources.splits import plan_splits
+
+            for split in plan_splits(path, compression, splittable=False):
+                for line in read_split_lines(split):
+                    yield (line.rstrip(b"\r\n").decode("utf-8", "replace"),)
+
+    return udtf(_Lines, returnType="value string")
 
 
 def _row_of(rec: dict, names: list[str]) -> tuple:
@@ -367,9 +357,12 @@ def _record_format(kind: str, path: str):
 
     if kind == "vcf":
         from exon_duckdb_spark.sources.bgzf import is_bgzf, parse_bgzf_lines_split
-        from exon_duckdb_spark.sources.pyparse import parse_vcf_record_fields
         from exon_duckdb_spark.sources.reader_core import read_split_lines
-        from exon_duckdb_spark.sources.vcf import _peek_info_fields, vcf_schema
+        from exon_duckdb_spark.sources.vcf import (
+            _peek_info_fields,
+            parse_vcf_record_fields,
+            vcf_schema,
+        )
 
         info_fields = _peek_info_fields(path)
         schema = vcf_schema(info_fields)
@@ -485,8 +478,21 @@ def _make_acknowledgements_udtf():
 
 
 def register_table_functions(spark: SparkSession) -> None:
-    for name, (parse_import, schema_import, splittable) in _TABLE_FUNCS.items():
-        spark.udtf.register(name, _make_read_udtf(parse_import, schema_import, splittable))
+    from exon_duckdb_spark.sources.datasource import SPLIT_PARSERS
+    from exon_duckdb_spark.sources.tsv import LINE_FORMATS
+
+    for name, schema, parse_import, splittable in SPLIT_PARSERS.values():
+        spark.udtf.register(name, _make_read_udtf(schema, parse_import, splittable))
+    # the text formats' bodies call the scalar functions
+    ensure_scalars(spark)
+    spark.udtf.register("exon_read_lines", _make_lines_udtf())
+    for name, (fields, cols, where) in LINE_FORMATS.items():
+        spark.sql(
+            f"CREATE OR REPLACE TEMPORARY FUNCTION {name}(path STRING, "
+            "compression STRING DEFAULT 'auto_detect') RETURNS TABLE RETURN "
+            f"SELECT {', '.join(cols)} FROM (SELECT value, {fields} AS f "
+            f"FROM exon_read_lines(path, compression)) WHERE {where}"
+        )
     spark.udtf.register(
         "exondb_third_party_acknowledgements", _make_acknowledgements_udtf()
     )

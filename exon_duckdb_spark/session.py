@@ -9,8 +9,8 @@ oracle is naive-UTC).
 ANSI mode stays at the Spark 4 default (enabled): SQL arithmetic/cast error
 contracts match the host engine a reference user expects. File readers are
 the one place ANSI-by-default would turn spec-valid malformed *data* into
-job aborts, so the readers use ``try_cast``/size-guards at each raw
-cast/index site (vcf.py, pyparse.py) — null-on-error read semantics without
+job aborts, so the readers use ``try_cast``/``get``/size-guards at each raw
+cast/index site (tsv.py, vcf.py) — null-on-error read semantics without
 weakening the engine-wide error contract.
 """
 

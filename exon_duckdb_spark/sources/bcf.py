@@ -12,7 +12,8 @@ The INFO struct is header-driven exactly like VCF.
 it the BCF header-prefix parser, the 8-byte ``l_shared``/``l_indiv``
 record prefix (the genotype block is skipped, not read) and the
 field-sanity check that resync chains records on (l_shared/l_indiv
-bounds, contig id in range, sane pos/rlen/counts). ``bcf_query`` prunes
+bounds, contig id in range, sane pos/rlen/counts, and typed values that
+fill the shared block exactly). ``bcf_query`` prunes
 splits to the ``.csi`` index's chunk ranges when the index exists, with
 the exact region filter applied after.
 """
@@ -72,6 +73,32 @@ def _decode_typed(buf: bytes, off: int):
     return list(vals), off
 
 
+# value width per type; the type byte of a single int8/16/32
+_TYPE_WIDTH = {0: 0, 1: 1, 2: 2, 3: 4, 5: 4, 7: 1}
+_ONE_INT_WIDTH = {0x11: 1, 0x12: 2, 0x13: 4}
+
+
+def _typed_values_end(buf: bytes, off: int, count: int) -> int | None:
+    """Offset just past ``count`` consecutive typed values from ``off``, or
+    None when they do not decode inside ``buf``."""
+    for _ in range(count):
+        if off >= len(buf):
+            return None
+        t, n = buf[off] & 0x0F, buf[off] >> 4
+        off += 1
+        if n == 15:  # the length follows as one typed int
+            width = _ONE_INT_WIDTH.get(buf[off]) if off < len(buf) else None
+            if width is None or off + 1 + width > len(buf):
+                return None
+            n, off = _decode_typed(buf, off)
+            if n is None or n < 0:
+                return None
+        if t not in _TYPE_WIDTH:
+            return None
+        off += n * _TYPE_WIDTH[t]
+    return off if off <= len(buf) else None
+
+
 def _read_header(buf: BgzfBuf) -> tuple[bytes, int]:
     """Parse the BCF magic and ``l_text`` prefix at decompressed position 0;
     returns (header text, absolute position of the first record)."""
@@ -123,6 +150,11 @@ class _BcfRecords:
             return None
         n_fmt_sample = struct.unpack_from("<I", head, 28)[0]
         if (n_fmt_sample >> 24) > 100:  # n_fmt
+            return None
+        # the shared block's typed values (ID, alleles, FILTER, INFO
+        # key/value pairs) must fill it exactly
+        shared = buf.get(pos + 8, l_shared)
+        if shared is None or _typed_values_end(shared, 24, 2 + n_allele + 2 * n_info) != l_shared:
             return None
         return 8 + l_shared + l_indiv
 

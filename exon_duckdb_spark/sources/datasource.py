@@ -32,6 +32,7 @@ from pyspark.sql import SparkSession
 from pyspark.sql import types as T
 from pyspark.sql.datasource import DataSource, DataSourceReader, InputPartition
 
+from exon_duckdb_spark.sources import schemas as S
 from exon_duckdb_spark.sources.reader_core import (
     BATCH_ROWS,
     _dicts_to_batch,
@@ -39,7 +40,7 @@ from exon_duckdb_spark.sources.reader_core import (
 )
 from exon_duckdb_spark.sources.splits import FileSplit, plan_splits
 
-__all__ = ["register_bio_sources", "BIO_DATASOURCES"]
+__all__ = ["register_bio_sources", "BIO_DATASOURCES", "SPLIT_PARSERS"]
 
 
 class _SplitPartition(InputPartition):
@@ -113,21 +114,25 @@ def _make_datasource(fmt: str, schema: T.StructType, parse_import: str, splittab
     return _BioDataSource
 
 
-def _registry():
-    from exon_duckdb_spark.sources import schemas as S
-
-    return {
-        "fasta": (S.FASTA_SCHEMA, "exon_duckdb_spark.sources.fasta:_parse_fasta_split", True),
-        "fastq": (S.FASTQ_SCHEMA, "exon_duckdb_spark.sources.fastq:_parse_fastq_split", True),
-        "genbank": (S.GENBANK_SCHEMA, "exon_duckdb_spark.sources.genbank:_parse_genbank_split", False),
-        "mzml": (S.MZML_SCHEMA, "exon_duckdb_spark.sources.mzml:_parse_mzml_split", False),
-        "bam": (S.SAM_SCHEMA, "exon_duckdb_spark.sources.bam:_parse_bam_split", False),
-    }
-
+# format → (SQL table function, schema, "module:parser", splittable): the one
+# table behind ``spark.read.format(fmt)`` and the SQL name
+# (functions/register.py). ``splittable`` only where the parser honors
+# FileSplit byte ranges (fasta/fastq scan ahead from split.start, bam walks
+# BGZF blocks); genbank/mzml parse whole files, so planning them splittable
+# would emit every record once per split — they get one split per file.
+SPLIT_PARSERS = {
+    "fasta": ("read_fasta", S.FASTA_SCHEMA, "exon_duckdb_spark.sources.fasta:_parse_fasta_split", True),
+    "fastq": ("read_fastq", S.FASTQ_SCHEMA, "exon_duckdb_spark.sources.fastq:_parse_fastq_split", True),
+    "genbank": (
+        "read_genbank", S.GENBANK_SCHEMA, "exon_duckdb_spark.sources.genbank:_parse_genbank_split", False
+    ),
+    "mzml": ("read_mzml", S.MZML_SCHEMA, "exon_duckdb_spark.sources.mzml:_parse_mzml_split", False),
+    "bam": ("read_bam_file_records", S.SAM_SCHEMA, "exon_duckdb_spark.sources.bam:_parse_bam_split", True),
+}
 
 BIO_DATASOURCES = {
     fmt: _make_datasource(fmt, schema, imp, splittable)
-    for fmt, (schema, imp, splittable) in _registry().items()
+    for fmt, (_, schema, imp, splittable) in SPLIT_PARSERS.items()
 }
 
 

@@ -76,7 +76,7 @@ def _info_col(info: Column, f: InfoField) -> Column:
     e.g. ``MQ=.`` / ``CAF=0.5,.``) decodes as NULL; ``try_cast`` keeps a
     malformed value in one record from aborting the whole scan under
     Spark 4's default ANSI mode (pre-ANSI null-on-error read semantics,
-    matching the pyparse SQL mirror)."""
+    matching :func:`parse_vcf_record_fields`)."""
     key = re.escape(f.id)
     if f.type == "Flag" or f.number == "0":
         return info.rlike(f"(^|;){key}(;|=|$)")
@@ -171,6 +171,71 @@ def read_vcf(spark: SparkSession, path: str, _splits=None) -> DataFrame:
         F.when(F.size(p) > 9, F.slice(p, 10, F.greatest(F.size(p) - 9, F.lit(0))))
         .alias("genotypes"),
     )
+
+
+def parse_vcf_record_fields(f: list[str], info_fields: list[InfoField]) -> dict:
+    """One VCF data line (already tab-split) → record dict with
+    :func:`read_vcf`'s column values — the Python form behind the SQL
+    ``read_vcf_file_records``/``vcf_query``, whose ``info`` struct comes
+    from each file's header (a SQL table function's schema is fixed when
+    it is created)."""
+    has_info = len(f) > 7
+    keys: set[str] = set()
+    values: dict[str, str] = {}
+    if has_info and f[7] not in (".", ""):
+        for part in f[7].split(";"):
+            k, eq, v = part.partition("=")
+            keys.add(k)
+            if eq:
+                values.setdefault(k, v)  # the first value wins, as in _info_col
+
+    def _cast(v: str, t: str):
+        # '.' (scalar or list element) and malformed values → None, as
+        # _info_col's try_cast
+        if v == ".":
+            return None
+        try:
+            if t == "Integer":
+                n = int(v)
+                return n if -(2**31) <= n < 2**31 else None
+            if t == "Float":
+                return float(v)
+        except ValueError:
+            return None
+        return v
+
+    info = {}
+    for fld in info_fields:
+        raw = values.get(fld.id)
+        if fld.type == "Flag" or fld.number == "0":
+            info[fld.id] = fld.id in keys if has_info else None
+        elif raw in (None, "", "."):
+            # a bare '.' is whole-field-missing → None (not [None])
+            info[fld.id] = None
+        elif fld.number == "1":
+            info[fld.id] = _cast(raw, fld.type)
+        else:
+            info[fld.id] = [_cast(v, fld.type) for v in raw.split(",")]
+
+    def _try(v: str, conv):
+        try:
+            return conv(v)
+        except ValueError:
+            return None
+
+    qual = f[5] if len(f) > 5 else "."
+    return {
+        "chrom": f[0],
+        "pos": _try(f[1], int) if len(f) > 1 else None,
+        "id": (None if f[2] == "." else f[2]) if len(f) > 2 else None,
+        "ref": f[3] if len(f) > 3 else None,
+        "alt": None if len(f) < 5 or f[4] == "." else f[4].split(","),
+        "qual": _try(qual, float) if qual != "." else None,
+        "filter": (None if f[6] == "." else f[6]) if len(f) > 6 else None,
+        "info": info,
+        "formats": f[8] if len(f) > 8 else None,
+        "genotypes": f[9:] if len(f) > 9 else None,
+    }
 
 
 def parse_region(region: str) -> tuple[str, int | None, int | None]:

@@ -483,6 +483,46 @@ class TestBcfBgzfSplits:
         assert bcf_query(spark, bgzf_bcf, "1").count() == 30
         assert bcf_query(spark, bgzf_bcf, "chrZ").count() == 0
 
+    def test_resync_rejects_false_record_chains(self, tmp_path):
+        """A 40,000-record file in 4096-byte blocks read as 5000-byte
+        splits: byte runs inside records also pass the fixed-field checks
+        and chain, so resync must also require the shared block's typed
+        values to fill it exactly. Every record comes back exactly once."""
+        from collections import Counter
+
+        from exon_duckdb_spark.sources.bcf import _parse_bcf_split, bcf_bind
+        from exon_duckdb_spark.sources.splits import plan_splits
+        from exon_duckdb_spark.sources.writers import _render_bcf
+
+        n = 40_000
+        header = (
+            "##fileformat=VCFv4.2\n"
+            '##FILTER=<ID=PASS,Description="ok",IDX=0>\n'
+            '##INFO=<ID=DP,Number=1,Type=Integer,Description="d",IDX=1>\n'
+            "##contig=<ID=chr1,length=1000000,IDX=0>\n"
+            "##contig=<ID=chr2,length=1000000,IDX=1>\n"
+            "#CHROM\tPOS\tID\tREF\tALT\tQUAL\tFILTER\tINFO"
+        )
+        rows = sorted(
+            (
+                {"chrom": f"chr{i % 2 + 1}", "pos": i * 500 + 1, "id": f"rs{i}",
+                 "ref": "A", "alt": ["T"], "qual": 1.0, "DP": i}
+                for i in range(n)
+            ),
+            key=lambda r: (r["chrom"], r["pos"]),
+        )
+        p = tmp_path / "large.bcf"
+        p.write_bytes(_render_bcf(rows, header, {"chr1": 0, "chr2": 1}, {"DP": 1},
+                                  block_bytes=4096))
+        contigs, info_meta, _, _ = bcf_bind(str(p))
+        seen = Counter(
+            rec["info"]["DP"]
+            for split in plan_splits(str(p), "none", splittable=True, split_bytes=5000)
+            for rec in _parse_bcf_split(split, info_meta, contigs)
+        )
+        assert sorted(seen) == list(range(n))
+        assert set(seen.values()) == {1}
+
 
 class TestBcf:
     def test_golden(self, spark, bcf_file):

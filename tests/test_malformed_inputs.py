@@ -15,14 +15,9 @@ import gzip
 
 import pytest
 
-from exon_duckdb_spark.sources.pyparse import (
-    parse_gff_raw_split,
-    parse_gff_split,
-    parse_vcf_record_fields,
-)
-from exon_duckdb_spark.sources.splits import FileSplit
+from exon_duckdb_spark.functions.register import register_all
 from exon_duckdb_spark.sources.tsv import read_gff
-from exon_duckdb_spark.sources.vcf import _peek_info_fields, read_vcf
+from exon_duckdb_spark.sources.vcf import _peek_info_fields, parse_vcf_record_fields, read_vcf
 
 VCF_DOTTED = (
     "##fileformat=VCFv4.2\n"
@@ -114,44 +109,50 @@ def _mk_info_fields():
 
 
 class TestGffFastaTrailer:
-    def test_pyparse_drops_trailer_like_tsv(self, spark, tmp_path):
+    def test_sql_drops_trailer_like_dataframe(self, spark, tmp_path):
         p = tmp_path / "trailer.gff"
         p.write_text(GFF_FASTA_TRAILER)
-        split = FileSplit(str(p), 0, p.stat().st_size, None)
-        py_rows = list(parse_gff_split(split))
-        assert [r["seqname"] for r in py_rows] == ["sq0"]
-        raw_rows = list(parse_gff_raw_split(split))
+        register_all(spark)
+        sql_rows = spark.sql(f"SELECT seqname FROM read_gff('{p}')").collect()
+        assert [r["seqname"] for r in sql_rows] == ["sq0"]
+        raw_rows = spark.sql(f"SELECT seqid FROM read_gff_raw('{p}')").collect()
         assert [r["seqid"] for r in raw_rows] == ["sq0"]
-        # and the native csv path agrees
-        tsv_rows = read_gff(spark, str(p)).collect()
-        assert [r["seqname"] for r in tsv_rows] == ["sq0"]
+        # and the DataFrame reader agrees
+        df_rows = read_gff(spark, str(p)).collect()
+        assert [r["seqname"] for r in df_rows] == ["sq0"]
 
 
 class TestUdtfSplitPlanning:
     """Whole-file parsers must never be planned splittable (a >128MB file
     would emit every record once per split); range-honoring parsers keep
-    split parallelism."""
+    split parallelism — in the SQL table function and the DataSource alike,
+    which read one table (``datasource.SPLIT_PARSERS``)."""
 
-    def _planned_splittable(self, name: str, monkeypatch) -> bool:
-        from exon_duckdb_spark.functions import register as reg
-        from exon_duckdb_spark.sources import splits as sp
-
+    @staticmethod
+    def _capture_splittable(monkeypatch, module) -> dict:
         seen: dict = {}
 
         def fake_plan_splits(path, compression="auto_detect", split_bytes=0, splittable=True):
             seen["splittable"] = splittable
             return []
 
-        monkeypatch.setattr(sp, "plan_splits", fake_plan_splits)
-        parse_import, schema_import, splittable = reg._TABLE_FUNCS[name]
-        handler = reg._make_read_udtf(parse_import, schema_import, splittable).func
+        monkeypatch.setattr(module, "plan_splits", fake_plan_splits)
+        return seen
+
+    def _planned_splittable(self, name: str, monkeypatch) -> bool:
+        from exon_duckdb_spark.functions import register as reg
+        from exon_duckdb_spark.sources import splits as sp
+        from exon_duckdb_spark.sources.datasource import SPLIT_PARSERS
+
+        seen = self._capture_splittable(monkeypatch, sp)
+        _, schema, parse_import, splittable = next(
+            v for v in SPLIT_PARSERS.values() if v[0] == name
+        )
+        handler = reg._make_read_udtf(schema, parse_import, splittable).func
         list(handler().eval("dummy-path"))
         return seen["splittable"]
 
-    @pytest.mark.parametrize(
-        "name", ["read_gff", "read_gtf", "read_bed_file", "read_sam_file_records",
-                 "read_hmm_dom_tbl_out", "read_genbank", "read_mzml", "read_gff_raw"]
-    )
+    @pytest.mark.parametrize("name", ["read_genbank", "read_mzml"])
     def test_whole_file_parsers_unsplittable(self, name, monkeypatch):
         assert self._planned_splittable(name, monkeypatch) is False
 
@@ -159,18 +160,37 @@ class TestUdtfSplitPlanning:
     def test_range_parsers_stay_splittable(self, name, monkeypatch):
         assert self._planned_splittable(name, monkeypatch) is True
 
-    def test_whole_file_parser_really_reads_whole_file(self, tmp_path):
-        # the reason the flag must be False: parse_gff_split ignores the
-        # byte range, so two disjoint splits both yield every record
+    @pytest.mark.parametrize("fmt", ["fasta", "fastq", "genbank", "mzml", "bam"])
+    def test_datasource_plans_like_the_table_function(self, fmt, monkeypatch):
+        from exon_duckdb_spark.sources import datasource as ds
+
+        seen = self._capture_splittable(monkeypatch, ds)
+        source = ds.BIO_DATASOURCES[fmt](options={"path": "dummy-path"})
+        source.reader(source.schema()).partitions()
+        name = ds.SPLIT_PARSERS[fmt][0]
+        assert seen["splittable"] is self._planned_splittable(name, monkeypatch)
+        assert seen["splittable"] is (fmt not in ("genbank", "mzml"))
+
+    def test_line_reader_unsplittable(self, monkeypatch):
+        # read_split_lines ignores byte ranges: planned as splittable, a file
+        # over one split size would yield each line once per split
+        from exon_duckdb_spark.functions import register as reg
+        from exon_duckdb_spark.sources import splits as sp
+
+        seen = self._capture_splittable(monkeypatch, sp)
+        list(reg._make_lines_udtf().func().eval("dummy-path", "auto_detect"))
+        assert seen["splittable"] is False
+
+    def test_whole_file_parser_really_reads_whole_file(self, spark, tmp_path):
+        # the text formats' table functions read lines through one
+        # whole-file split: every record comes back once
         p = tmp_path / "two.gff"
         p.write_text(
             "sq0\tsrc\tgene\t1\t5\t.\t+\t.\tID=a\n"
             "sq1\tsrc\tgene\t2\t6\t.\t+\t.\tID=b\n"
         )
-        size = p.stat().st_size
-        first = list(parse_gff_split(FileSplit(str(p), 0, size // 2, None)))
-        second = list(parse_gff_split(FileSplit(str(p), size // 2, size - size // 2, None)))
-        assert len(first) == len(second) == 2
+        register_all(spark)
+        assert spark.sql(f"SELECT * FROM read_gff('{p}')").count() == 2
 
 
 class TestHarnessGuards:

@@ -192,7 +192,7 @@ def test_read_gff_raw_tvf(sql_spark, tmp_path):
         "KanNP_rdsDRAFT_3085441342", "FGMP", "CDS", 2, 151, ".", "1", "0",
         "ID=KanNP_rdsDRAFT_3085441342.1;locus_tag=KanNP_rdsDRAFT_30854413421;",
     )
-    # DataFrame API twin (native csv scan) produces the same rows
+    # the DataFrame reader runs the same definition over a text scan
     from exon_duckdb_spark.sources import read_gff_raw
 
     r2 = read_gff_raw(sql_spark, str(p)).first()
