@@ -233,16 +233,12 @@ def calibrate(spark, passes: int = 3) -> dict[str, float]:
 
 
 def main() -> None:
-    # the gate-forensics trace (a driver-side collect + JSON write inside
-    # q20m/q22m) must never skew bench timings — force the opt-out here
-    # rather than relying on the invoker to remember it (ADVICE r7)
-    os.environ.setdefault("SPARK_GRAFT_NO_TRACE", "1")
     # memoize composite-query input fixtures across the warm+timed passes
     # (q104's media synth loops, q106's feature frame): each timed pass
     # re-built the full plan, so fixture generation — a parquet scan in
-    # any real deployment — dominated those composites' walls (VERDICT
-    # r10 #4). Operator work (fingerprint branches, the whole GD training
-    # chain) still runs inside every timed pass.
+    # any real deployment — dominated those composites' walls. Operator
+    # work (fingerprint branches, the whole GD training chain) still runs
+    # inside every timed pass.
     os.environ.setdefault("SPARK_GRAFT_BENCH_CACHE", "1")
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     sf = parse_sf(sf_dir)

@@ -33,11 +33,7 @@ from pyspark.sql import types as T
 from pyspark.sql.datasource import DataSource, DataSourceReader, InputPartition
 
 from exon_duckdb_spark.sources import schemas as S
-from exon_duckdb_spark.sources.reader_core import (
-    BATCH_ROWS,
-    _dicts_to_batch,
-    _to_arrow_schema,
-)
+from exon_duckdb_spark.sources.reader_core import _to_arrow_schema, record_batches
 from exon_duckdb_spark.sources.splits import FileSplit, plan_splits
 
 __all__ = ["register_bio_sources", "BIO_DATASOURCES", "SPLIT_PARSERS"]
@@ -74,16 +70,9 @@ class _SplitParserReader(DataSourceReader):
         ]
 
     def read(self, partition: _SplitPartition):
-        arrow_schema = _to_arrow_schema(self._schema)
-        names = [f.name for f in self._schema.fields]
-        buf: list[dict] = []
-        for rec in self._parse(partition.split):
-            buf.append(rec)
-            if len(buf) >= BATCH_ROWS:
-                yield _dicts_to_batch(buf, names, arrow_schema)
-                buf = []
-        if buf:
-            yield _dicts_to_batch(buf, names, arrow_schema)
+        yield from record_batches(
+            self._parse(partition.split), _to_arrow_schema(self._schema)
+        )
 
 
 def _make_datasource(fmt: str, schema: T.StructType, parse_import: str, splittable: bool):

@@ -14,7 +14,8 @@ plumbing.
 
 from __future__ import annotations
 
-from collections.abc import Callable, Iterator
+from collections.abc import Callable, Iterable, Iterator
+from itertools import islice
 from typing import Any
 
 import pyarrow as pa
@@ -89,7 +90,6 @@ def make_reader(
         splits = plan_splits(path, compression, splittable=splittable, **kwargs)
     sdf = splits_df(spark, splits)
     arrow_schema = _to_arrow_schema(schema)
-    names = [f.name for f in schema.fields]
 
     def run(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         for b in batches:
@@ -97,22 +97,20 @@ def make_reader(
                 split = FileSplit(
                     row["path"], row["start"], row["length"], row["compression"]
                 )
-                buf: list[dict[str, Any]] = []
-                for rec in parse(split):
-                    buf.append(rec)
-                    if len(buf) >= BATCH_ROWS:
-                        yield _dicts_to_batch(buf, names, arrow_schema)
-                        buf = []
-                if buf:
-                    yield _dicts_to_batch(buf, names, arrow_schema)
+                yield from record_batches(parse(split), arrow_schema)
 
     return sdf.mapInArrow(run, schema)
 
 
-def _dicts_to_batch(rows: list[dict], names: list[str], schema: pa.Schema) -> pa.RecordBatch:
-    cols = [[r.get(n) for r in rows] for n in names]
-    arrays = [pa.array(c, type=schema.field(n).type) for n, c in zip(names, cols)]
-    return pa.RecordBatch.from_arrays(arrays, schema=schema)
+def record_batches(
+    records: Iterable[dict[str, Any]], schema: pa.Schema
+) -> Iterator[pa.RecordBatch]:
+    """Arrow batches of at most BATCH_ROWS rows from parser record dicts
+    (a key missing from a record is NULL)."""
+    it = iter(records)
+    while rows := list(islice(it, BATCH_ROWS)):
+        arrays = [pa.array([r.get(f.name) for r in rows], type=f.type) for f in schema]
+        yield pa.RecordBatch.from_arrays(arrays, schema=schema)
 
 
 def read_split_lines(split: FileSplit) -> Iterator[bytes]:

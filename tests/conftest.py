@@ -5,11 +5,7 @@ import subprocess
 
 import pytest
 
-# Gate runs write GATE_TRACE_*.json next to __spark_entry__.py; those files
-# are tracked, so a test run must not rewrite them.
-os.environ.setdefault("SPARK_GRAFT_NO_TRACE", "1")
-
-from exon_duckdb_spark.session import get_session  # noqa: E402
+from exon_duckdb_spark.session import get_session
 
 _REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 

@@ -60,13 +60,8 @@ def norm_rows(cols, rows):
     return sorted(tuple(norm_cell(r[i]) for i in order) for r in rows)
 
 
-# The driver's correctness gate records exactly the FIRST registry
-# entries up to this count — it does NOT grow with the registry
-# (CORRECTNESS_r06–r10 each hold 50 rows while the registry grew 50→54;
-# VERDICT r9 structural finding). Entries past the window are rotated
-# there by __spark_entry__.rotation_tail() (computed from the committed
-# CORRECTNESS history — most-recently-green pool members sit out), so
-# every pool entry is driver-witnessed at least every second round.
+# The driver's correctness gate records only the first registry entries up
+# to this count; entries past it are verified locally only.
 DRIVER_WINDOW = entrymod.DRIVER_WINDOW
 
 
@@ -187,14 +182,6 @@ def print_summary() -> None:
         f"says so), {max(0, len(names) - DRIVER_WINDOW)} local-only, "
         f"{len(names) - len(set(names) & set(oracles))} rows-only"
     )
-    # rotation ledger: who sits out this round and when each pool member
-    # was last driver-witnessed (the PARITY.md ledger's live counterpart)
-    last = entrymod.rotation_last_green()
-    print("\nrotation pool (tail = most recently green sits out):")
-    tail = set(entrymod.rotation_tail())
-    for name in entrymod.ROTATION_POOL:
-        slot = "TAIL  " if name in tail else "window"
-        print(f"  {slot}  last driver-green r{last.get(name, '--')}  {name}")
 
 
 def main() -> int:

@@ -62,7 +62,6 @@ def main() -> None:
     name = sys.argv[1]
     passes = int(sys.argv[2]) if len(sys.argv) > 2 else 3
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    os.environ.setdefault("SPARK_GRAFT_NO_TRACE", "1")
     os.environ.setdefault("SPARK_GRAFT_BENCH_CACHE", "1")
     log_dir = tempfile.mkdtemp(prefix=f"profile_{name}_")
     spark = get_session(
