@@ -3,7 +3,7 @@
 The driver's verify runs ``entry(spark)`` as a smoke check, runs each
 ``queries()[name]`` at sf=0.01 and compares it against the matching
 ``oracle_sql()[name]`` via DuckDB (row-count + schema + order-insensitive
-value-hash → CORRECTNESS_r{N}.json).
+value-hash).
 
 Design notes for cross-engine hash-matching:
 - Every computed column is aliased identically on both sides.
@@ -124,27 +124,20 @@ def _scratch(fmt: str, sf_dir: str) -> str:
 
 
 # ---------------------------------------------------------------------------
-# Representation-free gate output (VERDICT r9 #1)
+# Representation-free gate output
 #
-# q20/q22 were driver-red for five rounds with rows+schema green while the
-# round-9 digest gates PROVED the values equal on both engines (err:null ==
-# the driver's DuckDB silently passed every pinned per-branch digest) and
-# the driver's own GATE_TRACE rewrite changed only timestamps (Spark-side
-# sha256s byte-identical). The residual divergence therefore lives in how
-# the driver's comparator *represents* rows before hashing (float
-# formatting, NULL encoding, type tags, column order — all invisible from
-# here). These helpers remove representation from the contract entirely:
-# each emitted row collapses to ONE non-null VARCHAR column whose value is
+# The driver's comparator represents each row in its own way before
+# hashing (float formatting, NULL encoding, type tags, column order), and
+# none of that is visible from here. For the composites in _SIG_COLLAPSE
+# that representation is taken out of the contract: each emitted
+# row collapses to ONE non-null VARCHAR column whose value is
 # `kind ':' md5(rowstr)` — hex digits and the branch tag, nothing else —
-# with the identical byte-for-byte formula on both engines (md5 is already
-# proven bit-identical cross-engine throughout operators/hashing.py).
-# NULLs fold through an explicit chr(1) sentinel; DOUBLE measures are
-# quantized to fixed-point BIGINT via floor(val*scale + 0.5) BEFORE the
-# fold — floor on an identical IEEE double is rule-independent, unlike
-# round(), whose half-way tie handling is an engine policy. Outcome is
-# diagnostic either way: green isolates the five-round red to value
-# representation; red on a pure-ASCII single column leaves only the
-# comparator's multiset hashing itself (VERDICT r9 decision table).
+# with the identical byte-for-byte formula on both engines (md5 is
+# bit-identical cross-engine throughout operators/hashing.py). NULLs fold
+# through an explicit chr(1) sentinel; DOUBLE measures are quantized to
+# fixed-point BIGINT via floor(val*scale + 0.5) BEFORE the fold — floor
+# on an identical IEEE double is rule-independent, unlike round(), whose
+# half-way tie handling is an engine policy.
 # ---------------------------------------------------------------------------
 
 # per-query numeric column + fixed-point scale (None = integer column,
@@ -2507,20 +2500,19 @@ def q99_lsh_index_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q99_stage_times(spark: SparkSession, sf_dir: str, passes: int = 2) -> "dict[str, float]":
-    """Stage-separated q99 walls (VERDICT r9 #3): the builder's round-9
-    close measured the composite at 2.06 s while the driver's BENCH_r09
-    recorded 6.75 s — same code, so one of the stages pays an
-    environment cost the composite number can't localize. bench.py emits
-    this dict under ``branches["q99_lsh_index_probe"]``:
+    """Stage-separated q99 walls: the composite was once measured at
+    2.06 s on one host and 6.75 s on another with the same code, so one
+    of the stages pays an environment cost the composite number can't
+    localize. bench.py emits this dict under
+    ``branches["q99_lsh_index_probe"]``:
 
     - ``sig``    signature compute over the 90% corpus (shingle+minhash
                  pandas UDF through the noop sink — no disk involved);
     - ``write``  the band-partitioned parquet write of the SAME persisted
                  signature frame, through the deterministic band→partition
-                 hash mapping the build itself uses since round 12
-                 (isolates temp-dir/disk cost; a fresh subdir per pass, so
-                 a driver bench that pays cold-dir creation shows it
-                 here);
+                 hash mapping the build itself uses (isolates
+                 temp-dir/disk cost; a fresh subdir per pass, so a
+                 driver bench that pays cold-dir creation shows it here);
     - ``probe``  the broadcast probe join against the on-disk index
                  (parquet scan + join, read side of the disk);
     - ``files``  parquet data-file count of one write (layout cap check:
@@ -8477,7 +8469,7 @@ def oracle_sql(_gate: bool = True, _collapse: bool = True) -> dict[str, str]:
     if _gate:
         for _g in _GATE_ROWSTR:
             _O[_g] = _digest_gate(_g, _O[_g])
-    # round-10 representation-free collapse (VERDICT r9 #1): applied
+    # representation-free collapse (see _SIG_COLLAPSE): applied
     # OUTSIDE the digest gates so the pinned per-branch GATE_EXPECTED
     # constants keep verifying the full 4-column values; the driver's
     # comparator then hashes nothing but `kind ':' md5-hex`.

@@ -2,19 +2,19 @@
 (default /root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS] and prints ONE
 JSON line: {"metric": ..., "value": N, "unit": "sec", "queries": {...}, "sf": ...}.
 The stdout line is deliberately kept under ~1.9 KB (per-query rows keyed
-by qNN tag, branches omitted) because the driver records only a ~2 KB
-stdout tail; the COMPLETE record — full query names, branch timings,
-q99 stages — is written to ./BENCH.json every run (VERDICT r11 #3).
+by qNN tag, branches omitted) because a log tail of ~2 KB must hold it;
+the COMPLETE record — full query names, branch timings, q99 stages — is
+written to ./BENCH.json (untracked) every run.
 
 Each query is forced end-to-end with the noop sink (full computation, no
 driver collect). Every headline query first runs once UNTIMED (plan
 compile, Janino/JIT, parquet footers, Arrow worker startup), then through
 N timed passes (default 3) taking the per-query MINIMUM: single-JVM cold
-costs and host-level interference (CPU steal, background flushes — the
-round-5 host showed idle load ≈ 4 and run-to-run swings of 1.5-6x on
+costs and host-level interference (CPU steal, background flushes — one
+host showed idle load ≈ 4 and run-to-run swings of 1.5-6x on
 UNTOUCHED sub-second queries) swing single measurements far more than any
 plan change; the min across passes is the standard timeit estimator of
-the code's actual cost. The JSON line reports "passes" so rounds with
+the code's actual cost. The JSON line reports "passes" so runs with
 different settings are comparable. Set SPARK_GRAFT_COLD=1 to skip the
 warmup pass and measure cold (first-plan) latencies instead;
 SPARK_GRAFT_PASSES overrides the pass count.
@@ -87,18 +87,16 @@ HEADLINE = [
     "q78_perplexity_score",
     "q88_bigram_perplexity",
     "q98_kneser_ney",
-    # quantization ladder + projected-space ANN (round-5 additions)
+    # quantization ladder + projected-space ANN
     "q79_sq8_search",
     "q97_bq_search",
     "q96_rp_topk",
-    # round-6 additions: incremental index dedup, sketches, order
-    # statistics, interval algebra
+    # incremental index dedup, sketches, order statistics, interval algebra
     "q99_lsh_index_probe",
     "q100_cms_heavy_hitters",
     "q101_quantiles_and_sample",
     "q102_merge_intervals",
-    # round-9 additions: incremental crawl dedup end-to-end, cross-modal
-    # fingerprint dedup
+    # incremental crawl dedup end-to-end, cross-modal fingerprint dedup
     "q103_bloom_crawl",
     "q104_media_dedup",
     "q105_bpe_pipeline",
@@ -123,10 +121,9 @@ def parse_sf(sf_dir: str) -> float:
 
 # The five Structured Streaming pipelines (file stream → stateful operator
 # → availableNow drain to a memory sink), timed END-TO-END including the
-# drain (r14, VERDICT r13 #2: the streaming surface previously had zero
-# timed coverage). Reported under the separate "streaming" key of the
-# BENCH.json artifact — like "branches", NOT part of the headline
-# total/queries, so round-over-round headline comparisons stay intact.
+# drain. Reported under the separate "streaming" key of the BENCH.json
+# artifact — like "branches", NOT part of the headline total/queries, so
+# headline comparisons across versions stay intact.
 STREAMING = [
     "q31_stream_sessionize",
     "q38_stream_windowed_counts",
@@ -136,27 +133,17 @@ STREAMING = [
 ]
 
 
-def make_lookup():
-    """Query resolver shared with tools/bench_scale.py: fine-grained q*
-    module attributes first (keeps timings comparable round-over-round),
-    falling back to the consolidated queries() registry."""
+def run_queries(
+    spark, sf_dir: str, names, warm: bool = True, passes: int = 3
+) -> dict[str, float]:
+    """Warm (untimed) + ``passes`` timed noop-sink passes over ``names``
+    taking the per-query minimum. A name resolves to the fine-grained q*
+    module attribute first, falling back to the queries() registry."""
     registry = entrymod.queries()
 
     def lookup(name):
         return getattr(entrymod, name, None) or registry[name]
 
-    return lookup
-
-
-def run_queries(
-    spark, sf_dir: str, names, warm: bool = True, lookup=None, passes: int = 3
-) -> dict[str, float]:
-    """Warm (untimed) + ``passes`` timed noop-sink passes over ``names``
-    taking the per-query minimum — the one measurement harness, imported
-    by tools/bench_scale.py so both benches measure the same way.
-    ``lookup`` overrides the resolver (bench_scale injects its
-    embedding-scale variants)."""
-    lookup = lookup or make_lookup()
     if warm:
         for name in names:
             lookup(name)(spark, sf_dir).write.mode("overwrite").format("noop").save()
@@ -173,12 +160,11 @@ def run_queries(
 
 
 def run_branches(spark, sf_dir: str, passes: int = 2) -> dict[str, dict[str, float]]:
-    """Branch-level timings for the composite gate queries (VERDICT r7
-    #3): each composite's branches time individually through the same
-    noop sink (1 warm + ``passes`` timed, per-branch minimum). Shared
-    state is released per composite (clearCache — the signature frames
-    minhash operators persist would otherwise accumulate across
-    composites; ADVICE r7)."""
+    """Branch-level timings for the composite gate queries: each
+    composite's branches time individually through the same noop sink
+    (1 warm + ``passes`` timed, per-branch minimum). Shared state is
+    released per composite (clearCache — the signature frames minhash
+    operators persist would otherwise accumulate across composites)."""
     out: dict[str, dict[str, float]] = {}
     for name, factory in entrymod.branch_frames().items():
         frames, cleanup = factory(spark, sf_dir)
@@ -203,11 +189,11 @@ def calibrate(spark, passes: int = 3) -> dict[str, float]:
     """Data-independent host-speed probes, run warm, min over ``passes``:
     'calib_cpu' is a generated-range codegen aggregation (pure JVM compute),
     'calib_shuffle' a generated-range exchange + hash aggregate. Neither
-    touches the repo's operators or any input data, so round-over-round
+    touches the repo's operators or any input data, so run-to-run
     drift in these numbers measures the HOST (CPU steal, scheduler, disk),
     not the code — divide headline totals by the calib ratio before
-    reading a cross-round delta as a plan change. Motivated by a round-5
-    host that ran every untouched query ~20-25% slower than round 4's.
+    reading a cross-run delta as a plan change. One host was measured
+    running every untouched query ~20-25% slower than the run before.
     """
     cpu_df = spark.range(50_000_000).selectExpr(
         "sum(id * 2654435761 % 1000000007) AS s"
@@ -245,7 +231,7 @@ def main() -> None:
     passes = int(os.environ.get("SPARK_GRAFT_PASSES", "3"))
     spark = get_session(app_name="bench")
     # calibrate at START and END, min-merged: the probe itself was measured
-    # 5x apart (0.23 s vs 1.13 s) in back-to-back runs on the round-5 host,
+    # 5x apart (0.23 s vs 1.13 s) in back-to-back runs on one host,
     # so one sample can land entirely inside an interference burst
     calib = calibrate(spark)
     times = run_queries(
@@ -256,9 +242,8 @@ def main() -> None:
         passes=passes,
     )
     branches = run_branches(spark, sf_dir)
-    # stage-separated q99 walls (VERDICT r9 #3): sig compute / parquet
-    # write / probe join / file count, to localize the builder-vs-driver
-    # bench discrepancy on this query
+    # stage-separated q99 walls: sig compute / parquet write / probe
+    # join / file count
     branches["q99_lsh_index_probe"] = entrymod.q99_stage_times(
         spark, sf_dir, passes=2
     )
@@ -275,19 +260,15 @@ def main() -> None:
         "streaming": streaming,
         "sf": sf,
         "passes": passes,
-        # methodology disclosure (ADVICE r11): which composite rows used a
-        # memoized input fixture under SPARK_GRAFT_BENCH_CACHE — without
-        # this, cross-round comparisons can't see the r11 change that
-        # stopped timing q104's fixture synthesis
+        # methodology disclosure: which composite rows used a memoized
+        # input fixture under SPARK_GRAFT_BENCH_CACHE, so a comparison can
+        # see which rows exclude fixture synthesis
         "bench_cache": int(bool(os.environ.get("SPARK_GRAFT_BENCH_CACHE"))),
         "cached_fixtures": entrymod.bench_cached_queries(),
         **calib,
     }
-    # full record to a fixed-path artifact (VERDICT r11 #3): BENCH_r10 and
-    # r11 both recorded `parsed: null` because the driver keeps only a
-    # ~2 KB stdout tail and the single JSON line had outgrown it — totals
-    # and the first ~35 query rows fell off the front. The complete doc
-    # lives here (committed per round) ...
+    # the complete record goes to an untracked fixed-path artifact, since a
+    # single JSON line with every row outgrows a ~2 KB log tail ...
     here = os.path.dirname(os.path.abspath(__file__))
     with open(os.path.join(here, "BENCH.json"), "w") as f:
         json.dump(doc, f, separators=(",", ":"))
@@ -302,10 +283,10 @@ def main() -> None:
     compact.pop("streaming")
     compact["artifact"] = "BENCH.json"
     line = json.dumps(compact, separators=(",", ":"))
-    # never let the stdout record outgrow the ~2 KB tail cap again: shrink
-    # the per-query row count until the line fits (ADVICE r12: a single
-    # truncation to 40 rows could still exceed the cap in the full-name
-    # fallback branch), dropping to totals-only as the last resort
+    # never let the stdout record outgrow the ~2 KB tail cap: shrink the
+    # per-query row count until the line fits (a single truncation to 40
+    # rows could still exceed it in the full-name fallback branch),
+    # dropping to totals-only as the last resort
     n_rows = 40
     while len(line) > 1900 and n_rows > 0:
         compact["queries"] = {k: v for k, v in sorted(

@@ -1894,36 +1894,27 @@ def ngram_jaccard_pairs(
     still share every band by design — run :func:`exact_dedup` first so
     literal duplicates don't re-pair here.
 
-    ``max_bucket`` (LIBRARY default 64 — round 12 restored it after the
-    round-11 default flip to 32 was flagged as a silent behavior break
-    for existing callers, ADVICE r11: a GENUINE near-dup family larger
-    than the cap keeps only its ``max_bucket`` smallest ids as
-    pair-emitting representatives, so members past the cap escape this
-    operator. The gated queries and benchmarks pass ``max_bucket=32``
-    EXPLICITLY at their call sites (__spark_entry__.py q28/q89/q28m):
-    the round-11 sf1 knob experiment measured cap 64→32 cutting the
-    10×-corpus wall 6.6→2.9 s and the sf1/sf0.1 ratio 2.75→1.34 with the
-    verified pair set IDENTICAL at both scales, 256 and 2554 pairs —
-    band buckets past 32 were md5-draw collision tails, not duplicate
-    families, ON THOSE CORPORA; the heavy-tail lesson in
-    tools/bench_scale.py's header. On boilerplate-heavy crawls run
-    :func:`exact_dedup` and :func:`paragraph_dedup` first to collapse
-    template families, and use ``max_bucket=None`` to disable the cap
-    when recall outranks the quadratic-bucket guard) bounds the heavy
-    tail of band-bucket sizes
+    ``max_bucket`` (default 64) bounds the heavy tail of band-bucket sizes
     BEFORE the self-join: each (band, bh) bucket is deterministically
     truncated to its ``max_bucket`` smallest ids (``row_number`` in the
     same exchange the join reuses), so one unlucky minhash draw — a pool
     gram whose tiny hash value wins a whole band for thousands of docs, the
-    measured cause of the sf1 candidate blow-up (tools/bench_scale.py) —
-    costs at most ``max_bucket²/2`` pairs instead of going quadratic.
-    Unlike a drop-the-bucket guard, truncation keeps ``max_bucket``
-    representatives per band of a GENUINE giant near-dup family, so its
-    pairs (and cluster connectivity via :func:`dedup_clusters`) survive;
-    pairs whose members were truncated out of every colliding band are the
-    only recall loss. ``max_bucket=None`` disables the cap and switches to
-    earliest-band map-side pair dedup (no candidate ``distinct``), which is
-    only safe when no bucket can go quadratic.
+    measured cause of the candidate blow-up on a 10× corpus — costs at
+    most ``max_bucket²/2`` pairs instead of going quadratic. Unlike a
+    drop-the-bucket guard, truncation keeps ``max_bucket`` representatives
+    per band of a GENUINE giant near-dup family, so its pairs (and cluster
+    connectivity via :func:`dedup_clusters`) survive; pairs whose members
+    were truncated out of every colliding band are the only recall loss.
+    ``max_bucket=None`` disables the cap and switches to earliest-band
+    map-side pair dedup (no candidate ``distinct``), which is only safe
+    when no bucket can go quadratic. The gated queries and benchmarks pass
+    ``max_bucket=32`` EXPLICITLY at their call sites (__spark_entry__.py
+    q28/q89/q28m): on the 10× corpus, cap 64→32 cut the wall 6.6→2.9 s
+    with the verified pair set IDENTICAL at both scales (256 and 2554
+    pairs) — band buckets past 32 were md5-draw collision tails, not
+    duplicate families, ON THOSE CORPORA. On boilerplate-heavy crawls run
+    :func:`exact_dedup` and :func:`paragraph_dedup` first to collapse
+    template families.
 
     Calibration: collision probability is 1-(1-j^r)^b with r = num_hashes //
     bands rows per band — the S-curve midpoint sits at (1/b)^(1/r) ≈ 0.71
@@ -2079,7 +2070,6 @@ def embedding_dup_pairs(
     n_rows: int | None = None,
     target_bucket: int = 256,
     dims: int = 64,
-    codes: str = "auto",
 ) -> DataFrame:
     """Embedding near-dup pairs: hyperplane-LSH bucketing (one shuffle per
     table) then exact cosine verification per candidate.
@@ -2090,12 +2080,12 @@ def embedding_dup_pairs(
     n²/2^planes. More planes lowers per-table recall; raise ``tables`` to
     compensate (independent hash families, candidates = union over tables).
     With the defaults (planes=8, tables=1) this reproduces the single-table
-    behavior bit-for-bit. ``codes`` selects the literal-expression vs
-    Arrow-batched bucket evaluator (bit-identical; see
-    similarity._numpy_codes_udf for the calibration) — the numpy form also
-    scores candidate pairs with the fused left-to-right fold UDF instead of
-    the interpreted per-pair HOF.
+    behavior bit-for-bit. Past ``similarity.CODES_LITERAL_LIMIT`` the
+    bucket codes come from the bit-identical Arrow-batched evaluator
+    (similarity._numpy_codes_udf), and candidate pairs are scored with the
+    fused left-to-right fold UDF instead of the interpreted per-pair HOF.
     """
+    from exon_duckdb_spark.operators import similarity
     from exon_duckdb_spark.operators.similarity import (
         _fold_dot_udf,
         _norm,
@@ -2108,8 +2098,7 @@ def embedding_dup_pairs(
     if planes is None:
         n = n_rows if n_rows is not None else df.count()
         planes = auto_planes(n, target_bucket)
-    use_numpy = codes == "numpy" or (codes == "auto" and tables * planes * dims > 192)
-    if use_numpy:
+    if tables * planes * dims > similarity.CODES_LITERAL_LIMIT:
         # grouped-kernel path: one shuffle of (id, vec, codes, norm) per
         # table keyed by that table's bucket; all-pairs scoring happens
         # INSIDE the bucket task (C-level fold over the bucket matrix), so
@@ -2218,6 +2207,7 @@ def semantic_dedup(
 
     Returns (id_col, cid, keep, dup_of, dup_cos).
     """
+    from exon_duckdb_spark.operators import similarity
     from exon_duckdb_spark.operators.similarity import (
         _centroid_sim_structs,
         _norm,
@@ -2236,9 +2226,7 @@ def semantic_dedup(
         F.col(id_col), F.col(vec_col).alias("_v"), _norm(F.col(vec_col)).alias("_n")
     )
     dims = len(cents[0][1]) if cents else 0
-    if nlist * dims > 512:
-        # same driver-build-cost cutoff as the IVF family: the literal
-        # struct tree costs ~2 py4j round trips per centroid dim to build
+    if nlist * dims > similarity.IVF_LITERAL_LIMIT:
         assign_cid, _ = _numpy_assigners(cents, 1)
         cid = assign_cid(F.col("_v"))
     else:

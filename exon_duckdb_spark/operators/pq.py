@@ -49,6 +49,14 @@ __all__ = [
     "bq_search",
 ]
 
+# Cutoff, in m × ksub × dsub, between the literal Column evaluator (exact
+# SQL summation order) and the Arrow-batched numpy one that pq_encode and
+# pq_search's lookup table use. Read at call time. At m=4, ksub=8 the
+# literal LUT measured ~1.5 s of driver plan build per pq_search call
+# against 0.6 s of execution, and the numpy encoder ran ~10× faster on
+# 64-dim vectors.
+PQ_LITERAL_LIMIT = 256
+
 
 def _sub_l2(sub_vec: Column, centroid: list[float]) -> Column:
     """Rounded squared L2 distance between a subvector column and a literal
@@ -228,8 +236,6 @@ def pq_encode(
     codebooks: list[list[list[float]]],
     vec_col: str = "embedding",
     id_col: str = "vec_id",
-    assign: str = "auto",
-    literal_limit: int = 256,
 ) -> DataFrame:
     """Encode each vector to its PQ code array (length ``m``, values in
     ``[0, ksub)``) — a map-only pass, no shuffle; write the result once and
@@ -237,22 +243,20 @@ def pq_encode(
 
     Assignment path: literal centroid arrays (pure Column exprs, exactly
     SQL-reproducible summation order) while ``m·ksub·dsub`` ≤
-    ``literal_limit``, else an Arrow-batched numpy broadcast-subtract
-    (``assign`` forces ``'literal'``/``'numpy'``). The HOF distance exprs
-    run interpreted, so the vectorized path wins well before plan size
-    becomes the problem — measured ~10× on 64-dim/m=4/ksub=8. The numpy
-    sum order can differ from the fold order in the last ulp; distances
-    are rounded to 6 dp, so a rank flip needs a value within 5e-7 of a
-    rounding boundary AND a tie at 6 dp — negligible, and the contract
-    query exercises the numpy path against the SQL oracle continuously.
+    ``PQ_LITERAL_LIMIT``, else an Arrow-batched numpy broadcast-subtract.
+    The HOF distance exprs run interpreted, so the vectorized path wins
+    well before plan size becomes the problem. The numpy sum order can
+    differ from the fold order in the last ulp; distances are rounded to
+    6 dp, so a rank flip needs a value within 5e-7 of a rounding boundary
+    AND a tie at 6 dp — negligible, and the contract query exercises the
+    numpy path against the SQL oracle continuously.
 
     Returns (id_col, code ARRAY<INT>).
     """
     m = len(codebooks)
     dsub = len(codebooks[0][0])
     ksub = len(codebooks[0])
-    use_numpy = assign == "numpy" or (assign == "auto" and m * ksub * dsub > literal_limit)
-    if use_numpy:
+    if m * ksub * dsub > PQ_LITERAL_LIMIT:
         enc = _numpy_encoder(codebooks)
         return corpus.select(F.col(id_col), enc(F.col(vec_col)).alias("code"))
     # NULL/ragged vectors must yield NULL codes, matching the numpy path —
@@ -278,11 +282,10 @@ def _numpy_lut(codebooks: list[list[list[float]]]):
 
     Exists for DRIVER-side plan-build cost, not executor speed: the literal
     expression form constructs m·ksub ``zip_with``+``aggregate`` trees —
-    each lambda conversion is a py4j round trip — measured ~1.5 s of pure
-    Python build time per pq_search call at m=4, ksub=8 (execution was
-    0.6 s). Same rounding convention as :func:`_numpy_encoder` (np.round;
-    a divergence from the fold-order sum needs a value within an ulp of a
-    6-dp boundary — negligible, continuously oracle-checked)."""
+    each lambda conversion is a py4j round trip. Same rounding convention
+    as :func:`_numpy_encoder` (np.round; a divergence from the fold-order
+    sum needs a value within an ulp of a 6-dp boundary — negligible,
+    continuously oracle-checked)."""
     import numpy as np
     import pandas as pd
     from pyspark.sql.functions import pandas_udf
@@ -309,8 +312,6 @@ def pq_search(
     k: int = 5,
     vec_col: str = "embedding",
     id_col: str = "vec_id",
-    assign: str = "auto",
-    literal_limit: int = 256,
 ) -> DataFrame:
     """ADC top-k over PQ codes: approximate squared-L2 ranking without ever
     touching corpus vectors.
@@ -322,20 +323,17 @@ def pq_search(
     Smaller distance = nearer; ties break on neighbor id. Self-matches are
     excluded when the query id also appears in the corpus.
 
-    The LUT follows :func:`pq_encode`'s path split (``assign`` /
-    ``literal_limit``): literal Column expressions for small codebooks,
-    an Arrow UDF above the threshold (see :func:`_numpy_lut` — the literal
-    tree's build cost, not run cost, is what it removes).
+    The LUT follows :func:`pq_encode`'s path split (``PQ_LITERAL_LIMIT``):
+    literal Column expressions for small codebooks, an Arrow UDF above the
+    threshold (see :func:`_numpy_lut` — the literal tree's build cost, not
+    run cost, is what it removes).
 
     Returns (query_id, neighbor_id, adc_dist, rank).
     """
     m = len(codebooks)
     dsub = len(codebooks[0][0])
     ksub = len(codebooks[0])
-    use_numpy = assign == "numpy" or (
-        assign == "auto" and m * ksub * dsub > literal_limit
-    )
-    if use_numpy:
+    if m * ksub * dsub > PQ_LITERAL_LIMIT:
         lut = _numpy_lut(codebooks)(F.col(vec_col))
     else:
         lut = F.array(
@@ -391,7 +389,6 @@ def pq_search_rerank(
     fetch_k: int | None = None,
     vec_col: str = "embedding",
     id_col: str = "vec_id",
-    assign: str = "auto",
 ) -> DataFrame:
     """Two-stage retrieval: ADC shortlist, then EXACT cosine re-rank of the
     shortlist against the original vectors (the re-ranking stage of Jégou
@@ -420,7 +417,6 @@ def pq_search_rerank(
         k=fetch,
         vec_col=vec_col,
         id_col=id_col,
-        assign=assign,
     ).select("query_id", "neighbor_id")
     cand = shortlist.join(
         corpus.select(

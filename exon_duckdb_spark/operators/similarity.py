@@ -50,6 +50,20 @@ __all__ = [
     "ann_recall",
 ]
 
+# Size cutoffs between the two evaluators each ANN family has: literal
+# Column expressions (SQL-reproducible summation order) up to the cutoff,
+# an Arrow-batched numpy UDF with the same results past it. They are
+# calibrated to DRIVER plan-build cost, not executor cost: every literal
+# costs ~2 py4j round trips while the plan is built. Read at call time.
+#
+# Hyperplane codes, tables × planes × dims: q32's 2-table × 4-plane ×
+# 64-dim tree measured ~1.2 s of plan build per action, the numpy form ~0 s.
+CODES_LITERAL_LIMIT = 192
+# IVF centroid assignment (nlist × dims) and random projection
+# (out_dim × in_dim): a 16 × 64 literal tree measured ~2 s of driver
+# plan build before any job ran.
+IVF_LITERAL_LIMIT = 512
+
 
 def ann_recall(
     exact_topk: DataFrame,
@@ -210,7 +224,6 @@ def random_projection(
     seed: int = 1,
     vec_col: str = "embedding",
     id_col: str = "vec_id",
-    literal_limit: int = 512,
 ) -> DataFrame:
     """Johnson-Lindenstrauss dimensionality reduction with a Rademacher
     (±1) matrix: ``proj_j = (Σ_i R[j,i]·v_i) / √out_dim``, rounded 6 dp.
@@ -225,11 +238,9 @@ def random_projection(
     projection pushed into the scan stage.
 
     Assignment paths, the IVF family's convention: literal sign arrays +
-    index-order folds when ``out_dim × in_dim <= literal_limit`` (a SQL
-    oracle reproduces every bit), else an Arrow-batched numpy matmul with
-    the matrix in the UDF closure — the 16×64 literal tree measured ~2 s
-    of pure driver plan-build per call before any job ran, the same
-    pathology ivf_topk's cutoff exists for. The matmul sums in a
+    index-order folds when ``out_dim × in_dim <= IVF_LITERAL_LIMIT`` (a
+    SQL oracle reproduces every bit), else an Arrow-batched numpy matmul
+    with the matrix in the UDF closure. The matmul sums in a
     different order than the fold (last-ulp differences absorbed by the
     6 dp round — the `_numpy_assigners` precedent); NULL/ragged vectors
     yield NULL in both paths.
@@ -243,7 +254,7 @@ def random_projection(
         plane_signs(plane=j, dims=in_dim, table=700 + seed)
         for j in range(out_dim)
     ]
-    if out_dim * in_dim > literal_limit:
+    if out_dim * in_dim > IVF_LITERAL_LIMIT:
         import numpy as np
         import pandas as pd
         from pyspark.sql.functions import pandas_udf
@@ -523,11 +534,9 @@ def _numpy_codes_udf(planes: int, tables: int, dims: int):
     the full sf0.1 corpus (codes, norms, and round-6 pair cosines).
 
     Why it exists: the literal-tree form costs ~2 py4j round trips per
-    (plane × dim) literal at plan-BUILD time (q32's 8-plane × 64-dim ×
-    2-side tree measured ~1.2 s of driver time per action before any task
-    ran) and evaluates as an interpreted HOF per row; this path is one py4j
-    call, O(1) plan size, and C-speed per batch — the same calibration as
-    the IVF family's ``literal_limit`` cutoff.
+    (plane × dim) literal at plan-BUILD time and evaluates as an
+    interpreted HOF per row; this path is one py4j call, O(1) plan size,
+    and C-speed per batch. ``CODES_LITERAL_LIMIT`` picks between them.
     """
     import numpy as np
     import pandas as pd
@@ -624,10 +633,7 @@ def _hybrid_base(
     corpus: DataFrame, text_col: str, vec_col: str, id_col: str
 ) -> DataFrame:
     """:func:`hybrid_topk` stage 1 — the one corpus projection both
-    branches consume: (id, tokens, vec, norm). Split out (r14) so
-    tools/bench_scale.py can time each branch in isolation, the same
-    stage-attribution treatment q72/q88 got in r13; composition in
-    hybrid_topk is plan-identical to the previous inline body."""
+    branches consume: (id, tokens, vec, norm)."""
     from exon_duckdb_spark.operators.text import tokens
 
     return corpus.select(
@@ -1003,7 +1009,6 @@ def ann_topk(
     planes: int = 8,
     tables: int = 1,
     dims: int = 64,
-    codes: str = "auto",
 ) -> DataFrame:
     """Approximate top-k: exact cosine ranking within the query's LSH bucket.
 
@@ -1016,17 +1021,13 @@ def ann_topk(
     filter over the rows' bucket arrays — so each candidate is scored once
     and no post-scoring distinct/shuffle is needed at all.
 
-    ``codes`` picks the bucket-code evaluator: 'literal' keeps the
-    documented ``hyperplane_bucket`` expression (oracle-shaped, but
-    plan-build cost is ~2 py4j round trips per plane × dim literal and the
-    fold is interpreted per row); 'numpy' is the Arrow-batched twin with the
-    identical left-to-right fold (bit-equal codes/norms, O(1) plan size);
-    'auto' switches to numpy past the same driver-build-cost calibration as
-    the IVF family (q32's 2-table × 4-plane × 64-dim tree measured ~1.2 s
-    of plan build per action; the numpy form ~0 s with identical results).
+    Bucket codes come from the documented ``hyperplane_bucket`` expression
+    while ``tables × planes × dims <= CODES_LITERAL_LIMIT``, else from its
+    Arrow-batched twin with the identical left-to-right fold (bit-equal
+    codes and norms, O(1) plan size).
     Returns (query_id, neighbor_id, cosine_sim, rank).
     """
-    use_numpy = codes == "numpy" or (codes == "auto" and tables * planes * dims > 192)
+    use_numpy = tables * planes * dims > CODES_LITERAL_LIMIT
     codes_udf = _numpy_codes_udf(planes, tables, dims) if use_numpy else None
 
     def bucket_arr(vec: Column) -> Column:
@@ -1123,8 +1124,6 @@ def kmeans_refine(
     iters: int = 1,
     vec_col: str = "embedding",
     id_col: str = "vec_id",
-    assign: str = "auto",
-    literal_limit: int = 512,
 ) -> list[tuple[int, list[float], float]]:
     """Distributed Lloyd (k-means) refinement of the deterministic seed
     centroids — turns the IVF coarse quantizer from "first nlist vectors"
@@ -1145,7 +1144,7 @@ def kmeans_refine(
         return cents
     dims = len(cents[0][1])
     for _ in range(iters):
-        use_numpy = assign == "numpy" or (assign == "auto" and nlist * dims > literal_limit)
+        use_numpy = nlist * dims > IVF_LITERAL_LIMIT
         base = corpus.select(
             F.col(vec_col).alias("vec"), _norm(F.col(vec_col)).alias("norm")
         )
@@ -1299,7 +1298,6 @@ def hard_negatives(
     vec_col: str = "embedding",
     id_col: str = "vec_id",
     cents: list | None = None,
-    literal_limit: int = 512,
 ) -> DataFrame:
     """Hard-negative mining for contrastive embedding training: per query,
     the top-k most-similar corpus vectors that sit in a DIFFERENT coarse
@@ -1315,8 +1313,8 @@ def hard_negatives(
     quantizer serves retrieval, SemDeDup AND mining — and a SQL oracle
     replays the decisions bit-for-bit.
 
-    Scale: assignment is map-only (broadcast literal centroids under
-    ``literal_limit``, Arrow numpy matmul past it); scoring is the
+    Scale: assignment is map-only (broadcast literal centroids up to
+    ``IVF_LITERAL_LIMIT``, Arrow numpy matmul past it); scoring is the
     :func:`cosine_topk` shape — broadcast queries, corpus never shuffles,
     map-side :func:`partition_topk` before the rank window.
 
@@ -1325,7 +1323,7 @@ def hard_negatives(
     if cents is None:
         cents = _seed_centroids(corpus, nlist, vec_col, id_col)
     dims = len(cents[0][1]) if cents else 0
-    use_numpy = len(cents) * dims > literal_limit
+    use_numpy = len(cents) * dims > IVF_LITERAL_LIMIT
     if use_numpy:
         assign_cid, _ = _numpy_assigners(cents, 1)
 
@@ -1379,8 +1377,6 @@ def ivf_topk(
     id_col: str = "vec_id",
     nlist: int = 16,
     nprobe: int = 2,
-    assign: str = "auto",
-    literal_limit: int = 512,
 ) -> DataFrame:
     """IVF-flat approximate top-k: probe the ``nprobe`` nearest inverted lists.
 
@@ -1391,12 +1387,9 @@ def ivf_topk(
     the driver (nlist × dims floats — index metadata, same as any ANN
     library). List assignment is a map-only pass over the corpus — no
     shuffle, no join — via literal centroid arrays when nlist × dims <=
-    ``literal_limit``, else via an Arrow-batched numpy matmul UDF. The
-    cutoff is calibrated to DRIVER plan-build cost, not executor cost:
-    the literal tree spends ~2 py4j round trips per centroid dim while
-    building (16×64 measured ~2 s of pure Python before any job ran);
-    ``assign`` forces 'literal'/'numpy'). Nearness is cosine rounded to
-    6dp, ties broken toward the smaller centroid id.
+    ``IVF_LITERAL_LIMIT``, else via an Arrow-batched numpy matmul UDF.
+    Nearness is cosine rounded to 6dp, ties broken toward the smaller
+    centroid id.
 
     Each query probes its ``nprobe`` nearest lists; candidates come from one
     equi-join of the corpus against the broadcast (query × probe) table on
@@ -1415,11 +1408,9 @@ def ivf_topk(
     nprobe = min(nprobe, len(cents)) if cents else nprobe
 
     dims = len(cents[0][1]) if cents else 0
-    # Literal-array assignment compiles O(nlist × dims) expression nodes
-    # (~6 s at 16×64); past the cutoff switch to a numpy pandas_udf whose
-    # centroid matrix ships in the UDF closure — same map-only shape,
-    # O(1) plan size, and the batched matmul is faster per row anyway.
-    use_numpy = assign == "numpy" or (assign == "auto" and nlist * dims > literal_limit)
+    # past the cutoff the centroid matrix ships in a numpy pandas_udf's
+    # closure — same map-only shape, O(1) plan size
+    use_numpy = nlist * dims > IVF_LITERAL_LIMIT
 
     if use_numpy:
         assign_cid, probe_cids = _numpy_assigners(cents, nprobe)
@@ -1482,8 +1473,6 @@ def ivf_build(
     nlist: int = 16,
     vec_col: str = "embedding",
     id_col: str = "vec_id",
-    assign: str = "auto",
-    literal_limit: int = 512,
     refine_iters: int = 0,
 ) -> None:
     """Build and PERSIST an IVF-flat index: the build-once/probe-many
@@ -1501,7 +1490,7 @@ def ivf_build(
 
     Assignment is the same map-only pass as :func:`ivf_topk` (literal
     centroid arrays, or an Arrow-batched numpy matmul past
-    ``literal_limit``); the only shuffle is the partitioned write's file
+    ``IVF_LITERAL_LIMIT``); the only shuffle is the partitioned write's file
     fan-out. Centroids are the ``nlist`` smallest-id corpus vectors —
     deterministic, so a SQL oracle can rebuild the index arithmetically —
     optionally Lloyd-trained with ``refine_iters`` rounds of
@@ -1509,14 +1498,12 @@ def ivf_build(
     """
     spark = corpus.sparkSession
     if refine_iters > 0:
-        cents = kmeans_refine(
-            corpus, nlist, refine_iters, vec_col, id_col, assign, literal_limit
-        )
+        cents = kmeans_refine(corpus, nlist, refine_iters, vec_col, id_col)
     else:
         cents = _seed_centroids(corpus, nlist, vec_col, id_col)
     dims = len(cents[0][1]) if cents else 0
 
-    use_numpy = assign == "numpy" or (assign == "auto" and nlist * dims > literal_limit)
+    use_numpy = nlist * dims > IVF_LITERAL_LIMIT
     base = corpus.select(
         F.col(id_col).alias("vec_id"),
         F.col(vec_col).alias("vec"),

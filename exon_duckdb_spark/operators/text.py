@@ -811,9 +811,7 @@ def _tfidf_tf(
     df: DataFrame, text_col: str = "text", id_col: str = "doc_id"
 ) -> DataFrame:
     """:func:`tfidf_top_terms` stage 1: the map-side (doc, term, tf)
-    frame. Exposed so tools/bench_scale.py can attribute the operator's
-    scale ratio to its stages (VERDICT r12 #4); query results flow only
-    through :func:`tfidf_top_terms`."""
+    frame; query results flow only through :func:`tfidf_top_terms`."""
     # each stage lands in its own projection so the lambdas below bind to
     # ATTRIBUTES (_ts/_st), not to inlined expression trees — a lambda
     # that captures an outer non-attribute expression re-evaluates it per
@@ -882,17 +880,15 @@ def tfidf_top_terms(
     functions, explode (term, tf) entries — so the corpus-width
     (doc, term) pre-aggregation shuffle a naive explode+groupBy pays is
     gone entirely (a doc's tokens live in one row; no cross-partition
-    merge is ever needed). Round-10 change after the sf1 linearity sweep
-    flagged this operator's 4.3× ratio at 10× data (VERDICT r9 #5): the
-    groupBy's map-side combine already collapsed duplicates, but still
+    merge is ever needed). The explode+groupBy form ran 4.3× slower at
+    10× data: its map-side combine already collapsed duplicates, but still
     shipped every (doc, term, tf) row through an exchange just to merge
     nothing. Document frequencies remain a vocab-sized aggregate joined
     back ON THE TERM KEY (vocab ≪ corpus, but too big to broadcast at
     100 TB — Catalyst/AQE picks broadcast when it fits); the corpus-size
     scalar N rides along as a broadcast crossJoin; the one remaining
-    corpus-width shuffle is the per-doc top-k window. Stages are exposed
-    as :func:`_tfidf_tf` / :func:`_tfidf_scored` for the linearity
-    bench's component attribution (VERDICT r12 #4).
+    corpus-width shuffle is the per-doc top-k window. The stages are
+    :func:`_tfidf_tf` and :func:`_tfidf_scored`.
     """
     scored = _tfidf_scored(df, text_col=text_col, id_col=id_col)
     from pyspark.sql import Window

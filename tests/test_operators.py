@@ -9,6 +9,11 @@ import pytest
 from pyspark.sql import functions as F
 
 from exon_duckdb_spark import operators as ops
+from exon_duckdb_spark.operators import pq, similarity
+
+# size-cutoff values that force each evaluator of an ANN family: every
+# input size is at most the first and above the second
+FORCE_LIMIT = {"literal": 10**9, "numpy": -1}
 
 
 @pytest.fixture(scope="module")
@@ -444,7 +449,7 @@ def test_ivf_topk_full_probe_matches_exact(spark):
     assert key(ivf) == key(exact)
 
 
-def test_ivf_topk_nprobe_exceeding_nlist_probes_all(spark):
+def test_ivf_topk_nprobe_exceeding_nlist_probes_all(spark, monkeypatch):
     """Round-5 review: the literal probe path's F.slice(sorted, -nprobe,
     nprobe) silently returned EMPTY probes (zero results, no error) when
     nprobe > centroid count; nprobe must clamp so a tiny corpus still
@@ -453,14 +458,15 @@ def test_ivf_topk_nprobe_exceeding_nlist_probes_all(spark):
     emb = spark.createDataFrame(rows, ["vec_id", "embedding"])
     q = emb.where(F.col("vec_id") == 0)
     for assign in ("literal", "numpy"):
-        out = ops.ivf_topk(emb, q, k=3, nlist=8, nprobe=5, assign=assign).collect()
+        monkeypatch.setattr(similarity, "IVF_LITERAL_LIMIT", FORCE_LIMIT[assign])
+        out = ops.ivf_topk(emb, q, k=3, nlist=8, nprobe=5).collect()
         assert len(out) == 1 and out[0]["neighbor_id"] == 1, (assign, out)
 
 
-def test_vector_udf_paths_null_propagate(spark):
+def test_vector_udf_paths_null_propagate(spark, monkeypatch):
     """Round-5 review: the numpy assignment/encode UDFs crashed the task on
     NULL or wrong-length vectors while the literal paths NULL-propagate —
-    assign='auto' must not flip between success and job failure on
+    the size cutoff must not flip between success and job failure on
     codebook size. NULL rows yield NULL outputs on both paths."""
     import math as m
 
@@ -469,9 +475,10 @@ def test_vector_udf_paths_null_propagate(spark):
     emb = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
     books = ops.pq_codebooks(emb.where(F.col("vec_id") < 10), m=2, ksub=4, dims=8)
     for assign in ("literal", "numpy"):
+        monkeypatch.setattr(pq, "PQ_LITERAL_LIMIT", FORCE_LIMIT[assign])
         codes = {
             r["vec_id"]: r["code"]
-            for r in ops.pq_encode(emb, books, assign=assign).collect()
+            for r in ops.pq_encode(emb, books).collect()
         }
         assert codes[90] is None, assign
         assert all(codes[i] is not None for i in range(10)), assign
@@ -577,16 +584,16 @@ def test_ivfpq_residual_index(spark):
         assert all(rs[i]["adc_dist"] <= rs[i + 1]["adc_dist"] for i in range(len(rs) - 1))
 
 
-def test_pq_numpy_encode_matches_literal(spark):
+def test_pq_numpy_encode_matches_literal(spark, monkeypatch):
     import math as m
 
     rows = [(i, [m.sin(0.53 * i + 0.1 * j) for j in range(16)]) for i in range(50)]
     emb = spark.createDataFrame(rows, ["vec_id", "embedding"])
     books = ops.pq_codebooks(emb, m=4, ksub=8, dims=16)
-    lit = {r["vec_id"]: r["code"] for r in
-           ops.pq_encode(emb, books, assign="literal").collect()}
-    np_ = {r["vec_id"]: r["code"] for r in
-           ops.pq_encode(emb, books, assign="numpy").collect()}
+    monkeypatch.setattr(pq, "PQ_LITERAL_LIMIT", FORCE_LIMIT["literal"])
+    lit = {r["vec_id"]: r["code"] for r in ops.pq_encode(emb, books).collect()}
+    monkeypatch.setattr(pq, "PQ_LITERAL_LIMIT", FORCE_LIMIT["numpy"])
+    np_ = {r["vec_id"]: r["code"] for r in ops.pq_encode(emb, books).collect()}
     assert lit == np_
 
 
@@ -889,7 +896,7 @@ class TestDedupScale:
                 spark.sparkContext._jvm.scala.Option.empty()
             )
 
-    def test_ivf_numpy_assignment_matches_literal(self, spark):
+    def test_ivf_numpy_assignment_matches_literal(self, spark, monkeypatch):
         """The numpy (large-index) assignment path must reproduce the
         literal-array path exactly — same lists, same top-k."""
         from pyspark.sql import functions as F
@@ -904,12 +911,10 @@ class TestDedupScale:
             ).alias("embedding"),
         )
         q = df.where(F.col("vec_id") < 5)
-        lit = sorted(
-            map(tuple, ivf_topk(df, q, k=3, nlist=8, nprobe=2, assign="literal").collect())
-        )
-        npy = sorted(
-            map(tuple, ivf_topk(df, q, k=3, nlist=8, nprobe=2, assign="numpy").collect())
-        )
+        monkeypatch.setattr(similarity, "IVF_LITERAL_LIMIT", FORCE_LIMIT["literal"])
+        lit = sorted(map(tuple, ivf_topk(df, q, k=3, nlist=8, nprobe=2).collect()))
+        monkeypatch.setattr(similarity, "IVF_LITERAL_LIMIT", FORCE_LIMIT["numpy"])
+        npy = sorted(map(tuple, ivf_topk(df, q, k=3, nlist=8, nprobe=2).collect()))
         assert lit == npy and len(lit) == 15
 
     def test_temperature_mix_flattens_shares(self, spark):

@@ -18,23 +18,6 @@ from exon_duckdb_spark.plans import (
 SF = "/root/testdata/sf0.001"
 
 
-def test_plan_audit_reads_final_adaptive_plan(spark):
-    """tools/plan_audit.py must count the EXECUTED (final) adaptive plan:
-    operator counts from the Final Plan tree only, per-node facts from the
-    node-unique detail blocks — the parser this pins produced doubled
-    counts twice before landing."""
-    from tools.plan_audit import audit_one
-
-    df = entry.q01_pricing_summary(spark, SF)
-    df.collect()  # finalize the adaptive plan on df's own queryExecution
-    row = audit_one(df)
-    assert row["scans"] == 1  # one lineitem scan, not 2 (final+initial)
-    assert row["pushed_filters"] == 2  # IsNotNull + LessThanOrEqual
-    assert row["exchanges"] == 1  # the one groupBy shuffle
-    assert row["codegen_spans"] >= 1  # codegen ids visible post-execution
-    assert not row["cartesian"] and not row["bnlj"]
-
-
 def test_filter_pushdown_reaches_scan(spark):
     df = entry.q01_pricing_summary(spark, SF)
     assert any("LessThanOrEqual(l_shipdate" in f for f in pushed_filters(df))
@@ -85,6 +68,36 @@ def test_embedding_dedup_multi_table_has_no_distinct_shuffle(spark):
     p = explain_formatted(df)
     assert "HashAggregate" not in p and "SortAggregate" not in p
     assert_no_cartesian(df)
+
+
+def test_ann_evaluator_follows_size_cutoff(spark):
+    """Each ANN family builds literal Column expressions up to its size
+    cutoff and an Arrow-batched numpy UDF (an ArrowEvalPython node) past
+    it — one case on each side of the cutoff, per family."""
+    from exon_duckdb_spark.operators import pq, similarity
+
+    emb = spark.createDataFrame(
+        [(i, [float(i + 1)]) for i in range(3)], "vec_id long, embedding array<double>"
+    )
+
+    def ann(size):  # tables × planes × dims
+        return similarity.ann_topk(emb, emb, planes=1, tables=1, dims=size)
+
+    def ivf(size):  # nlist × dims, with 1-dim vectors
+        return similarity.ivf_topk(emb, emb, nlist=size)
+
+    def pq_enc(size):  # m × ksub × dsub, with m = ksub = 1
+        return pq.pq_encode(emb, [[[0.0] * size]])
+
+    for build, limit in (
+        (ann, similarity.CODES_LITERAL_LIMIT),
+        (ivf, similarity.IVF_LITERAL_LIMIT),
+        (pq_enc, pq.PQ_LITERAL_LIMIT),
+    ):
+        arrow = [
+            "ArrowEvalPython" in explain_formatted(build(n)) for n in (limit, limit + 1)
+        ]
+        assert arrow == [False, True], (build.__name__, limit, arrow)
 
 
 def test_pq_lloyd_round_is_one_shuffle(spark):

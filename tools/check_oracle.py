@@ -9,14 +9,14 @@ twin on DuckDB over the same parquet tables, then compares:
 
 Usage: python tools/check_oracle.py [--summary] [sf_dir] [query_name ...]
 
-``--summary`` appends a one-block summary: per-query verification tier
-(driver-green = inside the driver's correctness window vs local-only),
-so registry drift between declared and driver-verified queries is
-visible in-repo (judge round-3 ask #8).
+``--summary`` appends a one-block summary (or prints only that, given no
+other argument): per query, whether it sits inside the driver's
+correctness window (the first DRIVER_WINDOW entries of queries()) or is
+local-only, and whether it has an oracle.
 
 The full suite also runs under pytest (tests/test_oracle_contract.py) at
-sf0.001 so every declared query — including the ones outside the driver
-window — stays oracle-verified on every test run (ADVICE r3 #5).
+sf0.001, so every declared query — including the ones outside the driver
+window — stays oracle-verified on every test run.
 """
 
 from __future__ import annotations
@@ -110,7 +110,7 @@ def run_checks(
             # the minhash operators persist their signature frames for
             # the duration of the lazy plan (documented lifecycle);
             # looping 54 queries in one session would otherwise
-            # accumulate MEMORY_AND_DISK entries (ADVICE r7)
+            # accumulate MEMORY_AND_DISK entries
             spark.catalog.clearCache()
         spark_t = time.time() - t0
         if name not in oracles:
@@ -166,8 +166,8 @@ def run_checks(
 
 def print_summary() -> None:
     """Verification-tier table: which declared queries sit inside the
-    driver's {DRIVER_WINDOW}-row correctness window (driver-green each
-    round) vs local-only (verified by this script / pytest)."""
+    driver's DRIVER_WINDOW-row correctness window vs local-only (verified
+    by this script / pytest)."""
     names = list(entrymod.queries())
     oracles = entrymod.oracle_sql()
     print(f"\n== registry summary ({len(names)} declared queries) ==")
@@ -178,8 +178,8 @@ def print_summary() -> None:
         print(f"  {tier}  {oracle:9s}  {name}")
     n_driver = min(DRIVER_WINDOW, len(names))
     print(
-        f"{n_driver} driver-windowed (green only once CORRECTNESS_r*.json "
-        f"says so), {max(0, len(names) - DRIVER_WINDOW)} local-only, "
+        f"{n_driver} driver-windowed, "
+        f"{max(0, len(names) - DRIVER_WINDOW)} local-only, "
         f"{len(names) - len(set(names) & set(oracles))} rows-only"
     )
 

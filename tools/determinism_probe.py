@@ -1,13 +1,13 @@
-"""Determinism probe for the driver correctness gate (judge r5 ask #1).
+"""Determinism probe for the driver correctness gate.
 
 Runs selected queries() entries in THIS process's fresh SparkSession under
 a config variant, prints one JSON line {query: value_hash} computed with
 the same normalization as tools/check_oracle.py (columns sorted by name,
 rows sorted, floats to 9 significant digits). A wrapper script launches
 one subprocess per variant (fresh JVM + fresh PYTHONHASHSEED) and diffs
-the hashes: any cross-variant or cross-run difference is exactly the class
-of environment-sensitive nondeterminism the driver gate exposed on
-q20/q22 in round 5 (CORRECTNESS_r05.json: hash_match false, rows green).
+the hashes: any cross-variant or cross-run difference is
+environment-sensitive nondeterminism, the class that once made q20/q22
+fail the driver's value hash while their row counts matched.
 
 Usage:
   python tools/determinism_probe.py VARIANT [sf_dir] [query ...]

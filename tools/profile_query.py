@@ -1,4 +1,4 @@
-"""Listener-level job attribution for any bench query (VERDICT r13 #1).
+"""Listener-level job attribution for any bench query.
 
 Usage: python tools/profile_query.py <query_name> [passes]
 
