@@ -2509,16 +2509,16 @@ def q99_stage_times(spark: SparkSession, sf_dir: str, passes: int = 2) -> "dict[
     - ``sig``    signature compute over the 90% corpus (shingle+minhash
                  pandas UDF through the noop sink — no disk involved);
     - ``write``  the band-partitioned parquet write of the SAME persisted
-                 signature frame, through the deterministic band→partition
-                 hash mapping the build itself uses (isolates
-                 temp-dir/disk cost; a fresh subdir per pass, so a
-                 driver bench that pays cold-dir creation shows it here);
+                 signature frame, through the band rebalance the build
+                 itself uses (isolates temp-dir/disk cost; a fresh
+                 subdir per pass, so a driver bench that pays cold-dir
+                 creation shows it here);
     - ``probe``  the broadcast probe join against the on-disk index
                  (parquet scan + join, read side of the disk);
     - ``files``  parquet data-file count of one write (layout cap check:
-                 the deterministic murmur3 band→partition routing keeps
-                 it ~1 per band — a large value means the small-files
-                 regression returned).
+                 the rebalance sizes files from shuffle bytes, which keeps
+                 it ~1 per band at this scale — a large value means the
+                 small-files regression returned).
 
     Each stage is warmed once and timed ``passes`` times (minimum), the
     same discipline as run_queries. ``SPARK_GRAFT_SCRATCH`` relocates the
@@ -2558,22 +2558,11 @@ def q99_stage_times(spark: SparkSession, sf_dir: str, passes: int = 2) -> "dict[
         cached.write.mode("overwrite").format("noop").save()  # materialize
         n_write = [0]
 
-        from exon_duckdb_spark.operators.dedup import _band_partition_count
-
-        p_bands = _band_partition_count(4)
-
         def _write():
             n_write[0] += 1
             path = f"{tmp}/idx_{n_write[0]}"
-            # mirror lsh_index_build's fallback (ADVICE r12): a None
-            # partition count must fall back to range partitioning (the
-            # frame is already persisted here), not TypeError
-            routed = (
-                cached.repartition(p_bands, F.col("band"))
-                if p_bands is not None
-                else cached.repartitionByRange(4, F.col("band"))
-            )
-            routed.write.mode(
+            # the same write lsh_index_build issues
+            cached.repartition("band").hint("rebalance", "band").write.mode(
                 "overwrite"
             ).partitionBy("band").parquet(path)
 

@@ -134,12 +134,11 @@ def minhash_keyed(
     word-shingle minhash consumer derives from: one fused Arrow pass
     (shingles + all k affine minima, :func:`_shingle_minhash_udf`).
 
-    Exposed (round 12, VERDICT r11 #4) so a pipeline running SEVERAL
-    signature consumers over one corpus — exact-verify pairs, the
-    band-estimate screen, a persisted index build AND its probe batch —
-    computes the UDF ONCE: persist the returned frame, slice it
-    (``.where(...)``) per consumer, and pass it via the consumers'
-    ``keyed=`` parameter. ``mh`` values are independent of ``with_ws``,
+    Exposed so a pipeline running SEVERAL signature consumers over one
+    corpus — exact-verify pairs, the band-estimate screen, a persisted
+    index build AND its probe batch — computes the UDF ONCE: persist the
+    returned frame, slice it (``.where(...)``) per consumer, and pass it
+    via the consumers' ``keyed=`` parameter. ``mh`` values are independent of ``with_ws``,
     so one ``with_ws=True`` frame serves estimate-only consumers too
     (Catalyst prunes the unused wordset column out of the cache scan).
     The caller owns persistence and lifetime. ``parallel=False`` skips
@@ -162,7 +161,7 @@ def minhash_keyed(
     # verify compatibility (_check_keyed): a keyed frame built with a
     # different num_hashes/shingle than the consumer call would otherwise
     # silently produce wrong band keys — element_at past the _mh array
-    # end yields NULL and concat_ws skips NULLs (ADVICE r12 medium)
+    # end yields NULL and concat_ws skips NULLs
     cols.append(F.col("_f.mh").alias(
         "_mh", metadata={"num_hashes": num_hashes, "shingle": shingle}
     ))
@@ -183,7 +182,7 @@ def _check_keyed(
 
     When the consumer passes its ``num_hashes``/``shingle``, they are
     compared against the parameters stamped on ``_mh``'s column metadata
-    by :func:`minhash_keyed` (ADVICE r12 medium): a mismatched frame
+    by :func:`minhash_keyed`: a mismatched frame
     silently DROPS pairs (band keys built from NULL-skipping concat_ws
     over a too-short signature array) instead of erroring. Frames built
     by hand without the metadata stamp skip the compatibility check —
@@ -267,8 +266,8 @@ def minhash_lsh_pairs(
     # UNROUNDED exact IEEE division of two small integers: bit-identical
     # in every binary64 engine (Spark, DuckDB, numpy), so neither the
     # value nor the threshold compare depends on a decimal rounding
-    # convention (VERDICT r7 #1c: round-half-up vs half-even at the 6th
-    # decimal was a cross-engine divergence class on the gate).
+    # convention (round-half-up vs half-even at the 6th decimal differs
+    # between engines).
     return (
         j.select(
             "id_a",
@@ -448,8 +447,7 @@ def hamming_pairs(
     # NULL fingerprints (undecodable assets) can never match — drop them
     # BEFORE the block explode unconditionally, or each would still ship
     # max_hamming+1 join-input rows of pure shuffle waste on dirty
-    # corpora (ADVICE r9: the filter used to apply only when group_col
-    # was set, leaving the grouped/ungrouped paths inconsistent)
+    # corpora, grouped or not
     sh = sh.where(F.col("_sh").isNotNull())
     blocks = F.array(
         *[
@@ -536,102 +534,6 @@ def video_near_dup_pairs(
     )
 
 
-def _murmur3_int32(x: int, seed: int = 42) -> int:
-    """Spark's ``hash()`` of an IntegerType column for one value: Murmur3
-    x86 32-bit, seed 42, one 4-byte block — reimplemented from the public
-    algorithm so the driver can PRE-compute which shuffle partition a
-    known integer key lands in (pmod(hash, numPartitions)) without a
-    sampling job. Returns the SIGNED int32 Spark reports. Pinned against
-    ``F.hash`` itself in tests/test_operators.py."""
-    M = 0xFFFFFFFF
-    k = (x & M) * 0xCC9E2D51 & M
-    k = ((k << 15) | (k >> 17)) & M
-    k = k * 0x1B873593 & M
-    h = (seed ^ k) & M
-    h = ((h << 13) | (h >> 19)) & M
-    h = (h * 5 + 0xE6546B64) & M
-    h ^= 4  # total byte length
-    h ^= h >> 16
-    h = h * 0x85EBCA6B & M
-    h ^= h >> 13
-    h = h * 0xC2B2AE35 & M
-    h ^= h >> 16
-    return h - (1 << 32) if h >= (1 << 31) else h
-
-
-def _band_partition_count(bands: int, max_search: int = 512) -> "int | None":
-    """Smallest partition count P >= bands for which Spark's hash
-    partitioning pmod(murmur3(band), P) sends each band value 0..bands-1
-    to a DISTINCT partition — the deterministic replacement for
-    repartitionByRange's sampling pass when the key domain is known at
-    plan time. None if no P within ``max_search`` separates them (callers
-    fall back to range partitioning)."""
-    hashes = [_murmur3_int32(b) for b in range(bands)]
-    for p in range(bands, max_search + 1):
-        if len({h % p for h in hashes}) == bands:
-            return p
-    return None
-
-
-def _route_partition_count(
-    bands: int, files_per_band: int, max_search: int = 8192
-) -> int:
-    """:func:`_band_partition_count` generalized to the (band, salt)
-    routing key ``band * files_per_band + salt`` (salt in
-    0..files_per_band-1). For small route domains (≤ 64 values) this
-    finds the smallest P for which Spark's pmod(murmur3(route), P) sends
-    every route value to a DISTINCT partition — each band dir then gets
-    exactly ``files_per_band`` files. Past that, perfect separation
-    needs P ~ n²/2 (birthday bound) and stops mattering: with P = n each
-    write task holds ~Poisson(1) route values, so file counts land
-    within a small factor of the target and no task collects more than a
-    few groups — the sliver-per-partition explosion the f=1 search
-    exists to prevent cannot recur. Always returns an int (ADVICE r13):
-    when the small-domain search fails, P = n — residual collisions
-    merely merge files within a band dir, never cross band dirs."""
-    n = bands * files_per_band
-    if n > 64:
-        return n
-    hashes = [_murmur3_int32(v) for v in range(n)]
-    for p in range(n, max_search + 1):
-        if len({h % p for h in hashes}) == n:
-            return p
-    return n  # collisions merely merge files within a band dir
-
-
-def _estimated_plan_rows(df: DataFrame, id_col: str) -> "int | None":
-    """Catalyst size-only row estimate for ``df`` projected to ``id_col``
-    — plan-time metadata (file sizes × schema-width ratios), NO job runs.
-    Order-of-magnitude accuracy is all the caller needs (file sizing);
-    None when the JVM plan stats are unavailable or defaulted. The
-    defaulted-stats cutoff is 2^50 bytes: a real id-column projection of
-    even 10^14 rows stays under it, while Catalyst's
-    unknown-size fallbacks (Long.MaxValue scaled by width ratios, e.g.
-    local relations behind a UDF) sit far above."""
-    try:
-        jstats = (
-            df.select(F.col(id_col))
-            ._jdf.queryExecution()
-            .optimizedPlan()
-            .stats()
-        )
-        # exact row count when the plan carries one (CBO/ANALYZE'd tables,
-        # local relations) — preferred over the width-scaled byte estimate,
-        # whose default column widths (StringType = 20 B) can be an order
-        # of magnitude off for string ids (ADVICE r13)
-        jrc = jstats.rowCount()
-        if jrc.isDefined():
-            rc = int(str(jrc.get()))
-            if rc > 0:
-                return rc
-        est = int(str(jstats.sizeInBytes()))
-    except Exception:  # pragma: no cover - py4j estate varies by version
-        return None
-    if est <= 0 or est >= (1 << 50):  # unknown/defaulted stats
-        return None
-    return max(1, est // 8)  # id projection ≈ 8 bytes/row
-
-
 def lsh_index_build(
     df: DataFrame,
     path: str,
@@ -642,8 +544,6 @@ def lsh_index_build(
     shingle: int = 3,
     mode: str = "overwrite",
     keyed: "DataFrame | None" = None,
-    files_per_band: "int | None" = None,
-    target_file_bytes: int = 512 * 1024 * 1024,
 ) -> None:
     """Persist a MinHash-LSH band index for INCREMENTAL dedup: build once
     over the accumulated corpus, probe every new batch against it with
@@ -659,74 +559,30 @@ def lsh_index_build(
     are pure functions of text, so ``mode='append'`` after ingesting a
     deduped batch keeps the index current without recompute.
 
-    Write parallelism scales with the corpus (VERDICT r12 #3): the file
-    count per band dir is ``ceil(est_rows × row_bytes /
-    target_file_bytes)`` from a plan-time Catalyst size estimate (no
-    extra job; order-of-magnitude accuracy sizes files within a small
-    factor of the ~512 MB target), so a 100 TB build fans out over
-    bands × files tasks instead of funneling through ``bands`` writers.
-    Row CONTENTS are unchanged — the extra routing term only picks which
-    file within the band dir a row lands in. Pass ``files_per_band``
-    explicitly to skip the estimate (1 restores the one-file-per-band
-    layout exactly).
+    Files per band dir follow the shuffle's measured bytes: the write is
+    one rebalance on ``band``, so adaptive execution splits a band whose
+    data exceeds ``spark.sql.adaptive.advisoryPartitionSizeInBytes`` over
+    several write tasks (a 100 TB build still fans out) and merges small
+    ones; a small build or append adds one file per band dir. With
+    ``spark.sql.adaptive.enabled=false`` each write gives one file per
+    band.
     """
     out_cols = lsh_index_rows(
         df, text_col=text_col, id_col=id_col,
         num_hashes=num_hashes, bands=bands, shingle=shingle, keyed=keyed,
     )
-    # cluster rows by band before the partitioned write: without it every
-    # shuffle partition writes a sliver into every band dir (bands ×
-    # shuffle-partitions small files — measured 3.96 s -> 2.35 s at sf0.1
-    # bench). The (band, salt) route domain is KNOWN at plan time, so
-    # instead of repartitionByRange — whose RangePartitioner runs a
-    # boundary-SAMPLING job that executes the signature UDF a second
-    # time unless the frame is persisted first (the r8–r11 shape:
-    # UDF → cache fill, cache-read sample, cache-read shuffle) — the
-    # driver pre-computes Spark's murmur3 for each route value and picks
-    # the smallest partition count that separates them all
-    # (_route_partition_count). The build is then ONE pass: UDF → hash
-    # shuffle → partitioned write; the signature UDF materializes exactly
-    # once and nothing is cached (VERDICT r11 #4 — at corpus scale this
-    # also retires a signatures-sized persist that would spill). One task
-    # per (band, salt) ⇒ ``files_per_band`` files per band dir. Only the
-    # f == 1 band-key search can fail to separate (returning None) and
-    # fall back to the persisted range-partition form; the f > 1 route
-    # search always yields an int (ADVICE r13).
-    if files_per_band is None:
-        est_rows = _estimated_plan_rows(df if keyed is None else keyed, id_col)
-        row_bytes = 16 + 8 * int(num_hashes)
-        files_per_band = (
-            1
-            if est_rows is None
-            else max(
-                1, -(-est_rows * row_bytes // max(int(target_file_bytes), 1))
-            )
-        )
-        # safety bound on the estimate-driven path (the plan-size estimate
-        # is order-of-magnitude): 65536 × 512 MB ≈ 32 TB per band dir;
-        # beyond that pass files_per_band explicitly
-        files_per_band = min(int(files_per_band), 65536)
-    f = max(1, int(files_per_band))
-    if f == 1:
-        p = _band_partition_count(int(bands))
-        route = F.col("band")
-    else:
-        p = _route_partition_count(int(bands), f)
-        route = (
-            F.col("band") * F.lit(f) + F.pmod(F.hash(F.col("bh")), F.lit(f))
-        ).cast("int")
-    if p is not None:
-        out_cols.repartition(p, route).write.mode(mode).partitionBy(
-            "band"
-        ).parquet(path)
-        return
-    out_cols = out_cols.persist()
-    try:
-        out_cols.repartitionByRange(int(bands), F.col("band")).write.mode(
-            mode
-        ).partitionBy("band").parquet(path)
-    finally:
-        out_cols.unpersist()
+    # cluster rows by band before the partitioned write, or every shuffle
+    # partition writes a sliver into every band dir. A rebalance is one
+    # hash shuffle sized from real map output bytes: no sampling job runs
+    # the signature UDF a second time (as repartitionByRange's would) and
+    # no plan-time row estimate picks the file count (Catalyst sizes an
+    # inner join as the product of its inputs). Spark drops the rebalance
+    # hint when AQE is off, leaving the plain repartition on band; when AQE
+    # is on the optimizer folds that repartition into the rebalance, so
+    # either way the write is one shuffle
+    out_cols.repartition("band").hint("rebalance", "band").write.mode(
+        mode
+    ).partitionBy("band").parquet(path)
 
 
 def lsh_index_rows(
@@ -740,14 +596,13 @@ def lsh_index_rows(
 ) -> DataFrame:
     """The ``(band, bh, id, mh)`` signature frame :func:`lsh_index_build`
     writes — exposed so the bench can time signature compute and the
-    partitioned parquet write as separate stages (VERDICT r9 #3: the
-    composite q99 wall could not localize a 3× builder/driver bench
-    discrepancy). ``keyed`` accepts a precomputed :func:`minhash_keyed`
-    frame (sliced to this corpus) so a pipeline sharing signatures
-    across consumers runs the UDF once (VERDICT r11 #4)."""
+    partitioned parquet write as separate stages (a composite wall cannot
+    say which of the two pays an environment cost). ``keyed`` accepts a
+    precomputed :func:`minhash_keyed` frame (sliced to this corpus) so a
+    pipeline sharing signatures across consumers runs the UDF once."""
     if keyed is None:
         # parallel=False deliberately: an interleaved A/B at sf0.1
-        # (round 12) measured the single-split fan-out REGRESSING this
+        # measured the single-split fan-out REGRESSING this
         # stage (min 1.16 -> 1.50 s) — the signature UDF is ~12 ms of
         # CPU, so the stage wall is task orchestration and a repartition
         # only adds a shuffle plus 32 task overheads; on a real
@@ -1190,8 +1045,8 @@ def paragraph_dedup(
     row per kept paragraph ``(id, pos, para)`` with ``pos`` the 0-based
     position in the source document — the order-free verification shape
     (a reassembled text's hash depends on an ordered string aggregation,
-    which SQL oracles evaluate inconsistently across engine versions;
-    VERDICT r7 #1a). ``emit="docs"`` (default) reassembles.
+    which SQL oracles evaluate inconsistently across engine versions).
+    ``emit="docs"`` (default) reassembles.
     """
     if emit not in ("docs", "lines"):
         raise ValueError(f"emit must be 'docs' or 'lines', got {emit!r}")
@@ -1730,8 +1585,8 @@ def _length_gated_text_join(
     levenshtein(a, b) >= |len(a) - len(b)|, so a pair past the gate would
     verify to -1 anyway (output-identical: verified by an interleaved A/B
     at sf0.1 — same 255 rows). Hopeless pairs thus never ship their text
-    through the exchanges or pay the O(d·L) kernel. Measured at sf0.1
-    (verdict-r5 #3): 16,625 candidates -> 1,264 past the gate (92%
+    through the exchanges or pay the O(d·L) kernel. Measured at sf0.1:
+    16,625 candidates -> 1,264 past the gate (92%
     pruned); wall time flat (2.23 vs 2.27 s min-of-4 interleaved) because
     the blocking UDF dominates at this scale and texts are ~1 KB — the
     pruning is the 100 TB win, where candidate text shipping is the
@@ -2190,7 +2045,7 @@ def semantic_dedup(
 
     Flow (all Spark-side, quantizer is index metadata):
       1. nearest-centroid assignment — map-only, broadcast literal
-         centroids, the identical (round-6, ties→smaller cid) math as the
+         centroids, the identical (ties→smaller cid) math as the
          IVF family, so one quantizer serves both retrieval and dedup.
       2. within-cluster candidate pairs — one shuffle keyed by cid; the
          quadratic term is per-cluster, which is the paper's whole point:
@@ -2489,7 +2344,7 @@ def hamming_index_build(
     The fingerprint frame persists across the write: fingerprints usually
     arrive from a decode UDF (the build's dominant cost), and
     repartitionByRange's boundary sampling would execute that child plan
-    a second time (the q99 lesson, VERDICT r8 #3)."""
+    a second time."""
     nblocks = int(max_hamming) + 1
     _w, _o, blocks = _hamming_blocks_expr(hash_col, bits, max_hamming)
     rows = (

@@ -75,7 +75,7 @@ def hash_sample(
         thresholds = F.create_map(
             *[F.lit(x) for kv in fraction.items() for x in (kv[0], micro(kv[1]))]
         )
-        limit = thresholds.getItem(F.col(strata_col))
+        limit = thresholds[F.col(strata_col)]
         return df.where(limit.isNotNull() & (bucket < limit))
     return df.where(bucket < micro(fraction))
 
@@ -184,7 +184,7 @@ def temperature_mix(
     thresholds = F.create_map(
         *[F.lit(x) for kv in micro.items() for x in kv]
     )
-    limit = thresholds.getItem(F.col(group_col))
+    limit = thresholds[F.col(group_col)]
     return df.where(limit.isNotNull() & (bucket < limit))
 
 

@@ -115,16 +115,36 @@ def test_lsh_index_build_probe_roundtrip(docs, spark, tmp_path):
     assert any(d.startswith("band=") for d in os.listdir(path))
 
 
-def test_lsh_index_build_file_count_scales(spark, tmp_path):
-    """VERDICT r12 #3: index write parallelism scales with corpus size —
-    ``files_per_band`` fans each band dir out over that many write tasks
-    (deterministic (band, salt) murmur3 routing, no sampling job), the
-    auto path derives it from the plan-size estimate, and index CONTENTS
-    are identical to the one-file-per-band layout in every case."""
+def _band_file_counts(path):
+    """Parquet data files in each ``band=`` dir of an index."""
     import glob
-    import os as _os
+    import os
 
-    big = spark.range(300).select(
+    return {
+        d: len(glob.glob(f"{path}/{d}/*.parquet"))
+        for d in os.listdir(path)
+        if d.startswith("band=")
+    }
+
+
+def _index_rows(spark, path):
+    return sorted(
+        (r["band"], r["bh"], r["id"], tuple(r["mh"]))
+        for r in spark.read.parquet(path)
+        .select(F.col("band").cast("int"), "bh", "id", "mh")
+        .collect()
+    )
+
+
+def test_lsh_index_build_files_follow_shuffle_bytes(spark, tmp_path):
+    """The index write is one rebalance on ``band``: adaptive execution
+    splits a band dir over several files once its shuffle bytes pass the
+    advisory partition size, keeps one file per band at the default, and
+    with AQE off still writes one file per band. The rows are identical
+    in every layout."""
+    from exon_duckdb_spark.session import scoped_conf
+
+    big = spark.range(0, 3000, 1, 4).select(
         F.col("id").alias("doc_id"),
         F.concat(
             F.lit("tok"), (F.col("id") % 97).cast("string"),
@@ -133,48 +153,83 @@ def test_lsh_index_build_file_count_scales(spark, tmp_path):
         ).alias("text"),
     )
 
-    def files_per_dir(p):
-        return {
-            d: len(glob.glob(f"{p}/{d}/*.parquet"))
-            for d in _os.listdir(p)
-            if d.startswith("band=")
-        }
+    def build(name, **conf):
+        p = str(tmp_path / name)
+        with scoped_conf(spark, **conf):
+            ops.lsh_index_build(big, p, num_hashes=4, bands=2, shingle=1)
+        return p
 
-    def rows(p):
-        return sorted(
-            (r["band"], r["bh"], r["id"], tuple(r["mh"]))
-            for r in spark.read.parquet(p)
-            .select(F.col("band").cast("int"), "bh", "id", "mh")
-            .collect()
+    small = build("small", **{
+        "spark.sql.adaptive.advisoryPartitionSizeInBytes": "4096"})
+    dflt = build("dflt")
+    no_aqe = build("no_aqe", **{"spark.sql.adaptive.enabled": "false"})
+    f_small, f_dflt = _band_file_counts(small), _band_file_counts(dflt)
+    assert set(f_small) == set(f_dflt) and len(f_dflt) == 2
+    assert all(v > 1 for v in f_small.values()), f_small
+    assert all(v == 1 for v in f_dflt.values()), f_dflt
+    assert all(v == 1 for v in _band_file_counts(no_aqe).values())
+    want = _index_rows(spark, dflt)
+    assert _index_rows(spark, small) == want
+    assert _index_rows(spark, no_aqe) == want
+
+
+def test_lsh_index_append_of_keyed_join_stays_small(spark, tmp_path):
+    """The daily-crawl append: the survivors' signatures arrive as a
+    ``keyed.join(survivors.select("doc_id"), "doc_id")`` frame, whose
+    plan-time size estimate is the product of its inputs' sizes. The
+    append must still add one file per band dir, and the index must
+    probe exactly like a one-shot build over corpus and survivors."""
+    words = [f"w{i}" for i in range(40)]
+
+    def text(i):
+        return " ".join(words[(i * 7 + j) % 40] for j in range(12))
+
+    # a 2000-row cached batch: its join estimate is ~10^8 rows, and a
+    # write sized from that estimate leaves 7-8 files per band dir here
+    rows = [(i, text(i)) for i in range(2200)]
+    corpus_p, batch_p = str(tmp_path / "corpus"), str(tmp_path / "batch")
+    spark.createDataFrame(rows[:200], "doc_id long, text string")\
+        .write.parquet(corpus_p)
+    spark.createDataFrame(rows[200:], "doc_id long, text string")\
+        .write.parquet(batch_p)
+    corpus, batch = spark.read.parquet(corpus_p), spark.read.parquet(batch_p)
+    kw = dict(num_hashes=4, bands=2, shingle=1)
+    index = str(tmp_path / "index")
+    ops.lsh_index_build(corpus, index, **kw)
+    keyed = ops.minhash_keyed(
+        batch, num_hashes=4, shingle=1, with_ws=False).persist()
+    survivors = batch.where(F.col("doc_id") % 2 == 0).persist()
+    try:
+        keyed.count(), survivors.count()
+        ops.lsh_index_build(
+            survivors, index, mode="append",
+            keyed=keyed.join(survivors.select("doc_id"), "doc_id"), **kw,
+        )
+        files = _band_file_counts(index)
+        assert len(files) == 2 and all(v == 2 for v in files.values()), files
+        once = str(tmp_path / "once")
+        ops.lsh_index_build(corpus.unionByName(survivors), once, **kw)
+        assert _index_rows(spark, index) == _index_rows(spark, once)
+        probe = spark.createDataFrame(
+            [(9000 + i, text(i)) for i in (3, 201, 202)],
+            "doc_id long, text string",
         )
 
-    p1, p4 = str(tmp_path / "f1"), str(tmp_path / "f4")
-    ops.lsh_index_build(big, p1, num_hashes=4, bands=2, shingle=1,
-                        files_per_band=1)
-    ops.lsh_index_build(big, p4, num_hashes=4, bands=2, shingle=1,
-                        files_per_band=4)
-    f1, f4 = files_per_dir(p1), files_per_dir(p4)
-    assert set(f1) == set(f4) and all(v == 1 for v in f1.values())
-    # 300 bh keys spread over 4 salts: every band dir gains parallel files
-    assert all(1 < v <= 4 for v in f4.values())
-    assert rows(p1) == rows(p4)
-    # auto path: a small target_file_bytes must force >1 file per band
-    # from the plan-time size estimate alone, contents still identical
-    pa = str(tmp_path / "auto")
-    ops.lsh_index_build(big, pa, num_hashes=4, bands=2, shingle=1,
-                        target_file_bytes=2048)
-    assert all(v > 1 for v in files_per_dir(pa).values())
-    assert rows(pa) == rows(p1)
-    # default 512 MB target at this scale keeps the one-file layout
-    pd = str(tmp_path / "dflt")
-    ops.lsh_index_build(big, pd, num_hashes=4, bands=2, shingle=1)
-    assert all(v == 1 for v in files_per_dir(pd).values())
+        def hits(p):
+            return sorted(tuple(r) for r in ops.lsh_index_probe(
+                probe, p, threshold=0.5, **kw).collect())
+
+        got = hits(index)
+        assert got and got == hits(once)
+    finally:
+        survivors.unpersist()
+        keyed.unpersist()
 
 
 def test_minhash_keyed_shared_frame_equivalence(docs, spark, tmp_path):
     """Every consumer fed a precomputed minhash_keyed frame must emit
-    exactly the rows it computes with its private UDF pass (round 12:
-    the shared-signature path q22's composite uses)."""
+    exactly the rows it computes with its private UDF pass (the
+    shared-signature path q22's composite uses)."""
     keyed = ops.minhash_keyed(docs, num_hashes=4, shingle=1).persist()
     try:
         base_pairs = {
@@ -246,7 +301,7 @@ def test_keyed_frame_validated_early(docs, spark):
             docs, num_hashes=4, bands=2, shingle=1,
             keyed=docs.select("doc_id"),
         )
-    # signature-parameter mismatch (ADVICE r12 medium): a keyed frame
+    # signature-parameter mismatch: a keyed frame
     # built with different num_hashes/shingle than the consumer call
     # must raise, not silently drop pairs via NULL-skipping band keys
     with pytest.raises(ValueError, match="num_hashes=4"):
@@ -273,9 +328,8 @@ def test_keyed_frame_validated_early(docs, spark):
 def test_keyed_frame_stamp_survives_parquet(docs, spark, tmp_path):
     """The num_hashes/shingle stamp is COLUMN metadata, which parquet
     round-trips — so a persisted keyed frame re-read in a later job still
-    raises on mismatched reuse (ADVICE r13: this is the intended behavior
-    change for persisted frames; pre-stamp frames that relied on silent
-    mismatched reuse were silently dropping pairs)."""
+    raises on mismatched reuse (a persisted frame reused with other
+    parameters would otherwise silently drop pairs)."""
     p = str(tmp_path / "keyed")
     ops.minhash_keyed(docs, num_hashes=4, shingle=1, with_ws=False)\
         .write.parquet(p)
@@ -290,41 +344,10 @@ def test_keyed_frame_stamp_survives_parquet(docs, spark, tmp_path):
     ops.lsh_index_rows(docs, num_hashes=4, bands=2, shingle=1, keyed=back)
 
 
-def test_murmur3_int32_matches_spark_hash(spark):
-    """_murmur3_int32 must replicate Spark's hash() for IntegerType
-    bit-for-bit — lsh_index_build pre-computes band→partition routing
-    from it, so a divergence would silently degrade file layout (never
-    correctness: partitionBy routes by value regardless)."""
-    from exon_duckdb_spark.operators.dedup import _murmur3_int32
-
-    rows = (
-        spark.range(-8, 64)
-        .select(F.col("id").cast("int").alias("x"))
-        .select("x", F.hash("x").alias("h"))
-        .collect()
-    )
-    for r in rows:
-        assert r["h"] == _murmur3_int32(r["x"])
-
-
-def test_band_partition_count_separates_bands():
-    """Every band value must land in its own shuffle partition under
-    pmod(murmur3(band), P) for the P the helper picks."""
-    from exon_duckdb_spark.operators.dedup import (
-        _band_partition_count,
-        _murmur3_int32,
-    )
-
-    for bands in range(2, 17):
-        p = _band_partition_count(bands)
-        assert p is not None and p >= bands
-        assert len({_murmur3_int32(b) % p for b in range(bands)}) == bands
-
-
 def test_lsh_index_build_one_file_per_band(docs, spark, tmp_path):
-    """The deterministic hash routing (round 12, replacing the sampled
-    range partitioner) must keep the one-parquet-file-per-band layout
-    the small-files fix established."""
+    """A small build writes one parquet file per band dir: the rebalance
+    clusters rows by band, so no shuffle partition leaves a sliver in
+    every band dir."""
     import glob
     import os
 
@@ -967,6 +990,32 @@ class TestDedupScale:
         }
         assert 400 < counts["en"] < 600 and counts["de"] < 120
 
+    def test_stratified_samplers_index_maps_without_future_warning(self, spark):
+        """The per-stratum threshold lookup of hash_sample and
+        temperature_mix raises no FutureWarning (PySpark deprecates a
+        Column key to ``getItem``) and keeps the pinned rows."""
+        import warnings
+
+        from exon_duckdb_spark.operators import hash_sample
+        from exon_duckdb_spark.operators.text import temperature_mix
+
+        df = spark.createDataFrame(
+            [(i, ("en", "de", "fr")[i % 7 % 3]) for i in range(60)],
+            "doc_id long, lang string",
+        )
+        with warnings.catch_warnings():
+            warnings.simplefilter("error", FutureWarning)
+            hs = hash_sample(df, {"en": 0.5, "de": 0.2}, strata_col="lang")
+            tm = temperature_mix(df, group_col="lang", tau=0.3, budget_frac=0.5)
+        assert sorted(r["doc_id"] for r in hs.collect()) == [
+            0, 3, 6, 7, 10, 20, 21, 24, 25, 27, 28, 31, 34, 36, 41, 42, 49,
+            56, 59,
+        ]
+        assert sorted(r["doc_id"] for r in tm.collect()) == [
+            1, 4, 5, 7, 9, 12, 14, 16, 17, 20, 22, 24, 29, 30, 33, 35, 36,
+            38, 40, 41, 42, 43, 45, 46, 47, 53, 57, 58,
+        ]
+
     def test_weighted_sample_exact_k_weighted_deterministic(self, spark):
         """Exactly k winners; selection probability tracks weight (a
         1000x-weighted row always wins at this draw size); deterministic
@@ -1300,7 +1349,7 @@ class TestRetrievalAndParagraphs:
         assert out == {1: "cookie banner\nunique first", 2: "unique second"}
 
     def test_paragraph_dedup_emit_lines_consistent_with_docs(self, spark):
-        """emit='lines' (the order-free gate shape, VERDICT r7 #1a) is the
+        """emit='lines' (the order-free gate shape) is the
         UN-reassembled view of the same survivors: rejoining the lines in
         pos order reproduces emit='docs' exactly, and positions are the
         0-based source offsets."""
