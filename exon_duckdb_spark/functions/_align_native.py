@@ -1,13 +1,12 @@
 """Runtime-compiled C kernel for the affine-gap alignment DP.
 
-VERDICT r4–r10 carried "native-speed alignment kernel" as the repo's one
-standing weak item: the reference backs alignment_* with compiled
-WFA2-lib C (exon/src/exon/alignment_functions/module.cpp:181-247,
-CMakeLists.txt:72-80), while this engine ran a vectorized-numpy Gotoh.
-numba/cython wheels are absent in the container, but ``gcc`` is on PATH
-and a plain shared object loaded through ``ctypes`` needs no Python
-headers, no setuptools, and no wheel — the wheel-less path VERDICT r10
-item #7 asked to consider.
+The reference backs alignment_* with compiled WFA2-lib C
+(exon/src/exon/alignment_functions/module.cpp:181-247,
+CMakeLists.txt:72-80), while the numpy engine here is a vectorized Gotoh,
+slower per cell. numba/cython wheels may be absent, but a plain shared
+object built with ``gcc`` and loaded through ``ctypes`` needs no Python
+headers, no setuptools, and no wheel, so the kernel ships as C source and
+compiles at first use.
 
 Contract: **bit-identical** to the numpy engine (and therefore to the
 scalar oracle ``_affine_align``). The C recurrences replicate the numpy

@@ -624,8 +624,8 @@ from exon_duckdb_spark.functions import _align_native as _native
 # bound (3 int64 tables × 4M cells ≈ 96 MB/worker scratch, the numpy
 # slab envelope).
 #
-# Scores gate (round 12, VERDICT r11 #5 — measured grid, same host,
-# same run, outputs asserted equal): the certified-band path's cost is
+# Scores gate (measured grid, same host, same run, outputs asserted
+# equal): the certified-band path's cost is
 # the PROBE's per-row numpy loop (~30-40 µs/row of interpreter+small-
 # vector overhead), which rivals the C kernel's whole n² fill up to
 # ~12 kb. C full DP beat the certificate machinery at EVERY measured

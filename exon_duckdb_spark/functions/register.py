@@ -368,8 +368,8 @@ def _record_format(kind: str, path: str):
         schema = vcf_schema(info_fields)
 
         def vcf_rows(split, keep):
-            # an uncompressed-planned split of a BGZF file is a byte range of
-            # blocks (index-pruned): only the block-aware splitter reads it
+            # a region query's split of a BGZF file holds index chunk
+            # ranges: only the block-aware line reader seeks to them
             lines = (
                 (r["value"] for r in parse_bgzf_lines_split(split))
                 if split.compression is None and is_bgzf(split.path)
@@ -430,9 +430,11 @@ def _make_records_udtf(kind: str):
 
 
 def _make_region_udtf(kind: str):
-    """``{vcf,bcf,bam}_query(path, region)`` — index-pruned region scans as
-    SQL table functions (single-task convenience; the DataFrame API is the
-    scale path)."""
+    """``{vcf,bcf,bam}_query(path, region)`` — region queries as SQL table
+    functions: one task reads the region's index chunk ranges
+    (:func:`~exon_duckdb_spark.sources.indexes.plan_region_splits`) in
+    turn, or the whole file without an index (the DataFrame API runs one
+    task per range group)."""
     from pyspark.sql.functions import udtf
     from pyspark.sql.udtf import AnalyzeResult
 

@@ -2341,27 +2341,25 @@ def hamming_index_build(
     num_hashes/bands convention). NULL fingerprints (undecodable assets)
     are skipped.
 
-    The fingerprint frame persists across the write: fingerprints usually
-    arrive from a decode UDF (the build's dominant cost), and
-    repartitionByRange's boundary sampling would execute that child plan
-    a second time."""
-    nblocks = int(max_hamming) + 1
+    Files per block dir follow the shuffle's measured bytes, as in
+    :func:`lsh_index_build`: the write is one rebalance on ``block``, so a
+    block whose data exceeds
+    ``spark.sql.adaptive.advisoryPartitionSizeInBytes`` fans out over
+    several files and a small build adds one file per block dir (one per
+    block with ``spark.sql.adaptive.enabled=false``). Fingerprints usually
+    arrive from a decode UDF, the build's dominant cost; a rebalance runs
+    it once, with no boundary-sampling job and no cached copy."""
     _w, _o, blocks = _hamming_blocks_expr(hash_col, bits, max_hamming)
-    rows = (
-        fp.where(F.col(hash_col).isNotNull())
-        .select(
-            F.col(id_col).alias("id"),
-            F.col(hash_col).alias("fp"),
-            F.posexplode(blocks).alias("block", "bval"),
-        )
-        .persist()
+    rows = fp.where(F.col(hash_col).isNotNull()).select(
+        F.col(id_col).alias("id"),
+        F.col(hash_col).alias("fp"),
+        F.posexplode(blocks).alias("block", "bval"),
     )
-    try:
-        rows.repartitionByRange(nblocks, F.col("block")).write.mode(
-            mode
-        ).partitionBy("block").parquet(path)
-    finally:
-        rows.unpersist()
+    # the repartition is what AQE-off keeps; with AQE on it folds into the
+    # rebalance (see lsh_index_build)
+    rows.repartition("block").hint("rebalance", "block").write.mode(
+        mode
+    ).partitionBy("block").parquet(path)
 
 
 def hamming_index_probe(

@@ -1532,7 +1532,7 @@ def video_dhash(
                     # a frame whose buffer disagrees with its declared
                     # h*w*c (corrupt demux) must not fail the stage —
                     # emit NULL hashes like image_dhash/audio_fingerprint
-                    # do for undecodable assets (ADVICE r9)
+                    # do for undecodable assets
                     dh, ah = None, None
                 dhs.append(dh)
                 ahs.append(ah)

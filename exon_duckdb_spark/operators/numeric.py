@@ -32,15 +32,15 @@ def stable_avg(col: Column, digits: int = 6) -> Column:
     cross-engine); on exact ties it rounds toward +∞ — a fixed,
     engine-independent convention, which is the property that matters."""
     s = float(10**digits)
-    # Three-lane accumulation. History: round 7 summed the quantized
-    # addend q per-row in DECIMAL(38,0) (exact, ~1.5× slower on
-    # agg-heavy queries); round 8 split q = hi·2^16 + lo and summed both
-    # lanes as LONGS — fast, but sum(hi) silently wraps (non-ANSI Spark
-    # SUM) once a group's n·|x| exceeds ~6e17, i.e. ~67M rows per group
-    # at the contract's max |x| ≈ 9e9 — a very reachable 100 TB seam
-    # (ADVICE r8). Summing hi in DECIMAL instead measured NO faster than
-    # the full decimal form (0.87 s vs 0.86 s on the micro-bench below —
-    # the decimal agg buffer is the cost, not the add width), so this
+    # Three-lane accumulation. Summing the quantized addend q per-row in
+    # DECIMAL(38,0) is exact but ~1.5× slower on agg-heavy queries;
+    # splitting q = hi·2^16 + lo and summing both lanes as LONGS is fast,
+    # but sum(hi) silently wraps (non-ANSI Spark SUM) once a group's
+    # n·|x| exceeds ~6e17, i.e. ~67M rows per group at the contract's
+    # max |x| ≈ 9e9 — a very reachable 100 TB seam. Summing hi in DECIMAL
+    # instead measured NO faster than the full decimal form (0.87 s vs
+    # 0.86 s on the micro-bench below — the decimal agg buffer is the
+    # cost, not the add width), so this
     # form bounds each lane by the SPLIT, not by |x|: q = a·2^36 +
     # b·2^18 + c with |a| ≤ 2^17, b,c in [0, 2^18) (exact — q < 2^53
     # keeps the double arithmetic integer-exact, each split is a power-

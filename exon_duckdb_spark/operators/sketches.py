@@ -89,7 +89,7 @@ def _term_shift(p: int) -> int:
     possible sum is m·2^shift = 2^61, inside BIGINT for every p. A fixed
     shift of 57 overflowed Spark's non-ANSI wrapping sum at p >= 7 while
     DuckDB promoted to HUGEINT — wrong estimates AND cross-engine
-    divergence (ADVICE r5). The estimate is shift-invariant: numerator
+    divergence. The estimate is shift-invariant: numerator
     and ssum both carry 2^shift, and the power-of-two rescale cancels
     exactly in the one double division.
     """
@@ -172,8 +172,7 @@ def kmv_merge_estimate(
     # k-min set — divide by the merged sketch's ACTUAL size, not k: when
     # |A ∪ B| holds fewer than k distinct hashes the merged sketch is
     # under-filled and a fixed-k denominator grossly underestimates
-    # (two identical 5-element sets gave jaccard_est 5/64, not 1.0 —
-    # ADVICE r5).
+    # (two identical 5-element sets gave jaccard_est 5/64, not 1.0).
     c = both.agg(F.count("*").cast("double").alias("c"))
     n = merged.agg(F.count("*").cast("double").alias("nk"))
     return (
@@ -324,8 +323,8 @@ def kmv_sketch_sql(source_sql: str, col_expr: str, k: int = KMV_K) -> str:
 
     The NOT NULL filter mirrors the Spark side's ``hv.isNotNull()``:
     without it ``md5_int_sql(NULL)`` becomes CAST('0x' AS BIGINT) — a
-    DuckDB Conversion Error on any nullable column (ADVICE r5), where
-    Spark silently dropped the row.
+    DuckDB Conversion Error on any nullable column, where Spark silently
+    dropped the row.
     """
     return f"""
         SELECT hv FROM (
@@ -778,7 +777,7 @@ def bloom_paragraph_filter(
     is unverified-false-positive by contract, at a ~2^-60 rate the
     filter's fp rate dwarfs). No broadcast hint: AQE broadcasts while
     the set is small and falls back to a shuffle join past the
-    threshold instead of failing the driver (ADVICE r8). Returns docs
+    threshold instead of failing the driver. Returns docs
     as ``(id, clean_text, n_removed)`` (the boilerplate-removal
     contract)."""
     paras = df.select(

@@ -638,7 +638,7 @@ def cdc_chunks(
     Returns (id_col, chunk_id, start, n_chars, chunk_text); `start` is a
     0-based character offset, chunk_id is per-document dense from 0.
 
-    Known artifact (ADVICE r10): a zero-length document emits one phantom
+    Known artifact: a zero-length document emits one phantom
     chunk ``(start=0, n_chars=1, chunk_text='')`` — ``split('','')``
     yields ``['']`` and ``ascii('')`` is 0, so the char-code array has
     one element the text does not. For that row only, ``n_chars`` does

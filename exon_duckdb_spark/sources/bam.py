@@ -12,9 +12,9 @@ recipe). One 300 GB BAM then fans out across the cluster instead of
 serializing on one task. A plain-gzip or uncompressed BAM can't split: the
 first split reads it whole.
 
-``bam_query`` prunes splits to the ``.bai`` index's chunk ranges when the
-index exists (sources/indexes.py, the same role it plays in the reference)
-and applies the exact region-overlap predicate after the scan, so results
+``bam_query`` reads only the ``.bai`` index's chunk ranges when the index
+exists (sources/indexes.py, the same role it plays in the reference) and
+applies the exact region-overlap predicate after the scan, so results
 never depend on index precision.
 """
 
@@ -195,7 +195,7 @@ def read_bam(
 def bam_query(spark: SparkSession, path: str, region: str) -> DataFrame:
     """Region query over BAM — reference ``bam_query(path, region)``
     (rust/src/bam_query_reader.rs:63): alignments overlapping the 1-based
-    inclusive region, read from the ``.bai``-pruned splits when the index
+    inclusive region, read from the ``.bai`` chunk ranges when the index
     exists (see :func:`~exon_duckdb_spark.sources.indexes.region_query`)."""
     return region_query(
         spark, path, region, read_bam, lambda df: (df.reference, df.start, df.end)

@@ -13,9 +13,9 @@ it the BCF header-prefix parser, the 8-byte ``l_shared``/``l_indiv``
 record prefix (the genotype block is skipped, not read) and the
 field-sanity check that resync chains records on (l_shared/l_indiv
 bounds, contig id in range, sane pos/rlen/counts, and typed values that
-fill the shared block exactly). ``bcf_query`` prunes
-splits to the ``.csi`` index's chunk ranges when the index exists, with
-the exact region filter applied after.
+fill the shared block exactly). ``bcf_query`` reads only
+the ``.csi`` index's chunk ranges when the index exists, with the exact
+region filter applied after.
 """
 
 from __future__ import annotations
@@ -352,7 +352,7 @@ def read_bcf(
 
 def bcf_query(spark: SparkSession, path: str, region: str) -> DataFrame:
     """CSI-region query over BCF — reference ``bcf_query(path, region)``
-    (rust/src/bcf_query_reader.rs:63). Splits prune to the ``.csi`` chunk
+    (rust/src/bcf_query_reader.rs:63). It reads only the ``.csi`` chunk
     ranges when the index exists; the exact overlap filter keeps semantics
     index-independent."""
     return region_query(spark, path, region, read_bcf, vcf_span)

@@ -7,16 +7,23 @@ of the COMPRESSED file can align itself to a block boundary and decompress
 just its part, which is what makes these formats cluster-splittable.
 
 BAM and BCF share one framing — a binary header, then length-prefixed
-records — and one record walker, :func:`walk_records`: a split anchors on
-the first chain-verified block at or after its start, resyncs on a chain
-of two plausible records, and owns the records that start in blocks whose
-compressed offset lies in [start, end). The index builders walk the same
-records from offset 0 (:func:`owned_records`) and take virtual offsets from
-:meth:`BgzfBuf.voffset`. Files that are not BGZF are read sequentially by
-the first split.
+records — and one record walker, :func:`walk_records`. It reads a split
+one of two ways:
 
-Also here: the virtual-offset helpers that turn index chunks into a pruned
-split list (sources/indexes.py plans region queries with them).
+- a byte-range split (a scan) anchors on the first chain-verified block at
+  or after its start, resyncs on a chain of two plausible records, and
+  owns the records that start in blocks whose compressed offset lies in
+  [start, end);
+- a region query's split seeks to each index chunk's virtual offset, an
+  exact record start, and walks until the chunk's end: no anchor search
+  and no resync.
+
+BGZF text (:func:`parse_bgzf_lines_split`) reads both kinds of split
+line by line (:func:`lines_from`). The index builders walk the same
+records and lines from offset 0 and take virtual offsets from
+:meth:`BgzfBuf.voffset`; :func:`merge_voffset_ranges` turns a region's
+index chunks into the ranges a query reads. Files that are not BGZF are
+read sequentially by the first split.
 """
 
 from __future__ import annotations
@@ -50,13 +57,13 @@ __all__ = [
     "open_stream",
     "owned_records",
     "walk_records",
+    "lines_from",
     "parse_bgzf_lines_split",
     "merge_voffset_ranges",
-    "prune_splits_to_ranges",
 ]
 
-# Split size of BAM/BCF scans and of index-pruned region queries, so also
-# the granularity at which an index can prune.
+# Split size of BAM/BCF scans, and the compressed span at which a region
+# query's chunk ranges start a new task.
 BGZF_SPLIT_BYTES = 64 * 1024 * 1024
 
 DEFAULT_BGZF_BLOCK_BYTES = 60_000  # < 64 KiB decompressed, the spec ceiling
@@ -266,19 +273,19 @@ def open_stream(path: str, compression: str | None = None) -> Iterator[BgzfBuf]:
         yield _StreamBuf(f, 0, 0)
 
 
-def owned_records(buf: BgzfBuf, pos: int, end: float, fmt) -> Iterator[tuple[bytes, int, int]]:
-    """(payload, start, next) of each record from ``pos`` on that starts in
-    a block with compressed offset < ``end``; ``next`` is where the
-    following record starts. The last owned record reads past ``end`` until
-    it closes. Stops at EOF or at a truncated record."""
+def owned_records(buf: BgzfBuf, pos: int, vend: float, fmt) -> Iterator[tuple[bytes, int, int]]:
+    """(payload, start, next) of each record from ``pos`` that starts before
+    virtual offset ``vend``; ``next`` is where the following record starts.
+    The last owned record reads past ``vend`` until it closes. Stops at EOF
+    or at a truncated record."""
     prefix, frame = fmt.prefix, fmt.frame
-    get, coffset_of, drop_before = buf.get, buf.block_coffset_of, buf.drop_before
+    get, voffset, drop_before = buf.get, buf.voffset, buf.drop_before
     while True:
         head = get(pos, prefix)
         if head is None:
             return
-        if coffset_of(pos) >= end:
-            return  # the next split owns this record
+        if voffset(pos) >= vend:
+            return  # the next split (or nothing in this chunk) owns it
         n, skip = frame(head)
         payload = get(pos + prefix, n)
         if payload is None:
@@ -321,8 +328,10 @@ def walk_records(split: FileSplit, fmt) -> Iterator[tuple[bytes, int, int]]:
     - ``plausible(buf, pos)`` returns the total length of a plausible
       record at ``pos``, or None.
 
-    A file that is not BGZF cannot split: the first split reads the whole
-    stream and the others yield nothing.
+    A split with index ``chunks`` seeks to each chunk's start, which is an
+    exact record start, and walks until the chunk's end. A byte-range split
+    anchors and resyncs instead. A file that is not BGZF cannot split: the
+    first split reads the whole stream and the others yield nothing.
     """
     size = file_size(split.path)
     end = split.start + split.length
@@ -334,8 +343,13 @@ def walk_records(split: FileSplit, fmt) -> Iterator[tuple[bytes, int, int]]:
             return
         header_buf = BgzfBuf(f, 0, size)
         first = fmt.header(header_buf)
+        if split.chunks:
+            for vbeg, vend in split.chunks:
+                buf = BgzfBuf(f, vbeg >> 16, size)
+                yield from owned_records(buf, vbeg & 0xFFFF, vend, fmt)
+            return
         if split.start == 0:
-            yield from owned_records(header_buf, first, end, fmt)
+            yield from owned_records(header_buf, first, end << 16, fmt)
             return
         anchor = find_block(f, split.start, size)
         if anchor is None or anchor >= end:
@@ -351,12 +365,31 @@ def walk_records(split: FileSplit, fmt) -> Iterator[tuple[bytes, int, int]]:
             buf, pos = BgzfBuf(f, anchor, size), 0
         pos = _resync_pos(buf, pos, end, fmt)
         if pos is not None:
-            yield from owned_records(buf, pos, end, fmt)
+            yield from owned_records(buf, pos, end << 16, fmt)
+
+
+def lines_from(buf: BgzfBuf, pos: int) -> Iterator[tuple[int, int, str]]:
+    """(start, next, text) of each line from decompressed position ``pos``
+    to EOF: ``next`` is where the following line starts, and ``text`` has
+    the newline stripped."""
+    while buf.get(pos, 1) is not None:
+        nl = buf.find(b"\n", pos)
+        if nl < 0:
+            end = buf.end_abs()
+            yield pos, end, buf.get(pos, end - pos).decode("utf-8", "replace")
+            return
+        yield pos, nl + 1, buf.get(pos, nl - pos).decode("utf-8", "replace").rstrip("\r")
+        pos = nl + 1
+        buf.drop_before(pos)
 
 
 def parse_bgzf_lines_split(split: FileSplit):
-    """Lines of a BGZF text file owned by this compressed byte range —
-    the TextInputFormat convention lifted to blocks:
+    """Lines of a BGZF text file owned by this split, as {"value": line}
+    with the newline stripped, in file order.
+
+    A split with index ``chunks`` reads, per chunk, the lines from its
+    start (a line start) until its end. A byte-range split follows the
+    TextInputFormat convention lifted to blocks:
 
     - a non-first split skips up to and including the first newline in its
       region (the spanning line belongs to the previous split);
@@ -364,33 +397,32 @@ def parse_bgzf_lines_split(split: FileSplit):
     - PLUS the line starting exactly at the first byte of the first block
       at-or-after ``end`` (mirror of the skip rule — the next split always
       discards its first line, even a complete one).
-
-    Yields {"value": line} with the newline stripped, file order preserved.
     """
     size = file_size(split.path)
     end = split.start + split.length
     with open_binary(split.path) as f:
+        if split.chunks:
+            for vbeg, vend in split.chunks:
+                buf = BgzfBuf(f, vbeg >> 16, size)
+                for pos, _, line in lines_from(buf, vbeg & 0xFFFF):
+                    if buf.voffset(pos) >= vend:
+                        break
+                    yield {"value": line}
+            return
         if split.start == 0:
-            anchor = 0
+            buf, pos = BgzfBuf(f, 0, size), 0
         else:
             anchor = find_block(f, split.start, size)
             if anchor is None or anchor >= end:
                 return
-        buf = BgzfBuf(f, anchor, size)
-        if split.start == 0:
-            pos = 0
-            if buf.get(0, 1) is None:
-                return
-        else:
+            buf = BgzfBuf(f, anchor, size)
             nl = buf.find(b"\n", 0)
             if nl < 0:
                 return
             pos = nl + 1
 
         boundary_line_taken = False
-        while True:
-            if buf.get(pos, 1) is None:
-                return  # EOF (a final unterminated line would have yielded below)
+        for pos, _, line in lines_from(buf, pos):
             cpos = buf.block_coffset_of(pos)
             if cpos >= end:
                 # Past our range. The one exception: a line starting exactly
@@ -405,53 +437,22 @@ def parse_bgzf_lines_split(split: FileSplit):
                 ):
                     return
                 boundary_line_taken = True
-            nl = buf.find(b"\n", pos)
-            if nl < 0:
-                line = buf.get(pos, buf.end_abs() - pos)
-                if line:
-                    yield {"value": line.decode("utf-8", "replace")}
-                return
-            yield {"value": buf.get(pos, nl - pos).decode("utf-8", "replace").rstrip("\r")}
-            pos = nl + 1
-            buf.drop_before(pos)
+            yield {"value": line}
 
 
 # ---------------------------------------------------------------------------
-# Virtual-offset chunks → split pruning (used by indexes.plan_region_splits)
+# Virtual-offset chunks (used by indexes.plan_region_splits)
 # ---------------------------------------------------------------------------
 
 
 def merge_voffset_ranges(chunks: list[tuple[int, int]]) -> list[tuple[int, int]]:
-    """Virtual-offset chunks → merged compressed byte ranges."""
-    ranges = sorted((vbeg >> 16, (vend >> 16) + 1) for vbeg, vend in chunks)
-    if not ranges:
-        return []
-    merged = [list(ranges[0])]
-    for lo, hi in ranges[1:]:
-        if lo <= merged[-1][1]:
-            merged[-1][1] = max(merged[-1][1], hi)
+    """Index chunks → sorted, merged virtual-offset ranges. A chunk that
+    starts in the block where the previous range ends joins it: the walk
+    decodes that block anyway."""
+    merged: list[list[int]] = []
+    for vbeg, vend in sorted(chunks):
+        if merged and vbeg >> 16 <= merged[-1][1] >> 16:
+            merged[-1][1] = max(merged[-1][1], vend)
         else:
-            merged.append([lo, hi])
-    return [(lo, hi) for lo, hi in merged]
-
-
-def prune_splits_to_ranges(splits, ranges: list[tuple[int, int]]):
-    """Splits overlapping any compressed range, PLUS each kept split's
-    immediate file-order predecessor. The predecessor rule is a
-    correctness requirement for record boundary ownership: a record
-    starting exactly at byte 0 of a kept split's anchor block is YIELDED
-    by the previous split (the next-split-discards-its-first-record
-    convention), and that anchor is by definition the first block
-    at-or-after the predecessor's end — so pruning the predecessor while
-    keeping its successor would silently drop the boundary record. One
-    extra split per contiguous kept run buys the guarantee. (The post-scan
-    exact filters keep pruning correctness-neutral for every record a kept
-    split YIELDS — this rule guards which split yields it at all.)"""
-    ordered = sorted(splits, key=lambda s: s.start)
-    keep_idx = {
-        i
-        for i, s in enumerate(ordered)
-        if any(lo < s.start + s.length and s.start < hi for lo, hi in ranges)
-    }
-    keep_idx |= {i - 1 for i in keep_idx if i > 0}
-    return [s for i, s in enumerate(ordered) if i in keep_idx]
+            merged.append([vbeg, vend])
+    return [(vbeg, vend) for vbeg, vend in merged]

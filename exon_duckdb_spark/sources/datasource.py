@@ -14,9 +14,9 @@ formats without row-group statistics, so source-side filter pushdown buys
 nothing — same conclusion as SURVEY §2.4).
 
 Each partition is one FileSplit (splits.py plans byte-ranges on the driver),
-and ``read`` yields Arrow record batches straight into Tungsten — identical
-execution shape to the ``mapInArrow`` path in reader_core.py, shared
-batching code. Only formats with a static schema register here; VCF/BCF
+and ``read`` yields Arrow record batches straight into Tungsten — the same
+execution shape as the ``mapInArrow`` path in reader_core.py (one task per
+split, no shuffle) and the same batching code. Only formats with a static schema register here; VCF/BCF
 derive their ``info`` struct from each file's header at plan time, so they
 stay function-style (``read_vcf``/``read_bcf``), mirroring the reference's
 bind-time schema pull (module.cpp:110-119).

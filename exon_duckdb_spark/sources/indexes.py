@@ -5,17 +5,18 @@ from them.
 All three use one binning scheme: CSI binning with a (min_shift, depth)
 pair, of which BAI and TBI are the fixed (14, 5) case (SAM spec §5.3,
 tabix.tex, csi.tex). A region query is region → overlapping bins → chunk
-virtual offsets → compressed byte ranges → the file splits that overlap
-them (:func:`plan_region_splits`); the exact overlap filter runs after the
-scan, so results never depend on the index (:func:`region_query`). The
-reference uses these indexes the same way in its region-query TVFs
+virtual-offset ranges → one task per range group
+(:func:`plan_region_splits`). Each task seeks straight to its chunks and
+reads only them; the exact overlap filter runs after the scan, so results
+never depend on the index (:func:`region_query`). The reference uses these
+indexes the same way in its region-query TVFs
 (rust/src/bam_query_reader.rs:63, vcf_query_reader.rs:31-86).
 
 Building an index is a sequential walk of one file — the cost profile of
 ``samtools index`` — so it runs driver-side, streaming the BGZF blocks: BAM
 and BCF records through the same walker the scans use
 (:func:`~exon_duckdb_spark.sources.bgzf.owned_records`), VCF lines through
-the same block buffer. Only bins are emitted (no linear index or loffset
+the same line walker. Only bins are emitted (no linear index or loffset
 hints): the readers bound both chunk ends from the bins alone, and an
 empty linear index is valid per spec.
 """
@@ -33,16 +34,16 @@ from exon_duckdb_spark.sources.bgzf import (
     BGZF_SPLIT_BYTES,
     BgzfBuf,
     is_bgzf,
+    lines_from,
     merge_voffset_ranges,
     owned_records,
-    prune_splits_to_ranges,
 )
 from exon_duckdb_spark.sources.splits import (
+    FileSplit,
     file_size,
     is_single_file,
     open_binary,
     path_exists,
-    plan_splits,
 )
 from exon_duckdb_spark.sources.vcf import parse_region, region_filter
 
@@ -141,16 +142,12 @@ def index_vcf(path: str, out_path: str | None = None) -> str:
     refs: list[Bins] = []
     with open_binary(path) as f:
         buf = BgzfBuf(f, 0, file_size(path))
-        pos = 0
-        while buf.get(pos, 1) is not None:
-            nl = buf.find(b"\n", pos)
-            line_end = buf.end_abs() if nl < 0 else nl + 1
-            line = buf.get(pos, line_end - pos).rstrip(b"\n")
-            if line and not line.startswith(b"#"):
-                fields = line.split(b"\t")
-                chrom = fields[0].decode()
+        for pos, line_end, line in lines_from(buf, 0):
+            if line and not line.startswith("#"):
+                fields = line.split("\t")
+                chrom = fields[0]
                 p1 = int(fields[1])
-                ref = fields[3] if len(fields) > 3 else b"N"
+                ref = fields[3] if len(fields) > 3 else "N"
                 rid = name_ids.get(chrom)
                 if rid is None:
                     rid = len(names)
@@ -164,8 +161,6 @@ def index_vcf(path: str, out_path: str | None = None) -> str:
                     buf.voffset(pos),
                     buf.voffset(line_end),
                 )
-            pos = line_end
-            buf.drop_before(pos)
     nm = b"".join(n.encode() + b"\x00" for n in names)
     out = out_path or path + ".tbi"
     body = b"TBI\x01" + struct.pack(
@@ -279,8 +274,11 @@ def plan_region_splits(
       not BGZF (virtual offsets would be meaningless), or the path is not a
       single file. The caller reads everything.
     - ``[]``: the contig is absent, so nothing can overlap.
-    - otherwise the splits overlapping the region's chunks, plus each kept
-      split's predecessor (:func:`prune_splits_to_ranges`).
+    - otherwise the region's merged chunk ranges
+      (:func:`~exon_duckdb_spark.sources.bgzf.merge_voffset_ranges`),
+      grouped in file order into splits whose compressed span reaches
+      ``split_bytes``: each split is one task that reads only its chunks,
+      so a small file's query is one task and a huge region still fans out.
     """
     if not (is_single_file(path) and is_bgzf(path)):
         return None
@@ -298,13 +296,22 @@ def plan_region_splits(
     chunks = [
         c for b in reg2bins(beg0, end0, min_shift, depth) for c in bins.get(b, ())
     ]
-    splits = plan_splits(path, "none", splittable=True, split_bytes=split_bytes)
-    return prune_splits_to_ranges(splits, merge_voffset_ranges(chunks))
+    groups: list[list[tuple[int, int]]] = []
+    for vbeg, vend in merge_voffset_ranges(chunks):
+        if groups and (groups[-1][-1][1] >> 16) - (groups[-1][0][0] >> 16) < split_bytes:
+            groups[-1].append((vbeg, vend))
+        else:
+            groups.append([(vbeg, vend)])
+    return [
+        FileSplit(path, g[0][0] >> 16, (g[-1][1] >> 16) - (g[0][0] >> 16), None, tuple(g))
+        for g in groups
+    ]
 
 
 def region_query(spark: SparkSession, path: str, region: str, read, span) -> DataFrame:
     """The body of ``bam_query``/``vcf_query``/``bcf_query``: read the
-    index-pruned splits with ``read(spark, path, _splits=...)``, then keep
+    region's chunk-range splits with ``read(spark, path, _splits=...)`` (one
+    task each, no shuffle), then keep
     records whose ``span(df)`` = (chrom, first, last) columns overlap the
     1-based inclusive region. The exact filter keeps results independent of
     the index."""

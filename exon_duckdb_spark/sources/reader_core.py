@@ -3,9 +3,10 @@ Arrow-stream table function.
 
 The reference's scan pipeline (SURVEY §3.1) is: bind-time schema → per-scan
 Arrow record-batch stream → host engine pulls batches. Here: driver plans
-file splits (splits.py) → ``mapInArrow`` runs a per-split parser on the
-executors, yielding Arrow batches directly into Tungsten — columnar
-end-to-end, one task per split, no driver data path.
+file splits (splits.py) → ``mapInArrow`` over ``spark.range`` runs a
+per-split parser on the executors, yielding Arrow batches directly into
+Tungsten — columnar end-to-end, no driver data path. Range partition *i*
+holds only id *i*: one task per split, no shuffle, rows in split order.
 
 A format plugs in one generator function: parse(split) -> iterator of
 record dicts. ``make_reader`` handles batching into Arrow and the Spark
@@ -26,7 +27,6 @@ from exon_duckdb_spark.sources.splits import (
     FileSplit,
     open_maybe_compressed,
     plan_splits,
-    splits_df,
 )
 
 # Mirror the reference's Arrow batch size order-of-magnitude; bigger batches
@@ -82,24 +82,20 @@ def make_reader(
     ``parse`` runs on executors; it receives a FileSplit and yields dicts
     keyed by schema column names. Records must be those *starting* in the
     split (the parser handles boundary scan-ahead itself). ``splits``
-    overrides the default planning — index-aware callers (bam_query) pass a
-    pruned subset.
+    overrides the default planning — region queries pass the index's chunk
+    ranges (sources/indexes.py).
     """
     if splits is None:
         kwargs = {} if split_bytes is None else {"split_bytes": split_bytes}
         splits = plan_splits(path, compression, splittable=splittable, **kwargs)
-    sdf = splits_df(spark, splits)
     arrow_schema = _to_arrow_schema(schema)
 
     def run(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         for b in batches:
-            for row in b.to_pylist():
-                split = FileSplit(
-                    row["path"], row["start"], row["length"], row["compression"]
-                )
-                yield from record_batches(parse(split), arrow_schema)
+            for i in b.column("id").to_pylist():
+                yield from record_batches(parse(splits[i]), arrow_schema)
 
-    return sdf.mapInArrow(run, schema)
+    return spark.range(0, len(splits), 1, max(len(splits), 1)).mapInArrow(run, schema)
 
 
 def record_batches(

@@ -27,8 +27,6 @@ import glob as _glob
 import os
 from dataclasses import dataclass
 
-from pyspark.sql import DataFrame, SparkSession
-
 DEFAULT_SPLIT_BYTES = 128 * 1024 * 1024
 
 COMPRESSION_EXTS = {".gz": "gzip", ".gzip": "gzip", ".zst": "zstd", ".zstd": "zstd"}
@@ -116,10 +114,15 @@ def open_output(path: str):
 
 @dataclass(frozen=True)
 class FileSplit:
+    """A compressed byte range [start, start + length) of one file. A
+    region query's split also carries the index's virtual-offset ranges
+    ``chunks`` (sources/indexes.py); its task reads exactly those."""
+
     path: str
     start: int
     length: int
     compression: str | None  # None = plain
+    chunks: tuple[tuple[int, int], ...] = ()
 
 
 def detect_compression(path: str, compression: str | None = "auto_detect") -> str | None:
@@ -250,15 +253,6 @@ def plan_splits(
                 splits.append(FileSplit(f, off, min(split_bytes, size - off), comp))
                 off += split_bytes
     return splits
-
-
-def splits_df(spark: SparkSession, splits: list[FileSplit]) -> DataFrame:
-    """One row per split, repartitioned so each split is its own task."""
-    df = spark.createDataFrame(
-        [(s.path, s.start, s.length, s.compression) for s in splits],
-        "path string, start long, length long, compression string",
-    )
-    return df.repartition(max(len(splits), 1))
 
 
 def open_maybe_compressed(path: str, compression: str | None):

@@ -9,7 +9,7 @@ Catalyst prunes and pushes down as usual).
 
 ``vcf_query(path, region)`` reproduces the tabix-region TVF semantics
 (rust/src/vcf_query_reader.rs:31-86): region 'chr' or 'chr:start-end',
-1-based inclusive. With a ``.tbi`` next to a bgzip'd file, splits prune to
+1-based inclusive. With a ``.tbi`` next to a bgzip'd file, it reads only
 the indexed chunk ranges (sources/indexes.py); the exact overlap filter
 runs after the scan, so semantics never depend on the index. bgzip'd files
 are block-splittable via sources/bgzf.py.
@@ -97,8 +97,8 @@ def _vcf_lines(spark: SparkSession, path: str, splits=None) -> DataFrame:
     bgzip'd files (BGZF — what tabix-indexed pipelines produce) go through
     the block-aligned split reader so one big .vcf.gz fans out across the
     cluster (plain gzip would be one unsplittable stream); everything else
-    uses Spark's native text scan. ``splits`` carries an index-pruned
-    subset (vcf_query)."""
+    uses Spark's native text scan. ``splits`` carries a region's index
+    chunk ranges (vcf_query)."""
     from exon_duckdb_spark.sources.bgzf import is_bgzf, parse_bgzf_lines_split
     from exon_duckdb_spark.sources.reader_core import make_reader
     from pyspark.sql import types as T
@@ -270,9 +270,9 @@ def vcf_query(spark: SparkSession, path: str, region: str) -> DataFrame:
     (rust/src/vcf_query_reader.rs:31-86).
 
     A VCF record covers pos..pos+len(ref)-1; the tabix query returns records
-    overlapping the region. With a ``.tbi`` next to a bgzip'd file, splits
-    outside the indexed chunks are pruned before the scan; the exact overlap
-    filter keeps semantics index-independent.
+    overlapping the region. With a ``.tbi`` next to a bgzip'd file, the scan
+    reads only the indexed chunk ranges; the exact overlap filter keeps
+    semantics index-independent.
     """
     from exon_duckdb_spark.sources.indexes import region_query
 

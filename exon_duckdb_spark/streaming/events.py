@@ -372,7 +372,7 @@ def stream_minhash_pairs(
     unbounded key churn should add a timeout eviction (the sessionize
     operator shows the pattern).
 
-    Replay caveat (ADVICE r7): the no-double-emit guard covers currently
+    Replay caveat: the no-double-emit guard covers currently
     RETAINED members (state holds (id, signature) pairs; re-arrivals of
     those are dropped). A replayed shard re-delivering an id that was
     already EVICTED re-probes the bucket and re-emits its pairs —

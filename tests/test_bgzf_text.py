@@ -174,17 +174,3 @@ class TestBgzfBufSkipSafety:
             pos += n + random.randint(0, 5000)
             buf2.drop_before(pos)
 
-
-def test_prune_keeps_boundary_record_owner():
-    """Round-5 review: a record starting exactly at byte 0 of a range's
-    first block is YIELDED by the previous split (boundary-ownership
-    convention), whose byte range can end up to one max BGZF block before
-    the range begins. Pruning must keep that owner."""
-    from exon_duckdb_spark.sources.bgzf import prune_splits_to_ranges
-    from exon_duckdb_spark.sources.splits import FileSplit
-
-    P = FileSplit(path="x", start=0, length=100, compression=None)
-    S = FileSplit(path="x", start=100, length=100, compression=None)
-    far = FileSplit(path="x", start=400_000, length=100, compression=None)
-    kept = prune_splits_to_ranges([P, S, far], [(100, 150)])
-    assert P in kept and S in kept and far not in kept

@@ -408,6 +408,51 @@ class TestHammingIndex:
         }
         assert sym == pairs
 
+    def test_index_files_follow_shuffle_bytes(self, spark, tmp_path):
+        """The index write is one rebalance on ``block``: a block dir splits
+        over several files once its shuffle bytes pass the advisory
+        partition size, holds one file at the default, and one file with
+        AQE off. The rows are identical in every layout."""
+        import glob
+        import os
+
+        from exon_duckdb_spark.session import scoped_conf
+
+        df = spark.range(0, 3000, 1, 4).select(
+            F.col("id"), ((F.col("id") * 2654435761) % (1 << 49)).alias("dhash")
+        )
+
+        def build(name, **conf):
+            p = str(tmp_path / name)
+            with scoped_conf(spark, **conf):
+                ops.hamming_index_build(df, p, bits=49, max_hamming=2)
+            return p
+
+        def files(p):
+            return {
+                d: len(glob.glob(f"{p}/{d}/*.parquet"))
+                for d in os.listdir(p) if d.startswith("block=")
+            }
+
+        def rows(p):
+            return sorted(
+                tuple(r) for r in spark.read.parquet(p)
+                .select(F.col("block").cast("int"), "bval", "id", "fp").collect()
+            )
+
+        small = build("small", **{
+            "spark.sql.adaptive.advisoryPartitionSizeInBytes": "4096"})
+        dflt = build("dflt")
+        no_aqe = build("no_aqe", **{"spark.sql.adaptive.enabled": "false"})
+        f_small, f_dflt = files(small), files(dflt)
+        assert set(f_small) == set(f_dflt) and len(f_dflt) == 3
+        assert all(v > 1 for v in f_small.values()), f_small
+        assert all(v == 1 for v in f_dflt.values()), f_dflt
+        assert all(v == 1 for v in files(no_aqe).values())
+        want = rows(dflt)
+        assert len(want) == 3 * 3000
+        assert rows(small) == want and rows(no_aqe) == want
+
 
 def test_video_dhash_gif_animation_path(spark):
     """video_dhash's GIF route: an animated GIF's composited frames hash

@@ -309,3 +309,54 @@ def test_bucketed_join_skips_exchange(spark, tmp_path):
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old_wh)
         spark.sql("DROP TABLE IF EXISTS bj_a")
         spark.sql("DROP TABLE IF EXISTS bj_b")
+
+
+def _split_reader_frames(spark, tmp_path):
+    """(name, DataFrame, planned split count) for every split-parser read
+    and region query: a 4-split FASTA, a BAM, a BCF, a bgzip'd VCF, and the
+    three indexed region queries."""
+    from exon_duckdb_spark.sources import bam_query, bcf_query, read_bam, read_bcf
+    from exon_duckdb_spark.sources import read_fasta, read_vcf, vcf_query
+    from exon_duckdb_spark.sources.indexes import index_bam, index_bcf, index_vcf
+    from exon_duckdb_spark.sources.indexes import plan_region_splits
+    from exon_duckdb_spark.sources.splits import plan_splits
+    from tests.test_indexes import REGION, _write_bam, _write_bcf, _write_vcf
+
+    fa = tmp_path / "x.fasta"
+    fa.write_text("".join(f">s{i:03d} d\n{'ACGT' * (i % 9 + 1)}\n" for i in range(200)))
+    sb = fa.stat().st_size // 4 + 1
+    out = [("fasta", read_fasta(spark, str(fa), split_bytes=sb),
+            len(plan_splits(str(fa), split_bytes=sb)))]
+    for fmt, name, write, index, read, query in (
+        ("bam", "x.bam", _write_bam, index_bam, read_bam, bam_query),
+        ("vcf", "x.vcf.gz", _write_vcf, index_vcf, read_vcf, vcf_query),
+        ("bcf", "x.bcf", _write_bcf, index_bcf, read_bcf, bcf_query),
+    ):
+        p = str(tmp_path / name)
+        write(p)
+        index(p)
+        out.append((fmt, read(spark, p), len(plan_splits(p, "none"))))
+        out.append((f"{fmt}_query", query(spark, p, REGION),
+                    len(plan_region_splits(p, REGION))))
+    return out
+
+
+def test_split_reads_are_one_task_per_split_without_shuffle(spark, tmp_path):
+    """Every split-parser read and region query is one task per planned
+    split or chunk-range group, placed without an Exchange."""
+    frames = _split_reader_frames(spark, tmp_path)
+    assert frames[0][0] == "fasta" and frames[0][2] == 4
+    for name, df, n_splits in frames:
+        assert "Exchange" not in explain_formatted(df), name
+        assert df.rdd.getNumPartitions() == n_splits, name
+        assert df.count() > 0, name
+
+
+def test_multi_split_fasta_keeps_file_order(spark, tmp_path):
+    from exon_duckdb_spark.sources import read_fasta
+
+    fa = tmp_path / "o.fasta"
+    fa.write_text("".join(f">s{i:04d}\n{'AC' * (i % 13 + 1)}\n" for i in range(1000)))
+    df = read_fasta(spark, str(fa), split_bytes=fa.stat().st_size // 6)
+    assert df.rdd.getNumPartitions() >= 6
+    assert [r["id"] for r in df.collect()] == [f"s{i:04d}" for i in range(1000)]

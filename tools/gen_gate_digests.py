@@ -91,7 +91,8 @@ def main() -> int:
         "the oracle SQL itself; a driver-side engine that computes different\n"
         "VALUES for any branch raises ``error()`` with its ``version()`` and the\n"
         "actual digests, surfacing the diagnosis through the driver's ``err``\n"
-        'field (VERDICT r8, next-round ask #1).\n"""\n'
+        "field, so a digest mismatch names the engine and values that caused it.\n"
+        '"""\n'
     )
     with open(OUT, "w") as f:
         f.write(header)
