@@ -21,6 +21,9 @@ Everything targets a multi-executor cluster: no driver-side data paths, one
 task per file split, broadcast hints for dimension joins, AQE on.
 """
 
+# first, so a Python worker that imports the package stops re-reading
+# pyspark.zip on every task (see _zipcache)
+from exon_duckdb_spark import _zipcache  # noqa: F401
 from exon_duckdb_spark.session import get_session  # noqa: F401
 
 __version__ = "0.1.0"

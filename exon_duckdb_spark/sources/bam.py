@@ -197,6 +197,4 @@ def bam_query(spark: SparkSession, path: str, region: str) -> DataFrame:
     (rust/src/bam_query_reader.rs:63): alignments overlapping the 1-based
     inclusive region, read from the ``.bai`` chunk ranges when the index
     exists (see :func:`~exon_duckdb_spark.sources.indexes.region_query`)."""
-    return region_query(
-        spark, path, region, read_bam, lambda df: (df.reference, df.start, df.end)
-    )
+    return region_query(spark, path, region, read_bam, ("reference", "start", "`end`"))

@@ -28,7 +28,7 @@ from pyspark.sql import DataFrame, SparkSession
 from exon_duckdb_spark.sources.bgzf import BGZF_SPLIT_BYTES, BgzfBuf, open_stream, walk_records
 from exon_duckdb_spark.sources.indexes import region_query
 from exon_duckdb_spark.sources.splits import FileSplit, expand_paths
-from exon_duckdb_spark.sources.vcf import _INFO_RE, vcf_span
+from exon_duckdb_spark.sources.vcf import _INFO_RE, VCF_SPAN
 
 __all__ = ["read_bcf", "bcf_query"]
 
@@ -355,4 +355,4 @@ def bcf_query(spark: SparkSession, path: str, region: str) -> DataFrame:
     (rust/src/bcf_query_reader.rs:63). It reads only the ``.csi`` chunk
     ranges when the index exists; the exact overlap filter keeps semantics
     index-independent."""
-    return region_query(spark, path, region, read_bcf, vcf_span)
+    return region_query(spark, path, region, read_bcf, VCF_SPAN)

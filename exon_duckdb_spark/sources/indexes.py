@@ -308,16 +308,17 @@ def plan_region_splits(
     ]
 
 
-def region_query(spark: SparkSession, path: str, region: str, read, span) -> DataFrame:
+def region_query(
+    spark: SparkSession, path: str, region: str, read, span: tuple[str, str, str]
+) -> DataFrame:
     """The body of ``bam_query``/``vcf_query``/``bcf_query``: read the
     region's chunk-range splits with ``read(spark, path, _splits=...)`` (one
-    task each, no shuffle), then keep
-    records whose ``span(df)`` = (chrom, first, last) columns overlap the
-    1-based inclusive region. The exact filter keeps results independent of
-    the index."""
+    task each, no shuffle), then keep records whose ``span`` = (chrom,
+    first, last) SQL expressions overlap the 1-based inclusive region. The
+    exact filter keeps results independent of the index."""
     splits = plan_region_splits(path, region)
     if splits == []:
         df = read(spark, path).limit(0)
     else:
         df = read(spark, path, _splits=splits)
-    return df.where(region_filter(*span(df), region))
+    return df.where(region_filter(*span, region))

@@ -4,15 +4,19 @@ Parity: reference ``read_vcf_file_records`` — the one file-dependent schema
 in the reference: INFO struct fields come from the file's ``##INFO`` header
 lines, resolved at bind time (SURVEY §1.1; arrow_table_function/
 module.cpp:110-119). We mirror that with a driver-side header peek at plan
-time, then parse entirely with native expressions (text scan → split —
-Catalyst prunes and pushes down as usual).
+time, then parse with one SQL select list over the tab-split line, built as
+text (:func:`_vcf_select`, the INFO struct from :func:`_info_sql`) in the
+manner of ``sources/tsv.py::LINE_FORMATS``: the text scan and the parsing
+stay JVM-side in codegen, and the driver builds the plan from a few SQL
+parses rather than one Py4J call per expression node.
 
 ``vcf_query(path, region)`` reproduces the tabix-region TVF semantics
 (rust/src/vcf_query_reader.rs:31-86): region 'chr' or 'chr:start-end',
 1-based inclusive. With a ``.tbi`` next to a bgzip'd file, it reads only
 the indexed chunk ranges (sources/indexes.py); the exact overlap filter
-runs after the scan, so semantics never depend on the index. bgzip'd files
-are block-splittable via sources/bgzf.py.
+(:func:`region_filter`, SQL text too) runs after the scan, so semantics
+never depend on the index. bgzip'd files are block-splittable via
+sources/bgzf.py.
 """
 
 from __future__ import annotations
@@ -20,8 +24,7 @@ from __future__ import annotations
 import re
 from dataclasses import dataclass
 
-from pyspark.sql import Column, DataFrame, SparkSession
-from pyspark.sql import functions as F
+from pyspark.sql import DataFrame, SparkSession
 
 from exon_duckdb_spark.sources.splits import detect_compression, expand_paths
 
@@ -69,8 +72,16 @@ def _scalar_type(vcf_type: str) -> str:
     }.get(vcf_type, "string")
 
 
-def _info_col(info: Column, f: InfoField) -> Column:
-    """One INFO field as a typed column.
+def _sql_str(s: str) -> str:
+    """``s`` as a Spark SQL string literal."""
+    return "'" + s.replace("\\", "\\\\").replace("'", "\\'") + "'"
+
+
+_INFO = "get(f, 7)"
+
+
+def _info_sql(f: InfoField) -> str:
+    """One INFO field as a typed SQL expression over the line's fields ``f``.
 
     The VCF spec's missing-value marker ``.`` (scalar or per list element,
     e.g. ``MQ=.`` / ``CAF=0.5,.``) decodes as NULL; ``try_cast`` keeps a
@@ -79,16 +90,12 @@ def _info_col(info: Column, f: InfoField) -> Column:
     matching :func:`parse_vcf_record_fields`)."""
     key = re.escape(f.id)
     if f.type == "Flag" or f.number == "0":
-        return info.rlike(f"(^|;){key}(;|=|$)")
-    raw = F.regexp_extract(info, f"(^|;){key}=([^;]*)", 2)
-    raw = F.when((raw == "") | (raw == "."), F.lit(None)).otherwise(raw)
+        return f"{_INFO} RLIKE {_sql_str(f'(^|;){key}(;|=|$)')}"
+    raw = f"nullif(nullif(regexp_extract({_INFO}, {_sql_str(f'(^|;){key}=([^;]*)')}, 2), ''), '.')"
     st = _scalar_type(f.type)
     if f.number == "1":
-        return raw.try_cast(st)
-    return F.transform(
-        F.split(raw, ","),
-        lambda v: F.when(v == ".", F.lit(None)).otherwise(v).try_cast(st),
-    )
+        return f"try_cast({raw} AS {st})"
+    return f"transform(split({raw}, ','), v -> try_cast(nullif(v, '.') AS {st}))"
 
 
 def _vcf_lines(spark: SparkSession, path: str, splits=None) -> DataFrame:
@@ -115,7 +122,7 @@ def _vcf_lines(spark: SparkSession, path: str, splits=None) -> DataFrame:
 
 def vcf_schema(info_fields: list[InfoField]):
     """Spark schema of a VCF scan given its header's INFO fields (the
-    bind-time file-dependent schema; mirrors _info_col's types)."""
+    bind-time file-dependent schema; mirrors _info_sql's types)."""
     from pyspark.sql import types as T
 
     from exon_duckdb_spark.sources.schemas import VCF_FIXED_FIELDS
@@ -139,37 +146,41 @@ def vcf_schema(info_fields: list[InfoField]):
     )
 
 
+def _vcf_select(info_fields: list[InfoField]) -> tuple[str, ...]:
+    """:func:`read_vcf`'s select list over the tab-split fields ``f`` of a
+    data line; ``get`` is NULL past the line's last field."""
+    info = (
+        "named_struct(" + ", ".join(f"{_sql_str(f.id)}, {_info_sql(f)}" for f in info_fields) + ")"
+        if info_fields else "CAST(NULL AS STRUCT<>)"
+    )
+    return (
+        "get(f, 0) AS chrom",
+        "try_cast(get(f, 1) AS BIGINT) AS pos",
+        "nullif(get(f, 2), '.') AS id",
+        "get(f, 3) AS ref",
+        "CASE WHEN get(f, 4) != '.' THEN split(get(f, 4), ',') END AS alt",
+        "try_cast(nullif(get(f, 5), '.') AS FLOAT) AS qual",
+        "nullif(get(f, 6), '.') AS `filter`",
+        f"{info} AS info",
+        "get(f, 8) AS formats",
+        "CASE WHEN size(f) > 9 THEN slice(f, 10, size(f) - 9) END AS genotypes",
+    )
+
+
+# blank lines (hand-edited/concatenated files) are dropped with the header
+# lines
+_VCF_WHERE = "value != '' AND NOT startswith(value, '#')"
+
+
 def read_vcf(spark: SparkSession, path: str, _splits=None) -> DataFrame:
     """VCF records: (chrom, pos, id, ref, alt, qual, filter, info, formats,
     genotypes) with info struct fields from the ##INFO header."""
     info_fields = _peek_info_fields(path)
-    # blank lines (hand-edited/concatenated files) would otherwise index
-    # past the single empty token under ANSI mode — drop them with the
-    # header lines; every remaining getItem is size-guarded the same way.
-    lines = _vcf_lines(spark, path, _splits).where(
-        (F.length(F.col("value")) > 0) & ~F.col("value").startswith("#")
-    )
-    p = F.split(F.col("value"), "\t")
-    item = lambda i: F.when(F.size(p) > i, p.getItem(i))  # noqa: E731
-    dot_null = lambda c: F.when(c == ".", F.lit(None)).otherwise(c)  # noqa: E731
-    info_raw = item(7)
-    info_struct = F.struct(
-        *[_info_col(info_raw, f).alias(f.id) for f in info_fields]
-    ) if info_fields else F.lit(None).cast("struct<>")
-    return lines.select(
-        p.getItem(0).alias("chrom"),
-        item(1).try_cast("long").alias("pos"),
-        dot_null(item(2)).alias("id"),
-        item(3).alias("ref"),
-        F.when(item(4) == ".", F.lit(None))
-        .otherwise(F.split(item(4), ","))
-        .alias("alt"),
-        dot_null(item(5)).try_cast("float").alias("qual"),
-        dot_null(item(6)).alias("filter"),
-        info_struct.alias("info"),
-        item(8).alias("formats"),
-        F.when(F.size(p) > 9, F.slice(p, 10, F.greatest(F.size(p) - 9, F.lit(0))))
-        .alias("genotypes"),
+    return (
+        _vcf_lines(spark, path, _splits)
+        .where(_VCF_WHERE)
+        .selectExpr("split(value, '\\t') AS f")
+        .selectExpr(*_vcf_select(info_fields))
     )
 
 
@@ -187,11 +198,11 @@ def parse_vcf_record_fields(f: list[str], info_fields: list[InfoField]) -> dict:
             k, eq, v = part.partition("=")
             keys.add(k)
             if eq:
-                values.setdefault(k, v)  # the first value wins, as in _info_col
+                values.setdefault(k, v)  # the first value wins, as in _info_sql
 
     def _cast(v: str, t: str):
         # '.' (scalar or list element) and malformed values → None, as
-        # _info_col's try_cast
+        # _info_sql's try_cast
         if v == ".":
             return None
         try:
@@ -250,18 +261,19 @@ def parse_region(region: str) -> tuple[str, int | None, int | None]:
     return chrom, int(rng.replace(",", "")), None
 
 
-def region_filter(chrom_col: Column, start_col: Column, end_col: Column, region: str) -> Column:
-    """Interval-overlap predicate for a region string (1-based inclusive).
+def region_filter(chrom: str, first: str, last: str, region: str) -> str:
+    """Interval-overlap predicate for a region string (1-based inclusive),
+    as SQL text over a record's (chrom, first, last) position expressions.
 
-    ``end_col`` is the feature's last covered position; records overlap the
-    region if start <= r_end and end >= r_start.
+    ``last`` is the feature's last covered position; records overlap the
+    region if first <= r_end and last >= r_start.
     """
-    chrom, r_start, r_end = parse_region(region)
-    cond = chrom_col == chrom
+    name, r_start, r_end = parse_region(region)
+    cond = f"{chrom} = {_sql_str(name)}"
     if r_start is not None:
-        cond = cond & (end_col >= r_start)
+        cond += f" AND {last} >= {r_start}"
     if r_end is not None:
-        cond = cond & (start_col <= r_end)
+        cond += f" AND {first} <= {r_end}"
     return cond
 
 
@@ -276,9 +288,9 @@ def vcf_query(spark: SparkSession, path: str, region: str) -> DataFrame:
     """
     from exon_duckdb_spark.sources.indexes import region_query
 
-    return region_query(spark, path, region, read_vcf, vcf_span)
+    return region_query(spark, path, region, read_vcf, VCF_SPAN)
 
 
-def vcf_span(df: DataFrame) -> tuple[Column, Column, Column]:
-    """(chrom, first, last) position columns of VCF-shaped records."""
-    return df.chrom, df.pos, df.pos + F.length(df.ref) - 1
+# (chrom, first, last) positions of VCF-shaped records: a record covers
+# pos..pos+len(ref)-1
+VCF_SPAN = ("chrom", "pos", "pos + length(ref) - 1")

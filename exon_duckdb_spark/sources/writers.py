@@ -314,7 +314,8 @@ def to_genbank(df: DataFrame, path: str, compression: str | None = None) -> None
 def write_partition_files(df: DataFrame, path: str, render, ext: str) -> int:
     """Distributed sink for whole-file formats (mzML XML docs, BAM/BCF
     binaries): each partition renders its rows to ONE complete file in
-    ``path`` via ``render(rows: list[dict]) -> bytes``. No driver data
+    ``path`` via ``render(rows: list[dict]) -> bytes`` (Arrow rows, so a
+    NULL arrives as ``None``). No driver data
     path — executors write their own partition's file, so the sink scales
     with the cluster exactly like Spark's native sinks. Returns the row
     count. Overwrites ``path``."""
@@ -341,12 +342,12 @@ def write_partition_files(df: DataFrame, path: str, render, ext: str) -> int:
         os.makedirs(p, exist_ok=True)
 
     def _write(batches):
-        import pandas as pd
+        import pyarrow as pa
         from pyspark import TaskContext
 
         rows: list[dict] = []
-        for pdf in batches:
-            rows.extend(pdf.to_dict("records"))
+        for batch in batches:
+            rows.extend(batch.to_pylist())
         if rows:
             pid = TaskContext.get().partitionId()
             if remote:
@@ -360,11 +361,11 @@ def write_partition_files(df: DataFrame, path: str, render, ext: str) -> int:
             else:
                 with open(os.path.join(p, f"part-{pid:05d}{ext}"), "wb") as fh:
                     fh.write(render(rows))
-        yield pd.DataFrame({"n": [len(rows)]})
+        yield pa.RecordBatch.from_arrays([pa.array([len(rows)], pa.int64())], ["n"])
 
     from pyspark.sql import functions as _F
 
-    n = df.mapInPandas(_write, "n long").agg(_F.sum("n")).collect()[0][0]
+    n = df.mapInArrow(_write, "n long").agg(_F.sum("n")).collect()[0][0]
     return int(n or 0)
 
 
@@ -422,20 +423,27 @@ def to_mzml(df: DataFrame, path: str) -> int:
 
 
 _CIGAR_OP_CODE = {"M": 0, "I": 1, "D": 2, "N": 3, "S": 4, "H": 5, "P": 6, "=": 7, "X": 8}
-_SEQ_CODE = {c: i for i, c in enumerate("=ACMGRSVTWYHKDBN")}
+# byte → the hex digit of its 4-bit BAM base code (BAM spec §4.2.3): one
+# bytes.translate + bytes.fromhex packs a read, the inverse of the reader's
+# hex().translate; every byte outside "=ACMGRSVTWYHKDBN" is N (15)
+_SEQ_HEX = bytes(
+    ord("0123456789abcdef"["=ACMGRSVTWYHKDBN".find(chr(b)) % 16]) for b in range(256)
+)
+# Phred+33 character → quality byte (characters below '!' are rejected)
+_QUAL_SHIFT = bytes((b - 33) % 256 for b in range(256))
 
 
-def _null(v) -> bool:
-    """NULL check that also catches the NaN that pandas uses for a null
-    numeric cell after Arrow conversion (arrays/lists are never null)."""
-    if v is None:
-        return True
-    if isinstance(v, (list, tuple)) or getattr(v, "ndim", 0):
-        return False
-    try:
-        return bool(v != v)
-    except Exception:
-        return False
+def _pack_seq(seq: str) -> bytes:
+    # latin-1 with "replace" keeps one byte per base; '?' and 0x80-0xff are N
+    hx = seq.encode("latin-1", "replace").translate(_SEQ_HEX)
+    return bytes.fromhex((hx + b"0" if len(hx) % 2 else hx).decode())
+
+
+def _pack_qual(qual: str) -> bytes:
+    raw = qual.encode("latin-1")
+    if min(raw) < 33:
+        raise ValueError(f"quality character below '!' in {qual!r}")
+    return raw.translate(_QUAL_SHIFT)
 
 
 def _render_bam(rows: list[dict], refs: list[tuple[str, int]], block_bytes: int | None = None) -> bytes:
@@ -452,28 +460,27 @@ def _render_bam(rows: list[dict], refs: list[tuple[str, int]], block_bytes: int 
         out += struct.pack("<i", len(nb)) + nb + struct.pack("<i", length)
     for r in rows:
         rid = ref_id.get(r.get("reference"), -1)
-        pos0 = int(r["start"]) - 1 if not _null(r.get("start")) else -1
+        start, mapq, flag = r.get("start"), r.get("mapping_quality"), r.get("flag")
+        pos0 = -1 if start is None else int(start) - 1
         nb = str(r["name"]).encode() + b"\x00"
         cigar = r.get("cigar")
         ops = (
             [(int(n), _CIGAR_OP_CODE[op]) for n, op in re.findall(r"(\d+)([MIDNSHP=X])", cigar)]
-            if not _null(cigar)
+            if cigar is not None
             else []
         )
-        seq = "" if _null(r.get("sequence")) else r["sequence"]
-        qual = None if _null(r.get("quality_score")) else r["quality_score"]
+        seq = r.get("sequence") or ""
+        qual = r.get("quality_score")
         mate_rid = ref_id.get(r.get("mate_reference"), -1)
         body = struct.pack(
             "<iiBBHHHiiii",
             rid,
             pos0,
             len(nb),
-            # _null, not `or 0`: pandas renders NULL ints as NaN, which is
-            # truthy and crashes int() (to_sam coalesces the same columns)
-            0 if _null(r.get("mapping_quality")) else int(r["mapping_quality"]),
+            0 if mapq is None else int(mapq),
             0,  # bin (only meaningful with an index; readers ignore it)
             len(ops),
-            0 if _null(r.get("flag")) else int(r["flag"]),
+            0 if flag is None else int(flag),
             len(seq),
             mate_rid,
             -1,
@@ -482,12 +489,8 @@ def _render_bam(rows: list[dict], refs: list[tuple[str, int]], block_bytes: int 
         body += nb
         for oplen, op in ops:
             body += struct.pack("<I", (oplen << 4) | op)
-        packed = bytearray((len(seq) + 1) // 2)
-        for i, ch in enumerate(seq):
-            code = _SEQ_CODE.get(ch, 15)
-            packed[i // 2] |= code << 4 if i % 2 == 0 else code
-        body += bytes(packed)
-        body += bytes(ord(c) - 33 for c in qual) if qual else b"\xff" * len(seq)
+        body += _pack_seq(seq)
+        body += _pack_qual(qual) if qual else b"\xff" * len(seq)
         out += struct.pack("<i", len(body)) + body
     if block_bytes is None:
         return bgzf_compress(bytes(out))
@@ -536,16 +539,16 @@ def _render_bcf(
     missing_qual = struct.pack("<I", 0x7F800001)  # BCF missing-float NaN
     for r in rows:
         alt = r.get("alt")
-        alleles = [r["ref"]] + ([] if _null(alt) else list(alt))
-        infos = [(idx, r[col]) for col, idx in info_idx.items() if not _null(r.get(col))]
+        alleles = [r["ref"]] + ([] if alt is None else list(alt))
+        infos = [(idx, r[col]) for col, idx in info_idx.items() if r.get(col) is not None]
         shared = bytearray()
         shared += struct.pack("<iii", contig_ids[r["chrom"]], int(r["pos"]) - 1, len(r["ref"]))
         q = r.get("qual")
-        shared += missing_qual if _null(q) else struct.pack("<f", float(q))
+        shared += missing_qual if q is None else struct.pack("<f", float(q))
         shared += struct.pack("<I", (len(alleles) << 16) | len(infos))
         shared += struct.pack("<I", 0)  # n_fmt=0, n_sample=0
         vid = r.get("id")
-        shared += b"\x07" if _null(vid) else _bcf_typed_str(str(vid))
+        shared += b"\x07" if vid is None else _bcf_typed_str(str(vid))
         for a in alleles:
             shared += _bcf_typed_str(a)
         shared += b"\x01"  # FILTER: empty int8 vector

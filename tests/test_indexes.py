@@ -26,7 +26,7 @@ from exon_duckdb_spark.sources.indexes import (
     reg2bins,
 )
 from exon_duckdb_spark.sources.splits import plan_splits
-from exon_duckdb_spark.sources.vcf import parse_region, read_vcf, vcf_query
+from exon_duckdb_spark.sources.vcf import parse_region, read_vcf, region_filter, vcf_query
 from exon_duckdb_spark.sources.writers import _render_bam, _render_bcf
 
 N = 300
@@ -314,3 +314,19 @@ def test_region_reads_every_disjoint_chunk_range(sql_spark, tmp_path, fmt):
     assert sorted(query(sql_spark, p, region).collect(), key=repr) == want
     tvf = sql_spark.sql(f"SELECT * FROM {fmt}_query('{p}', '{region}')").collect()
     assert sorted(tvf, key=repr) == want
+
+
+def test_region_filter_quotes_contig_and_keeps_overlap(spark):
+    """The overlap predicate is SQL text: a contig name holding a quote or a
+    backslash is a literal, and coordinates past 2**31 compare as BIGINT."""
+    rows = [("o'k\\1", 10, 20), ("o'k\\1", 21, 30), ("ok", 10, 20), ("o'k\\1", 2**32, 2**32 + 5)]
+    df = spark.createDataFrame(rows, "chrom string, first bigint, last bigint")
+
+    def hits(region):
+        return sorted(r[1] for r in df.where(region_filter("chrom", "first", "last", region)).collect())
+
+    assert hits("o'k\\1") == [10, 21, 2**32]
+    assert hits("o'k\\1:15-21") == [10, 21]
+    assert hits("o'k\\1:25") == [21, 2**32]
+    assert hits(f"o'k\\1:{2**32 + 5}-{2**32 + 9}") == [2**32]
+    assert hits("ok:21-40") == []

@@ -177,39 +177,73 @@ VCF_HEADER = (
     '##INFO=<ID=AF,Number=A,Type=Float,Description="d">\n'
     '##INFO=<ID=DB,Number=0,Type=Flag,Description="d">\n'
     '##INFO=<ID=NS,Number=1,Type=String,Description="d">\n'
+    '##INFO=<ID=AF.1,Number=A,Type=Float,Description="d">\n'
+    '##INFO=<ID=H.2,Number=0,Type=Flag,Description="d">\n'
+    '##INFO=<ID=MQ,Number=1,Type=Integer,Description="d">\n'
     "#CHROM\tPOS\tID\tREF\tALT\tQUAL\tFILTER\tINFO\tFORMAT\tS1\tS2\n"
 )
+NO_INFO = (None,) * 7
+NO_FLAGS = (None, None, False, None, None, False, None)
 
-# data line → (fixed columns, info (DP, AF, DB, NS), formats, genotypes)
+# data line(s) → (fixed columns, info (DP, AF, DB, NS, AF.1, H.2, MQ),
+# formats, genotypes); each text holds exactly one record
 VCF_CASES = {
     "genotypes": (
         "1\t100\trs1\tA\tT,G\t12.5\tPASS\tDP=7;AF=0.5,0.25;DB;NS=x\tGT:DP\t0/1:3\t1/1:.",
-        ("1", 100, "rs1", "A", ["T", "G"], 12.5, "PASS"), (7, [0.5, 0.25], True, "x"),
-        "GT:DP", ["0/1:3", "1/1:."],
+        ("1", 100, "rs1", "A", ["T", "G"], 12.5, "PASS"),
+        (7, [0.5, 0.25], True, "x", None, False, None), "GT:DP", ["0/1:3", "1/1:."],
     ),
-    "truncated": (
-        "1\t100", ("1", 100, None, None, None, None, None), (None, None, None, None), None, None,
-    ),
+    "truncated": ("1\t100", ("1", 100, None, None, None, None, None), NO_INFO, None, None),
     "no_info_column": (
-        "1\t100\t.\tA\t.\t.\t.", ("1", 100, None, "A", None, None, None),
-        (None, None, None, None), None, None,
+        "1\t100\t.\tA\t.\t.\t.", ("1", 100, None, "A", None, None, None), NO_INFO, None, None,
     ),
     "dot_info": (
-        "1\t100\t.\tA\t.\t.\t.\t.", ("1", 100, None, "A", None, None, None),
-        (None, None, False, None), None, None,
+        "1\t100\t.\tA\t.\t.\t.\t.", ("1", 100, None, "A", None, None, None), NO_FLAGS,
+        None, None,
     ),
     "malformed_values": (
         "1\tx\t.\tA\tT\tbad\t.\tDP=notanint;AF=0.5,x,.;NS=.",
-        ("1", None, None, "A", ["T"], None, None), (None, [0.5, None, None], False, None),
-        None, None,
+        ("1", None, None, "A", ["T"], None, None),
+        (None, [0.5, None, None], False, None, None, False, None), None, None,
+    ),
+    "malformed_integer": (
+        "1\t100\t.\tA\tT\t.\t.\tDP=1x;MQ=--3",
+        ("1", 100, None, "A", ["T"], None, None), NO_FLAGS, None, None,
     ),
     "repeated_key": (
         "1\t100\t.\tA\tT\t.\t.\tDP;DP=1;DP=2", ("1", 100, None, "A", ["T"], None, None),
-        (1, None, False, None), None, None,
+        (1, None, False, None, None, False, None), None, None,
     ),
     "int_overflow": (
         "1\t100\t.\tA\tT\t.\t.\tDP=99999999999;AF=1e3", ("1", 100, None, "A", ["T"], None, None),
-        (None, [1000.0], False, None), None, None,
+        (None, [1000.0], False, None, None, False, None), None, None,
+    ),
+    # '.' in an ID is a regex metacharacter: AFx1 and Hx2 must not match
+    # AF.1 and H.2
+    "regex_metachar_id_absent": (
+        "1\t100\t.\tA\tT\t.\t.\tAFx1=0.5;Hx2;DB", ("1", 100, None, "A", ["T"], None, None),
+        (None, None, True, None, None, False, None), None, None,
+    ),
+    "regex_metachar_id_present": (
+        "1\t100\t.\tA\tT\t.\t.\tAF.1=0.25;H.2", ("1", 100, None, "A", ["T"], None, None),
+        (None, None, False, None, [0.25], True, None), None, None,
+    ),
+    "dot_elements": (
+        "1\t100\t.\tA\tT,C,G\t.\t.\tAF=.,0.5,.;MQ=.;DP=12",
+        ("1", 100, None, "A", ["T", "C", "G"], None, None),
+        (12, [None, 0.5, None], False, None, None, False, None), None, None,
+    ),
+    "eight_columns": (
+        "1\t100\t.\tA\tT\t.\t.\tMQ=60", ("1", 100, None, "A", ["T"], None, None),
+        (None, None, False, None, None, False, 60), None, None,
+    ),
+    "format_no_samples": (
+        "1\t5\t.\tA\tT\t.\t.\tDP=4\tGT", ("1", 5, None, "A", ["T"], None, None),
+        (4, None, False, None, None, False, None), "GT", None,
+    ),
+    "blank_lines": (
+        "\n1\t100\t.\tA\tT\t.\t.\tDP=3\tGT\t0|1\n", ("1", 100, None, "A", ["T"], None, None),
+        (3, None, False, None, None, False, None), "GT", ["0|1"],
     ),
 }
 

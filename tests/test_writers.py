@@ -85,6 +85,41 @@ def test_bam_writer_roundtrip_split_invariant(spark, tmp_path):
         assert got == base
 
 
+def test_bam_writer_packs_odd_lowercase_and_null_fields(spark, tmp_path):
+    """to_bam → read_bam on odd-length, lowercase and N-rich reads with NULL
+    start, mapq, flag and quality: bases outside "=ACMGRSVTWYHKDBN" pack as
+    N, NULL flag/mapq as 0, NULL quality as 0xff (read back as NULL)."""
+    from pyspark.sql import types as T
+
+    from exon_duckdb_spark.sources.bam import read_bam
+    from exon_duckdb_spark.sources.schemas import SAM_SCHEMA
+    from exon_duckdb_spark.sources.writers import to_bam
+
+    cols = [f for f in SAM_SCHEMA.fields if f.name != "end"]
+    rows = [
+        ("odd", None, "chrA", None, None, None, None, "ACGTN", "!#I+5"),
+        ("lower", 16, "chrA", 10, "7", "7M", "chrA", "acgtRYk", None),
+        ("nrich", None, None, None, None, None, None, "NNNNNNNNN", "!!!!!!!!!"),
+        ("mixed", 0, "chrB", 3, "60", "4M", None, "N=nA", None),
+    ]
+    df = spark.createDataFrame(rows, T.StructType(cols))
+    out = str(tmp_path / "bam_out")
+    assert to_bam(df, out, [("chrA", 1000), ("chrB", 500)]) == 4
+    got = {r["name"]: r.asDict() for r in read_bam(spark, out).collect()}
+    assert {k: (v["sequence"], v["quality_score"]) for k, v in got.items()} == {
+        "odd": ("ACGTN", "!#I+5"),
+        "lower": ("NNNNRYN", None),
+        "nrich": ("NNNNNNNNN", "!!!!!!!!!"),
+        "mixed": ("N=NA", None),
+    }
+    assert {k: (v["flag"], v["mapping_quality"], v["start"]) for k, v in got.items()} == {
+        "odd": (0, "0", None),
+        "lower": (16, "7", 10),
+        "nrich": (0, "0", None),
+        "mixed": (0, "60", 3),
+    }
+
+
 def test_bcf_writer_roundtrip(spark, tmp_path):
     from pyspark.sql import functions as F
 
