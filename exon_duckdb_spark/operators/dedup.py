@@ -30,6 +30,7 @@ from exon_duckdb_spark.operators.hashing import (
     md5_int32,
     minhash_coeffs,
 )
+from exon_duckdb_spark.operators.quality import ngram_rows, word_ngrams
 from exon_duckdb_spark.operators.text import tokens
 
 __all__ = [
@@ -72,22 +73,6 @@ def exact_dedup_stats(df: DataFrame, text_col: str = "text", id_col: str = "doc_
     return exact_dedup(df, text_col, id_col).filter(F.col("dup_count") > 1)
 
 
-def _shingles_of(toks: Column, n: int) -> Column:
-    """Word n-gram shingles from a token-array COLUMN (not a raw expression).
-
-    The lambda references ``toks`` via element_at, which is outside the
-    transform's input array — if ``toks`` were an inline split() expression
-    Spark would re-evaluate it per element (O(len²) per row). Callers must
-    materialize the token array as its own projection column first.
-    """
-    if n == 1:
-        return toks
-    idx = F.sequence(F.lit(1), F.greatest(F.size(toks) - (n - 1), F.lit(0)))
-    return F.transform(
-        idx, lambda i: F.concat_ws(" ", *[F.element_at(toks, i + k) for k in range(n)])
-    )
-
-
 def minhash_signature(
     df: DataFrame,
     text_col: str = "text",
@@ -103,9 +88,10 @@ def minhash_signature(
     # Catalyst's CollapseProject keeps projections separate when a non-cheap
     # expression is referenced more than once, so the split runs once per
     # row and the md5 pass once per shingle, not k times (lambda expressions
-    # are excluded from subexpression elimination).
+    # are excluded from subexpression elimination). A doc with fewer than
+    # ``shingle`` tokens has no shingles, so its minhashes are NULL.
     toksed = df.select(F.col(id_col), tokens(text_col).alias("_toks"))
-    sh = _shingles_of(F.col("_toks"), shingle)
+    sh = word_ngrams(F.col("_toks"), shingle)
     base = toksed.select(
         F.col(id_col), F.transform(sh, lambda w: md5_int32(w)).alias("_h")
     )
@@ -267,12 +253,13 @@ def minhash_lsh_pairs(
     # in every binary64 engine (Spark, DuckDB, numpy), so neither the
     # value nor the threshold compare depends on a decimal rounding
     # convention (round-half-up vs half-even at the 6th decimal differs
-    # between engines).
+    # between engines). Two docs with no shingle (NULL or shorter than
+    # ``shingle``) share the all-NULL signature; their Jaccard is NULL.
     return (
         j.select(
             "id_a",
             "id_b",
-            (inter / union).alias("jaccard"),
+            F.when(union > 0, inter / union).alias("jaccard"),
         )
         .where(F.col("jaccard") >= threshold)
     )
@@ -891,6 +878,22 @@ def leakage_safe_split(
     )
 
 
+def _gram_hashes(
+    d: DataFrame, text_col: str, n: int, *keep: str, outer: bool = False
+) -> DataFrame:
+    """``(*keep, gram_hash)``: the 60-bit :func:`md5_int` of every word
+    ``n``-gram of ``text_col``, one row each — the gram hashing shared by
+    :func:`decontaminate`, :func:`contamination_report` and
+    ``sketches.bloom_decontaminate``. The token array is its own
+    projection, so each gram row reads it instead of re-splitting the
+    text. ``outer`` is :func:`ngram_rows`'s (a NULL hash for a doc with no
+    n-gram)."""
+    toksed = d.select(*keep, tokens(text_col).alias("_toks"))
+    return ngram_rows(toksed, "_toks", n, *keep, outer=outer).select(
+        *keep, md5_int("gram").alias("gram_hash")
+    )
+
+
 def decontaminate(
     df: DataFrame,
     benchmark: DataFrame,
@@ -904,42 +907,25 @@ def decontaminate(
     train-set hygiene pass before pre-training — GPT-3 §C / PaLM style
     13-gram overlap, default n=8).
 
-    Scale design: both sides reduce to DISTINCT 60-bit n-gram hashes before
-    any join, so the shuffle carries (hash) / (hash, id) — never text. The
-    benchmark side (eval suites: thousands of docs, not billions) is
-    broadcast by default, making the whole pass a map-side semi-join plus
-    one id-keyed anti-join; set ``broadcast_benchmark=False`` for a huge
-    benchmark side to fall back to a shuffled semi-join. A doc with fewer
-    than ``n`` tokens has no n-grams and is always kept.
+    Scale design: both sides reduce to 60-bit n-gram hashes before any
+    join (DISTINCT on the benchmark side), so the shuffle carries (hash) /
+    (hash, id) — never text. The benchmark side (eval suites: thousands
+    of docs, not billions) is broadcast by default, making the whole pass
+    a map-side semi-join plus one id-keyed anti-join; set
+    ``broadcast_benchmark=False`` for a huge benchmark side to fall back
+    to a shuffled semi-join. A doc with fewer than ``n`` tokens has no
+    n-grams and is always kept.
     """
-    from exon_duckdb_spark.operators.quality import word_ngrams
+    from exon_duckdb_spark.operators.relational import ensure_parallelism
 
-    def gram_hashes(d: DataFrame, with_id: bool) -> DataFrame:
-        # two-step select: materialize the token array FIRST — word_ngrams
-        # references its input once per gram position, so inlining
-        # tokens(text_col) would re-tokenize the document n_tokens times.
-        # The benchmark side selects only the text column (eval suites
-        # rarely carry a doc_id; ids ride the join only on the corpus side).
-        cols = [F.col(id_col)] if with_id else []
-        if with_id:
-            # corpus side: gram hashing is the heavy map stage — recover
-            # parallelism when the scan is under-split (no-op on real
-            # multi-split corpora; the benchmark side is small by contract)
-            from exon_duckdb_spark.operators.relational import ensure_parallelism
-
-            d = ensure_parallelism(d, id_col)
-        toksed = d.select(*cols, tokens(text_col).alias("_toks"))
-        grams = F.array_distinct(word_ngrams(F.col("_toks"), n))
-        exploded = toksed.select(
-            *cols, F.explode(F.transform(grams, md5_int)).alias("gram_hash")
-        )
-        return exploded if with_id else exploded.distinct()
-
-    bench_hashes = gram_hashes(benchmark, with_id=False)
+    bench_hashes = _gram_hashes(benchmark, text_col, n).distinct()
     if broadcast_benchmark:
         bench_hashes = F.broadcast(bench_hashes)
+    # corpus side: gram hashing is the heavy map stage — recover
+    # parallelism when the scan is under-split (no-op on real multi-split
+    # corpora; the benchmark side is small by contract)
     contaminated = (
-        gram_hashes(df, with_id=True)
+        _gram_hashes(ensure_parallelism(df, id_col), text_col, n, id_col)
         .join(bench_hashes, on="gram_hash", how="left_semi")
         .select(id_col)
         .distinct()
@@ -966,51 +952,39 @@ def contamination_report(
     Same scale shape as :func:`decontaminate`: both sides reduce to
     distinct 60-bit n-gram hashes (corpus side distinct WITHIN each doc),
     the benchmark side broadcasts, and the join carries (hash, id) only —
-    never text. Counts are over the hash space, so an md5 collision merges
-    grams identically in the SQL oracle (which applies the same hash).
-    Docs with fewer than ``n`` tokens report (0, 0, 0.0).
+    never text. Counts are over the hash space. One row per id; docs with
+    fewer than ``n`` tokens report (0, 0, 0.0).
     """
-    from exon_duckdb_spark.operators.quality import word_ngrams
     from exon_duckdb_spark.operators.relational import ensure_parallelism
 
-    d = ensure_parallelism(df, id_col)
-    toksed = d.select(F.col(id_col), tokens(text_col).alias("_toks"))
-    grams = F.array_distinct(word_ngrams(F.col("_toks"), n))
-    corpus_grams = toksed.select(
-        F.col(id_col), F.explode(F.transform(grams, md5_int)).alias("gram_hash")
-    )
-    btoks = benchmark.select(tokens(text_col).alias("_toks"))
-    bgrams = F.array_distinct(word_ngrams(F.col("_toks"), n))
     bench_hashes = (
-        btoks.select(F.explode(F.transform(bgrams, md5_int)).alias("gram_hash"))
-        .distinct()
-        .withColumn("_hit", F.lit(1))
+        _gram_hashes(benchmark, text_col, n).distinct().withColumn("_hit", F.lit(1))
     )
     if broadcast_benchmark:
         bench_hashes = F.broadcast(bench_hashes)
-    per_doc = (
-        corpus_grams.join(bench_hashes, "gram_hash", "left")
+    # outer: a doc with no n-gram keeps one NULL-hash row, so every doc
+    # reaches the id aggregate without a join back to the corpus. When
+    # ensure_parallelism hash-partitions the docs by id, the per-doc
+    # (id, hash) dedup and the id aggregate need no exchange of their own.
+    corpus_grams = _gram_hashes(
+        ensure_parallelism(df, id_col), text_col, n, id_col, outer=True
+    )
+    n_grams, n_hit = F.col("n_grams"), F.col("n_contaminated")
+    return (
+        corpus_grams.distinct()
+        .join(bench_hashes, "gram_hash", "left")
         .groupBy(id_col)
         .agg(
-            F.count(F.lit(1)).alias("n_grams"),
-            F.sum(F.coalesce(F.col("_hit"), F.lit(0))).alias("n_contaminated"),
+            F.count("gram_hash").alias("n_grams"),
+            F.count("_hit").alias("n_contaminated"),
         )
-    )
-    return (
-        df.select(F.col(id_col))
-        .join(per_doc, id_col, "left")
         .select(
             F.col(id_col),
-            F.coalesce("n_grams", F.lit(0)).cast("bigint").alias("n_grams"),
-            F.coalesce("n_contaminated", F.lit(0))
-            .cast("bigint")
-            .alias("n_contaminated"),
-            F.round(
-                F.coalesce(
-                    F.col("n_contaminated") / F.col("n_grams"), F.lit(0.0)
-                ),
-                6,
-            ).alias("contamination"),
+            n_grams,
+            n_hit,
+            F.round(F.when(n_grams > 0, n_hit / n_grams).otherwise(0.0), 6).alias(
+                "contamination"
+            ),
         )
     )
 
@@ -1281,9 +1255,10 @@ def _shingle_minhash_udf(shingle: int, num_hashes: int, with_ws: bool = True):
     """Arrow UDF: text → (distinct word-shingle set, minhash vector).
 
     Mirrors tokens() (split on single space, empties kept) and
-    _shingles_of exactly; hashes replicate md5_int32 (first 4 md5 bytes)
-    through a per-batch digest cache, then one bulk ``frombuffer`` +
-    ``np.minimum.reduceat`` pass computes every row's k affine minima
+    word_ngrams exactly (a NULL text has no shingles); hashes replicate
+    md5_int32 (first 4 md5 bytes) through a per-batch digest cache, then
+    one bulk ``frombuffer`` + ``np.minimum.reduceat`` pass computes every
+    row's k affine minima
     (:func:`_minhash_minima_bulk` — measured 1.4× the per-row-matrix
     kernel at sf0.1, bit-identical output). Empty shingle sets yield NULL
     minhashes (= array_min over []).
@@ -1325,7 +1300,7 @@ def _shingle_minhash_udf(shingle: int, num_hashes: int, with_ws: bool = True):
         out_w, lens = [], []
         dig = bytearray()
         for x in s:
-            toks = x.split(" ")
+            toks = [] if x is None else x.split(" ")
             if shingle == 1:
                 sh = toks
             else:

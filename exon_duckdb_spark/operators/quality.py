@@ -58,6 +58,32 @@ def word_ngrams(toks: Column, n: int) -> Column:
     )
 
 
+def ngram_rows(
+    df: DataFrame, toks_col: str, n: int, *keep: str, outer: bool = False
+) -> DataFrame:
+    """The row form of :func:`word_ngrams`: ``(*keep, gram)``, one row per
+    word n-gram of the token-array column ``toks_col``, in the same order.
+
+    ``explode(sequence(...))`` plus ``concat_ws``/``element_at`` on each
+    row has no lambda, so the stage runs in whole-stage codegen; the
+    short-doc guard sits inside the generator, so it holds wherever
+    Catalyst places a filter. ``outer=True`` keeps a doc with no n-gram
+    as one row with a NULL gram.
+    """
+    toks = F.col(toks_col)
+    explode = F.explode_outer if outer else F.explode
+    if n == 1:
+        return df.select(*keep, explode(toks).alias("gram"))
+    idx = F.when(F.size(toks) >= n, F.sequence(F.lit(1), F.size(toks) - (n - 1)))
+    i = F.col("_i")
+    gram = F.concat_ws(" ", *[F.element_at(toks, i + k) for k in range(n)])
+    if outer:
+        gram = F.when(i.isNotNull(), gram)
+    return df.select(*keep, toks, explode(idx).alias("_i")).select(
+        *keep, gram.alias("gram")
+    )
+
+
 def repetition_stats(
     df: DataFrame, text_col: str = "text", id_col: str = "doc_id"
 ) -> DataFrame:
@@ -545,15 +571,12 @@ def _bigram_tf_tables(df: DataFrame, text_col: str, id_col: str):
     from pyspark import StorageLevel
 
     from exon_duckdb_spark.operators.relational import ensure_parallelism
-    from exon_duckdb_spark.operators.text import tokens as _tokens
 
     df = ensure_parallelism(df, id_col)
-    toksed = df.select(F.col(id_col), _tokens(text_col).alias("_toks"))
+    toksed = df.select(F.col(id_col), tokens(text_col).alias("_toks"))
     tf2 = (
-        toksed.select(
-            F.col(id_col), F.explode(word_ngrams(F.col("_toks"), 2)).alias("_bg")
-        )
-        .groupBy(id_col, "_bg")
+        ngram_rows(toksed, "_toks", 2, id_col)
+        .groupBy(id_col, F.col("gram").alias("_bg"))
         .agg(F.count("*").alias("_tf"))
         .persist(StorageLevel.MEMORY_AND_DISK)
     )

@@ -629,110 +629,6 @@ def _fold_dot_udf():
     return pair_dot
 
 
-def _hybrid_base(
-    corpus: DataFrame, text_col: str, vec_col: str, id_col: str
-) -> DataFrame:
-    """:func:`hybrid_topk` stage 1 — the one corpus projection both
-    branches consume: (id, tokens, vec, norm)."""
-    from exon_duckdb_spark.operators.text import tokens
-
-    return corpus.select(
-        F.col(id_col),
-        tokens(text_col).alias("_toks"),
-        F.col(vec_col).alias("nvec"),
-        _norm(F.col(vec_col)).alias("nn"),
-    )
-
-
-def _hybrid_lex(
-    base: DataFrame, queries: DataFrame, fetch: int, id_col: str,
-    k1: float, b: float,
-) -> DataFrame:
-    """:func:`hybrid_topk` lexical branch: BM25 top-``fetch`` per query
-    off the pre-tokenized base projection → (query_id, id, lex_rank)."""
-    return bm25_topk_multi(
-        base,
-        queries.select("query_id", "terms"),
-        k=fetch,
-        text_col="_toks",
-        id_col=id_col,
-        k1=k1,
-        b=b,
-    ).select("query_id", F.col(id_col), F.col("rank").alias("lex_rank"))
-
-
-def _hybrid_dense(
-    base: DataFrame, queries: DataFrame, fetch: int, id_col: str
-) -> DataFrame:
-    """:func:`hybrid_topk` dense branch: broadcast exact cosine with the
-    map-side :func:`partition_topk` reducer → (query_id, id, dense_rank).
-
-    SQL-consolidated like :func:`bm25_topk_multi` (r14) — identical
-    expression tree, one driver round-trip per call instead of hundreds;
-    the zip_with/aggregate fold is the same left-to-right double fold as
-    :func:`dot`/:func:`_norm` (bit-parity proven exact-equal on sf0.1)."""
-    spark = base.sparkSession
-    qid = _bt(id_col)
-    args = {"zero": 0.0, "fetch": fetch}
-    scored = spark.sql(
-        f"""
-        SELECT /*+ BROADCAST(q) */ query_id, {qid},
-          round(aggregate(zip_with(query_vec, nvec,
-                  (x, y) -> CAST(x AS DOUBLE) * CAST(y AS DOUBLE)),
-                :zero, (acc, v) -> acc + v) / (qn * nn), 6) AS cosine_sim
-        FROM (SELECT {qid}, nvec, nn FROM {{base}})
-        CROSS JOIN (
-          SELECT query_id, query_vec,
-            sqrt(aggregate(query_vec, :zero,
-                 (acc, v) -> acc + CAST(v AS DOUBLE) * CAST(v AS DOUBLE))) AS qn
-          FROM {{queries}}
-        ) AS q
-        """,
-        args, base=base, queries=queries,
-    )
-    scored = partition_topk(
-        scored, fetch, "query_id", "cosine_sim", id_col, ascending=False
-    )
-    return spark.sql(
-        f"""
-        SELECT query_id, {qid}, dense_rank FROM (
-          SELECT query_id, {qid}, row_number() OVER (
-            PARTITION BY query_id ORDER BY cosine_sim DESC, {qid} ASC) AS dense_rank
-          FROM {{scored}}
-        ) WHERE dense_rank <= :fetch
-        """,
-        args, scored=scored,
-    )
-
-
-def _hybrid_fuse(
-    lex: DataFrame, dense: DataFrame, k: int, rrf_k: int, id_col: str
-) -> DataFrame:
-    """:func:`hybrid_topk` fusion: RRF over the union of the two branch
-    shortlists (both ≤ fetch rows per query — bounded at any corpus
-    scale), final top-``k`` per query. SQL-consolidated (r14), same
-    expression tree as the former Column form."""
-    spark = lex.sparkSession
-    qid = _bt(id_col)
-    args = {"one": 1.0, "zero": 0.0, "rrfk": rrf_k, "k": k}
-    return spark.sql(
-        f"""
-        SELECT query_id, {qid}, rrf, lex_rank, dense_rank, rank FROM (
-          SELECT *, row_number() OVER (
-            PARTITION BY query_id ORDER BY rrf DESC, {qid} ASC) AS rank
-          FROM (
-            SELECT query_id, {qid},
-              round(coalesce(:one / (:rrfk + lex_rank), :zero)
-                  + coalesce(:one / (:rrfk + dense_rank), :zero), 6) AS rrf,
-              lex_rank, dense_rank
-            FROM {{lex}} FULL OUTER JOIN {{dense}} USING (query_id, {qid})
-          )
-        ) WHERE rank <= :k
-        """,
-        args, lex=lex, dense=dense,
-    )
-
-
 def hybrid_topk(
     corpus: DataFrame,
     queries: DataFrame,
@@ -793,15 +689,83 @@ def hybrid_topk(
 
     Returns (query_id, ``id_col``, rrf, lex_rank, dense_rank, rank ≤ k).
     """
+    from exon_duckdb_spark.operators.text import tokens
+
     fetch = fetch_k or 4 * k
-    base = _hybrid_base(corpus, text_col, vec_col, id_col)
+    # the one corpus projection both branches consume
+    base = corpus.select(
+        F.col(id_col),
+        tokens(text_col).alias("_toks"),
+        F.col(vec_col).alias("nvec"),
+        _norm(F.col(vec_col)).alias("nn"),
+    )
     if cache_corpus:
         from pyspark import StorageLevel
 
         base = base.persist(StorageLevel.MEMORY_AND_DISK)
-    lex = _hybrid_lex(base, queries, fetch, id_col, k1, b)
-    dense = _hybrid_dense(base, queries, fetch, id_col)
-    out = _hybrid_fuse(lex, dense, k, rrf_k, id_col)
+    # lexical branch: BM25 top-``fetch`` per query off the pre-tokenized base
+    lex = bm25_topk_multi(
+        base,
+        queries.select("query_id", "terms"),
+        k=fetch,
+        text_col="_toks",
+        id_col=id_col,
+        k1=k1,
+        b=b,
+    ).select("query_id", F.col(id_col), F.col("rank").alias("lex_rank"))
+    # dense branch: broadcast exact cosine with the map-side partition_topk
+    # reducer. SQL text like bm25_topk_multi: one driver round trip per
+    # call; the zip_with/aggregate fold is the same left-to-right double
+    # fold as dot/_norm
+    spark = base.sparkSession
+    qid = _bt(id_col)
+    scored = spark.sql(
+        f"""
+        SELECT /*+ BROADCAST(q) */ query_id, {qid},
+          round(aggregate(zip_with(query_vec, nvec,
+                  (x, y) -> CAST(x AS DOUBLE) * CAST(y AS DOUBLE)),
+                :zero, (acc, v) -> acc + v) / (qn * nn), 6) AS cosine_sim
+        FROM (SELECT {qid}, nvec, nn FROM {{base}})
+        CROSS JOIN (
+          SELECT query_id, query_vec,
+            sqrt(aggregate(query_vec, :zero,
+                 (acc, v) -> acc + CAST(v AS DOUBLE) * CAST(v AS DOUBLE))) AS qn
+          FROM {{queries}}
+        ) AS q
+        """,
+        {"zero": 0.0}, base=base, queries=queries,
+    )
+    scored = partition_topk(
+        scored, fetch, "query_id", "cosine_sim", id_col, ascending=False
+    )
+    dense = spark.sql(
+        f"""
+        SELECT query_id, {qid}, dense_rank FROM (
+          SELECT query_id, {qid}, row_number() OVER (
+            PARTITION BY query_id ORDER BY cosine_sim DESC, {qid} ASC) AS dense_rank
+          FROM {{scored}}
+        ) WHERE dense_rank <= :fetch
+        """,
+        {"fetch": fetch}, scored=scored,
+    )
+    # fusion: RRF over the union of the two shortlists (both ≤ fetch rows
+    # per query), final top-``k`` per query
+    out = spark.sql(
+        f"""
+        SELECT query_id, {qid}, rrf, lex_rank, dense_rank, rank FROM (
+          SELECT *, row_number() OVER (
+            PARTITION BY query_id ORDER BY rrf DESC, {qid} ASC) AS rank
+          FROM (
+            SELECT query_id, {qid},
+              round(coalesce(:one / (:rrfk + lex_rank), :zero)
+                  + coalesce(:one / (:rrfk + dense_rank), :zero), 6) AS rrf,
+              lex_rank, dense_rank
+            FROM {{lex}} FULL OUTER JOIN {{dense}} USING (query_id, {qid})
+          )
+        ) WHERE rank <= :k
+        """,
+        {"one": 1.0, "zero": 0.0, "rrfk": rrf_k, "k": k}, lex=lex, dense=dense,
+    )
     if cache_corpus:
         # the result is <= k rows per query — eagerly materialize it so the
         # projection cache can be dropped NOW instead of leaking for the

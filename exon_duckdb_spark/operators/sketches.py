@@ -646,26 +646,17 @@ def bloom_decontaminate(
     the m-bit filter instead of every benchmark gram. Both sides reduce
     to the SAME 60-bit gram hashes the exact operator joins on — text
     never rides a shuffle here either."""
-    from exon_duckdb_spark.operators.quality import tokens, word_ngrams
+    from exon_duckdb_spark.operators.dedup import _gram_hashes
 
-    def gram_hashes(d: DataFrame, with_id: bool) -> DataFrame:
-        cols = [F.col(id_col)] if with_id else []
-        toksed = d.select(*cols, tokens(text_col).alias("_toks"))
-        grams = F.array_distinct(word_ngrams(F.col("_toks"), n))
-        out = toksed.select(
-            *cols, F.explode(F.transform(grams, md5_int)).alias("g")
-        )
-        return out if with_id else out.distinct()
-
-    cg = gram_hashes(corpus, with_id=True)
-    bg = gram_hashes(benchmark, with_id=False)
-    words = bloom_words(bg, "g", m, k)
-    hits = bloom_might_contain(cg.select("g").distinct(), words, "g", m, k).where(
-        F.col("might")
-    )
+    cg = _gram_hashes(corpus, text_col, n, id_col)
+    bg = _gram_hashes(benchmark, text_col, n).distinct()
+    words = bloom_words(bg, "gram_hash", m, k)
+    hits = bloom_might_contain(
+        cg.select("gram_hash").distinct(), words, "gram_hash", m, k
+    ).where(F.col("might"))
     # exact verify ONLY on bloom-positive grams (false positives die here)
-    confirmed = hits.join(bg, "g", "left_semi")
-    bad = cg.join(confirmed, "g", "left_semi").select(id_col).distinct()
+    confirmed = hits.join(bg, "gram_hash", "left_semi")
+    bad = cg.join(confirmed, "gram_hash", "left_semi").select(id_col).distinct()
     return corpus.join(bad, id_col, "left_anti")
 
 

@@ -380,12 +380,12 @@ def top_ngrams(
     reach the merge. Ties break on the gram string so results are
     deterministic across partitionings.
     """
-    from exon_duckdb_spark.operators.quality import word_ngrams
+    from exon_duckdb_spark.operators.quality import ngram_rows
 
     toksed = df.select(tokens(text_col).alias("_toks"))
-    grams = toksed.select(F.explode(word_ngrams(F.col("_toks"), n)).alias("gram"))
     return (
-        grams.groupBy("gram")
+        ngram_rows(toksed, "_toks", n)
+        .groupBy("gram")
         .agg(F.count("*").alias("cnt"))
         .orderBy(F.col("cnt").desc(), F.col("gram").asc())
         .limit(k)
@@ -807,11 +807,34 @@ def cdc_chunks_sql(
     """
 
 
-def _tfidf_tf(
-    df: DataFrame, text_col: str = "text", id_col: str = "doc_id"
+def tfidf_top_terms(
+    df: DataFrame,
+    k: int = 3,
+    text_col: str = "text",
+    id_col: str = "doc_id",
 ) -> DataFrame:
-    """:func:`tfidf_top_terms` stage 1: the map-side (doc, term, tf)
-    frame; query results flow only through :func:`tfidf_top_terms`."""
+    """Top-``k`` TF-IDF terms per document — keyword extraction for corpus
+    exploration, topic tagging, and retrieval indexing.
+
+    tfidf = tf · ln(N / df_docs), rounded to 6 dp BEFORE ranking (ties
+    break on the term string) so any engine reproduces the ranking.
+
+    Scale design: term frequencies are computed MAP-SIDE per document —
+    sort the token array, run-length encode it with higher-order
+    functions, explode (term, tf) entries — so the corpus-width
+    (doc, term) pre-aggregation shuffle a naive explode+groupBy pays is
+    gone entirely (a doc's tokens live in one row; no cross-partition
+    merge is ever needed). The explode+groupBy form ran 4.3× slower at
+    10× data: its map-side combine already collapsed duplicates, but still
+    shipped every (doc, term, tf) row through an exchange just to merge
+    nothing. Document frequencies remain a vocab-sized aggregate joined
+    back ON THE TERM KEY (vocab ≪ corpus, but too big to broadcast at
+    100 TB — Catalyst/AQE picks broadcast when it fits); the corpus-size
+    scalar N rides along as a broadcast crossJoin; the one remaining
+    corpus-width shuffle is the per-doc top-k window.
+    """
+    from pyspark.sql import Window
+
     # each stage lands in its own projection so the lambdas below bind to
     # ATTRIBUTES (_ts/_st), not to inlined expression trees — a lambda
     # that captures an outer non-attribute expression re-evaluates it per
@@ -838,20 +861,12 @@ def _tfidf_tf(
             .alias("tf"),
         ),
     )
-    return d.select(F.col(id_col), F.explode(entries).alias("_e")).select(
+    tf = d.select(F.col(id_col), F.explode(entries).alias("_e")).select(
         F.col(id_col), F.col("_e.term").alias("term"), F.col("_e.tf").alias("tf")
     )
-
-
-def _tfidf_scored(
-    df: DataFrame, text_col: str = "text", id_col: str = "doc_id"
-) -> DataFrame:
-    """:func:`tfidf_top_terms` stages 1+2: tf frame joined with document
-    frequencies and the corpus-size scalar, scored, PRE-window."""
-    tf = _tfidf_tf(df, text_col=text_col, id_col=id_col)
     dfreq = tf.groupBy("term").agg(F.count("*").cast("bigint").alias("_df"))
     n_docs = df.agg(F.count("*").cast("bigint").alias("_n"))
-    return (
+    scored = (
         tf.join(dfreq, "term")
         .crossJoin(F.broadcast(n_docs))
         .select(
@@ -861,38 +876,6 @@ def _tfidf_scored(
             F.round(F.col("tf") * F.log(F.col("_n") / F.col("_df")), 6).alias("tfidf"),
         )
     )
-
-
-def tfidf_top_terms(
-    df: DataFrame,
-    k: int = 3,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-) -> DataFrame:
-    """Top-``k`` TF-IDF terms per document — keyword extraction for corpus
-    exploration, topic tagging, and retrieval indexing.
-
-    tfidf = tf · ln(N / df_docs), rounded to 6 dp BEFORE ranking (ties
-    break on the term string) so any engine reproduces the ranking.
-
-    Scale design: term frequencies are computed MAP-SIDE per document —
-    sort the token array, run-length encode it with higher-order
-    functions, explode (term, tf) entries — so the corpus-width
-    (doc, term) pre-aggregation shuffle a naive explode+groupBy pays is
-    gone entirely (a doc's tokens live in one row; no cross-partition
-    merge is ever needed). The explode+groupBy form ran 4.3× slower at
-    10× data: its map-side combine already collapsed duplicates, but still
-    shipped every (doc, term, tf) row through an exchange just to merge
-    nothing. Document frequencies remain a vocab-sized aggregate joined
-    back ON THE TERM KEY (vocab ≪ corpus, but too big to broadcast at
-    100 TB — Catalyst/AQE picks broadcast when it fits); the corpus-size
-    scalar N rides along as a broadcast crossJoin; the one remaining
-    corpus-width shuffle is the per-doc top-k window. The stages are
-    :func:`_tfidf_tf` and :func:`_tfidf_scored`.
-    """
-    scored = _tfidf_scored(df, text_col=text_col, id_col=id_col)
-    from pyspark.sql import Window
-
     w = Window.partitionBy(id_col).orderBy(
         F.col("tfidf").desc(), F.col("term").asc()
     )

@@ -385,9 +385,16 @@ def stream_minhash_pairs(
     """
     from exon_duckdb_spark.operators.dedup import minhash_signature
     from exon_duckdb_spark.operators.hashing import md5_int
+    from exon_duckdb_spark.operators.text import tokens
 
+    # a doc with no shingle (NULL, or fewer than ``shingle`` tokens) has
+    # NULL minhashes: it can pair with nothing, so it takes no bucket
+    # place. The filter tests the token count, not a minhash: Catalyst
+    # would push a minhash predicate below the signature projection and
+    # hash every shingle twice.
     sig = minhash_signature(
-        docs, text_col=text_col, id_col=id_col, num_hashes=num_hashes,
+        docs.where(F.size(tokens(text_col)) >= shingle),
+        text_col=text_col, id_col=id_col, num_hashes=num_hashes,
         shingle=shingle,
     )
     rows_per_band = num_hashes // bands

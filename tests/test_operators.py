@@ -51,6 +51,57 @@ def test_minhash_lsh_pairs(docs):
     assert not any(4 in p for p in pairs)
 
 
+@pytest.mark.parametrize("shingle", [1, 3])
+def test_minhash_signature_matches_keyed(spark, shingle):
+    """The expression form (minhash_signature) and the fused Arrow form
+    (minhash_keyed) give the same minhashes on every doc — including docs
+    with no shingle (shorter than the shingle, or NULL), whose minhashes
+    are NULL."""
+    rows = [
+        (1, "a b"),
+        (2, ""),
+        (3, "a  b c"),
+        (4, None),
+        (5, "the quick brown fox jumps"),
+        (6, "the quick brown fox"),
+    ]
+    df = spark.createDataFrame(rows, "doc_id long, text string")
+    sig = {
+        r["doc_id"]: [r[f"mh_{i}"] for i in range(4)]
+        for r in ops.minhash_signature(df, num_hashes=4, shingle=shingle).collect()
+    }
+    keyed = {
+        r["doc_id"]: list(r["_mh"])
+        for r in ops.minhash_keyed(df, num_hashes=4, shingle=shingle).collect()
+    }
+    assert sig == keyed
+    assert sig[4] == [None] * 4
+    assert (sig[1] == [None] * 4) == (shingle == 3)
+    assert None not in sig[5]
+
+
+def test_null_text_passes_minhash_keyed_and_lsh_pairs(docs, spark):
+    """A NULL text is an empty shingle set: empty wordset, NULL minhashes,
+    and no pair — also with a second NULL doc in the same band bucket."""
+    nulls = spark.createDataFrame([(5, None), (6, None)], "doc_id long, text string")
+    df = docs.unionByName(nulls)
+    keyed = {r["doc_id"]: r for r in ops.minhash_keyed(df, num_hashes=4).collect()}
+    assert keyed[5]["wordset"] == [] and list(keyed[5]["_mh"]) == [None] * 4
+
+    def pairs(d, shingle):
+        return sorted(
+            tuple(r)
+            for r in ops.minhash_lsh_pairs(
+                d, num_hashes=4, bands=2, threshold=0.5, shingle=shingle
+            ).collect()
+        )
+
+    assert pairs(df, 1) == pairs(docs, 1)
+    # docs shorter than the shingle share the all-NULL signature too
+    short = spark.createDataFrame([(7, "a b"), (8, "c")], "doc_id long, text string")
+    assert pairs(df.unionByName(short), 3) == pairs(docs, 3)
+
+
 def test_simhash_pairs(docs, spark):
     """Hamming-block near-dup pairs: identical docs pair at distance 0,
     near-dups within the threshold pair exactly once (first matching

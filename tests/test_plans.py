@@ -176,6 +176,49 @@ def test_decontaminate_broadcasts_benchmark(spark):
     assert s["CartesianProduct"] == 0
 
 
+def test_ngram_consumers_run_without_lambdas(spark):
+    """The five consumers that explode word n-grams build them with
+    quality.ngram_rows (explode(sequence) plus concat_ws/element_at per
+    row), so their executed plans hold no interpreted lambda and the gram
+    stage runs in whole-stage codegen."""
+    from exon_duckdb_spark import operators as ops
+    from exon_duckdb_spark.operators.quality import _bigram_tf_tables
+    from exon_duckdb_spark.operators.sketches import bloom_decontaminate
+
+    docs = spark.read.parquet(f"{SF}/documents.parquet")
+    bench = docs.where(F.col("doc_id") % 97 == 3)
+    tf2, _, ctx = _bigram_tf_tables(docs, "text", "doc_id")
+    try:
+        frames = {
+            "decontaminate": ops.decontaminate(docs, bench, n=8),
+            "contamination_report": ops.contamination_report(docs, bench, n=8),
+            "bloom_decontaminate": bloom_decontaminate(docs, bench, n=8),
+            "top_ngrams": ops.top_ngrams(docs, n=2, k=10),
+            "_bigram_tf_tables": tf2,
+        }
+        for name, df in frames.items():
+            plan = df._jdf.queryExecution().executedPlan().toString()
+            assert "Generate explode" in plan, name  # premise: grams are in it
+            assert "lambdafunction" not in plan, name
+    finally:
+        tf2.unpersist()
+        ctx.unpersist()
+
+
+def test_contamination_report_shares_the_id_exchange(spark):
+    """The per-doc (id, gram hash) dedup and the id aggregate reuse the id
+    partitioning, and no join back to the corpus is needed: the plan holds
+    the under-split scan's id shuffle, the benchmark's distinct shuffle
+    and its broadcast — three exchanges."""
+    from exon_duckdb_spark import operators as ops
+
+    docs = spark.read.parquet(f"{SF}/documents.parquet")
+    bench = docs.where(F.col("doc_id") % 97 == 3)
+    rep = ops.contamination_report(docs, bench, n=8)
+    plan = rep._jdf.queryExecution().executedPlan().toString()
+    assert plan.count("Exchange ") <= 3, plan
+
+
 def test_bm25_corpus_side_never_shuffles(spark):
     """BM25 must be: scan -> map-only scoring joined with a broadcast
     single-row stats aggregate -> TakeOrderedAndProject. The only Exchange

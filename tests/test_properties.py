@@ -266,10 +266,12 @@ def test_exact_dedup_partition_invariance(spark, texts):
 )
 @settings(**_SETTINGS)
 def test_word_ngrams_matches_reference(spark, toks, n):
-    """word_ngrams must equal the obvious Python sliding window — including
-    the short-doc case where Spark's descending sequence() would otherwise
-    fabricate grams."""
+    """word_ngrams and its row form ngram_rows must equal the obvious
+    Python sliding window — including the short-doc case where Spark's
+    descending sequence() would otherwise fabricate grams."""
     from pyspark.sql import functions as F
+
+    from exon_duckdb_spark.operators.quality import ngram_rows
 
     df = spark.createDataFrame([(1, " ".join(toks))], ["doc_id", "text"])
     toks_col = F.split("text", " ")
@@ -280,6 +282,9 @@ def test_word_ngrams_matches_reference(spark, toks, n):
         " ".join(ref_toks[i : i + n]) for i in range(len(ref_toks) - n + 1)
     ]
     assert got == expected
+    # the row form yields the same grams in the same order
+    rows = ngram_rows(df.select(toks_col.alias("_t")), "_t", n).collect()
+    assert [r["gram"] for r in rows] == expected
 
 
 @given(

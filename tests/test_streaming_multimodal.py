@@ -754,6 +754,46 @@ class TestStreamMinhashPairs:
         assert all(r["est_jaccard"] == 1.0 for r in cross)
 
 
+    def test_stream_passes_doc_shorter_than_shingle(self, spark, tmp_path):
+        """A micro-batch holding a 2-token doc (shorter than shingle=3)
+        still runs: the short doc has NULL minhashes and pairs with
+        nothing, while the exact dup arriving beside it pairs as usual."""
+        import glob
+        import shutil
+
+        from exon_duckdb_spark.streaming.events import (
+            read_documents_stream,
+            stream_minhash_pairs,
+        )
+
+        src = tmp_path / "docs"
+        src.mkdir()
+        docs = spark.read.parquet(SF_DIR + "/documents.parquet").limit(40)
+        one = docs.where(F.col("doc_id") == 0)
+        short = one.withColumn("doc_id", F.col("doc_id") + 2_000_000).withColumn(
+            "text", F.lit("two tokens")
+        )
+        second = one.withColumn("doc_id", F.col("doc_id") + 1_000_000).unionByName(short)
+        for name, part in (("a", docs), ("b", second)):
+            part.coalesce(1).write.mode("overwrite").parquet(str(tmp_path / name))
+            shutil.copy(
+                glob.glob(str(tmp_path / name / "part-*.parquet"))[0],
+                src / f"documents_{name}.parquet",
+            )
+        stream = read_documents_stream(spark, str(src), max_files=1)
+        out = run_to_memory_sink(
+            stream_minhash_pairs(stream, num_hashes=16, bands=4, shingle=3),
+            "smp_short",
+        )
+        assert out.where(
+            (F.col("id_a") == 2_000_000) | (F.col("id_b") == 2_000_000)
+        ).count() == 0
+        cross = out.where(
+            (F.col("id_a") == 0) & (F.col("id_b") == 1_000_000)
+        ).collect()
+        assert len(cross) == 4 and all(r["est_jaccard"] == 1.0 for r in cross)
+
+
 class TestMp4SampleTable:
     """ISO-BMFF sample-table layer (round 8): real per-frame byte
     ranges, decode timestamps and keyframe flags from stbl — the ranged-
